@@ -549,6 +549,10 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     par = lnorm.sparkSession.sparkContext.defaultParallelism
     right_key_numeric = dict(rnorm.dtypes).get(right_key) in _NUMERIC_TYPES
     agg_top1 = top_k == 1 and right_key_numeric
+    # the native DuckDB lev rung runs in the exact-rescue regime; the
+    # size gate's probe collects the dimension for it only when it will
+    # run — one predicate for both, so the probe and the rung agree
+    native_rung = agg_top1 and not use_difflib and _duckdb_available()
     if broadcast_right:
         # the probe side usually arrives as a handful of file-splits;
         # spread it across the cluster so the nested-loop join
@@ -581,8 +585,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
             # probe also materializes the persist, exactly as the
             # count did.
             rights_pdf = None
-            if (agg_top1 and not use_difflib and _duckdb_available()
-                    and exact_rescue_limit):
+            if native_rung and exact_rescue_limit:
                 probe = (rnorm.select(right_key, "_rnorm")
                          .limit(exact_rescue_limit + 1).toPandas())
                 if len(probe) <= exact_rescue_limit:
@@ -643,7 +646,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
                 # drops argmax pairs whose only shared grams are
                 # ubiquitous (round 3: 1,144/1,500 wrong rows at
                 # sf0.01).
-                if agg_top1 and not use_difflib and _duckdb_available():
+                if native_rung:
                     # native split-rung evaluation (guide §4.2): the
                     # lev rung runs as a DuckDB cross join + per-left
                     # argmax inside Arrow-batched tasks

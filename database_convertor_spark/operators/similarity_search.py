@@ -1121,13 +1121,22 @@ def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]],
             .mapInPandas(encode, schema))
 
 
+_SQL_NON_FINITE = {"nan": "CAST('NaN' AS DOUBLE)",
+                   "inf": "CAST('Infinity' AS DOUBLE)",
+                   "-inf": "CAST('-Infinity' AS DOUBLE)"}
+
+
 def _sql_double(x: float) -> str:
     """Exact SQL double literal: repr() is the shortest round-trip
     decimal, so the parser recovers the identical double; plain
     decimals get the D suffix (undecorated they parse as DECIMAL),
-    scientific notation is already DOUBLE in Spark SQL."""
+    scientific notation is already DOUBLE in Spark SQL. NaN and the
+    infinities have no literal form (a bare ``nan`` parses as a column
+    name) and become casts from their string spellings."""
     r = repr(float(x))
-    return r if ("e" in r or "E" in r or "n" in r) else r + "D"
+    if r in _SQL_NON_FINITE:
+        return _SQL_NON_FINITE[r]
+    return r if "e" in r else r + "D"
 
 
 def _sql_double_array(vals) -> str:

@@ -23,7 +23,8 @@ def get_spark(app_name: str = "database_convertor_spark",
 
     Pinned session timezone (UTC) keeps timestamp semantics identical
     to UTC-naive engines (the DuckDB correctness oracle). Arrow is on
-    for every pandas-UDF boundary.
+    for every pandas-UDF boundary. Partition discovery lists with one
+    task per core, not one per partition directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -40,6 +41,14 @@ def get_spark(app_name: str = "database_convertor_spark",
         # sweeps, bench loops), each leaving per-round checkpoint files
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # opening a table of more than 32 partition directories (a
+        # 256-bucket MERGE table) lists them in a Spark job whose task
+        # count defaults to one per directory, capped only at 10,000;
+        # one task per core lists the same directories with a fraction
+        # of the scheduling overhead. Listing stays distributed (the
+        # threshold is untouched), which a remote store needs.
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 128 MB matches cluster practice; the env override exists so

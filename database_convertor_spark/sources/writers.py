@@ -16,14 +16,17 @@ so every version of a key routes to the same bucket forever). A merge
 then (1) computes the touched partition values from the update batch
 (one distinct-collect, bounded by the batch), (2) reads ONLY those
 partitions of the existing table (directory partition pruning — the
-untouched 99% of the table is never listed, read, or written),
-(3) anti-joins the broadcast update keys inside that scope, and
-(4) swaps ONLY the touched partition directories. Untouched partition
-files are left physically untouched — same inode, same mtime. I/O per
-merge rides ``touched_partitions / total_partitions × table_bytes``,
-not table size. Size ``hash_buckets`` so a typical batch touches a
-small fraction: buckets ≈ table_bytes / target_partition_bytes, and a
-batch of K random keys touches ≤ K buckets.
+untouched 99% of the table is never read or written, though opening
+the table still lists every partition directory once, in a job of
+one task per core, see ``session.get_spark``), (3) anti-joins the
+broadcast update keys inside that scope, and (4) swaps ONLY the
+touched partition directories. Untouched partition files are left
+physically untouched — same inode, same mtime. Data I/O per merge
+rides ``touched_partitions / total_partitions × table_bytes``, not
+table size; listing is not (every open walks all the directories).
+Size ``hash_buckets`` so a typical batch touches a small fraction:
+buckets ≈ table_bytes / target_partition_bytes, and a batch of K
+random keys touches ≤ K buckets.
 
 Crash safety: every swap is stage → rename-aside → rename-in →
 delete-aside (the ``compact_text_index`` pattern, search.py). At every
@@ -391,9 +394,13 @@ def merge_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
 
     With either, only the partition directories the update batch
     touches are read, anti-joined, rewritten, and swapped; every other
-    partition's files are left byte-identical on disk. Without either,
-    the whole table is staged and swapped (correct, but O(table) I/O —
-    fine for the small config tables, wrong for the warehouse facts).
+    partition's files are left byte-identical on disk. Each open of the
+    table still lists every partition directory (a job of one task per
+    core) — once for the existing rows, once for the returned frame;
+    only the read of the existing rows is pruned to the touched
+    partitions. Without either, the whole table is staged and swapped
+    (correct, but O(table) I/O — fine for the small config tables,
+    wrong for the warehouse facts).
 
     The chosen spec is persisted in a ``_merge_spec.json`` sidecar and
     validated on every later merge — changing ``hash_buckets`` on an
@@ -466,8 +473,9 @@ def merge_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
         cond = F.col(part_col).isin(non_null)
         if len(non_null) < len(touched):        # null partition value
             cond = cond | F.col(part_col).isNull()
-        # directory partition pruning: only the touched partitions'
-        # files are listed and read
+        # directory partition pruning: the open above listed every
+        # partition directory (one cores-sized job); only the touched
+        # partitions' files are read
         in_scope = existing.filter(cond)
         upd_keys = updates.select(*keys)
         if broadcast_updates:

@@ -913,6 +913,33 @@ def test_sql_adc_tables_match_literal_builder(spark):
     assert got == want
 
 
+def test_sql_double_literals_round_trip_exactly(spark):
+    """Every double the SQL-text builders embed parses back to the
+    identical value: NaN, the infinities (which have no bare literal
+    form), the sign of zero and the extremes of the exponent range."""
+    import math
+    import struct
+
+    from database_convertor_spark.operators.similarity_search import (
+        _sql_double,
+        _sql_double_array,
+    )
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
+            1e-300, -1e-300, 1e308, -1e308, 5e-324, 0.1, -2.5, 1e16]
+    row = spark.sql(
+        "SELECT " + ", ".join(f"{_sql_double(v)} AS c{i}"
+                              for i, v in enumerate(vals))
+        + f", {_sql_double_array(vals)} AS arr").first()
+
+    def bits(x):
+        return "nan" if math.isnan(x) else struct.pack(">d", x)
+
+    want = [bits(v) for v in vals]
+    assert [bits(row[f"c{i}"]) for i in range(len(vals))] == want
+    assert [bits(x) for x in row["arr"]] == want
+
+
 def test_spark_round_np_matches_py(spark):
     """r11: the vectorized HALF_UP round twin must equal the scalar
     Decimal twin element for element — fixture residual magnitudes

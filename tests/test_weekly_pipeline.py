@@ -102,3 +102,32 @@ def test_weekly_stats_single_action(spark, monkeypatch):
         "applicants_matched": 4,
         "matches_recorded": 4,
     }
+
+
+def test_weekly_matches_persisted_and_agree_with_stats(spark):
+    """The stats action fills the matches cache: res.matches is one
+    persisted evaluation, and the match metrics count exactly its
+    rows."""
+    from pyspark.storagelevel import StorageLevel
+
+    res = run_weekly_pipeline(_discovered(spark), _existing(spark),
+                              _companies(spark))
+    assert res.matches.storageLevel == StorageLevel.MEMORY_AND_DISK
+    rows = res.matches.collect()
+    assert res.stats["matches_recorded"] == len(rows)
+    assert res.stats["applicants_matched"] == len(
+        {r.applicant_key for r in rows})
+
+
+def test_weekly_second_run_releases_first_matches(spark):
+    """The session slot holds one run's matches: a later run on other
+    inputs unpersists the earlier run's frame."""
+    from pyspark.storagelevel import StorageLevel
+
+    first = run_weekly_pipeline(_discovered(spark), _existing(spark),
+                                _companies(spark))
+    assert first.matches.storageLevel != StorageLevel.NONE
+    second = run_weekly_pipeline(_discovered(spark), _existing(spark),
+                                 _companies(spark).limit(2))
+    assert first.matches.storageLevel == StorageLevel.NONE
+    assert second.matches.storageLevel == StorageLevel.MEMORY_AND_DISK

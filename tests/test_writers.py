@@ -28,6 +28,32 @@ def _file_identity(root):
     return out
 
 
+def test_open_bucketed_table_lists_one_task_per_core(spark, tmp_path):
+    """Opening a table of more partition directories than Spark's
+    parallel-discovery threshold (32) lists them in a Spark job; the
+    session caps that job at one task per core, not one per
+    directory."""
+    target = os.path.join(tmp_path, "bucketed")
+    rows = spark.range(2000).selectExpr("cast(id AS string) AS k", "id AS v")
+    merge_upsert(spark, target, rows, keys=["k"], hash_buckets=64)
+    assert sum(e.startswith("_merge_bucket=")
+               for e in os.listdir(target)) > 32
+    sc = spark.sparkContext
+    group = "test-open-bucketed-table"
+    sc.setJobGroup(group, "open a 64-bucket table")
+    try:
+        spark.read.parquet(target)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks
+             for j in tracker.getJobIdsForGroup(group)
+             for s in tracker.getJobInfo(j).stageIds]
+    assert tasks, "opening the table ran no listing job"
+    assert max(tasks) <= sc.defaultParallelism, tasks
+
+
 def test_merge_upsert_insert_then_update(spark, tmp_path):
     target = os.path.join(tmp_path, "companies")
     base = spark.createDataFrame(
