@@ -15,6 +15,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_memo
+
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # language-ID heuristic. Deliberately small and deterministic.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -158,13 +160,14 @@ def gopher_signals(col: Column) -> dict[str, Column]:
     }
 
 
-# (context id, repr(col)) -> built predicate Column. Building costs
-# ~250 Py4J round trips (~0.45 s of driver time profiled warm at
-# sf0.1), repeated by every corpus-family query invocation; Columns
-# are immutable unresolved expression trees resolved by name at plan
-# time, so one build per input expression is sound (r11, guide §1.2 —
-# same memoization argument as similarity_search._rank_exprs_cached).
-_GOPHER_PASSES_CACHE: dict[tuple, Column] = {}
+# repr(col) -> built predicate Column, per session (a Column wraps a
+# Py4J handle into its session's JVM). Building costs ~250 Py4J round
+# trips (~0.45 s of driver time profiled warm at sf0.1), repeated by
+# every corpus-family query invocation; Columns are immutable
+# unresolved expression trees resolved by name at plan time, so one
+# build per input expression is sound (r11, guide §1.2 — same
+# memoization argument as similarity_search._rank_exprs_cached).
+_gopher_passes_memo = session_memo(64)
 
 
 def gopher_passes(col: Column) -> Column:
@@ -172,24 +175,17 @@ def gopher_passes(col: Column) -> Column:
     thresholds: 50<=words<=100k, 3<=mean word len<=10, symbol ratio
     <0.1, bullet lines <90%, ellipsis lines <30%, >=80% words
     alphabetic, duplicate lines <=30%)."""
-    # keyed on the live SparkContext too: a Column wraps a Py4J handle
-    # into that JVM — after a session restart the old handle is stale
-    from pyspark import SparkContext
+    def build() -> Column:
+        s = gopher_signals(col)
+        return (s["n_words"].between(50, 100_000)
+                & s["mean_word_len"].between(3.0, 10.0)
+                & (s["symbol_word_ratio"] < 0.1)
+                & (s["bullet_line_frac"] < 0.9)
+                & (s["ellipsis_line_frac"] < 0.3)
+                & (s["alpha_word_frac"] >= 0.8)
+                & (s["dup_line_frac"] <= 0.3))
 
-    key = (id(SparkContext._active_spark_context), repr(col))
-    hit = _GOPHER_PASSES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    s = gopher_signals(col)
-    out = (s["n_words"].between(50, 100_000)
-           & s["mean_word_len"].between(3.0, 10.0)
-           & (s["symbol_word_ratio"] < 0.1)
-           & (s["bullet_line_frac"] < 0.9)
-           & (s["ellipsis_line_frac"] < 0.3)
-           & (s["alpha_word_frac"] >= 0.8)
-           & (s["dup_line_frac"] <= 0.3))
-    _GOPHER_PASSES_CACHE[key] = out
-    return out
+    return _gopher_passes_memo(repr(col), build)
 
 
 # Cross-engine deterministic hashing: xxhash64 is Spark-only, so the

@@ -33,6 +33,9 @@ import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import collect_within_budget
 
 # temp checkpoint dirs auto-created below, swept at interpreter exit —
 # Spark never removes the checkpoint ROOT itself, and per-RDD file
@@ -136,8 +139,6 @@ def _local_components(e0: DataFrame, pdf=None) -> DataFrame | None:
         import duckdb
     except ImportError:  # pragma: no cover - env without duckdb
         return None
-    from pyspark.sql import types as T
-
     if e0.schema[0].dataType != e0.schema[1].dataType:
         return None
     if pdf is None:
@@ -184,50 +185,6 @@ def _local_components(e0: DataFrame, pdf=None) -> DataFrame | None:
     return e0.sparkSession.createDataFrame(out, schema)
 
 
-def _collect_within_budget(e0: DataFrame, local_edges_budget: int):
-    """Budget gate AND collect for the driver-side components path in
-    ONE action (r11 — the former shape was checkpoint-then-count-then-
-    toPandas: three jobs and TWO full computations of the upstream
-    pair join, since a reliable checkpoint re-computes its final stage
-    to write the files): a ``limit(probe+1).toPandas()`` either
-    returns the WHOLE edge list (len <= probe proves it, and the rows
-    ARE the local solver's input) or proves the overflow with the one
-    extra row — the caller then checkpoints and runs the distributed
-    star rounds, having paid one bounded probe.
-
-    Byte-aware (round-10 advice): the row budget is calibrated for
-    fixed-width numeric ids (~16 bytes/edge driver-side); wide string
-    node ids multiply the collected + DuckDB-symmetrized footprint, so
-    for non-integral id types the PROBE row cap is budget/4 (a 64-byte
-    floor per edge) and the true byte gate — rows x max(width, 16) <=
-    budget x 16, width measured exactly over the collected rows —
-    applies after the collect; "about 80 MB of edge payload" whatever
-    the id type. Any collect failure (spark.driver.maxResultSize)
-    falls back to the distributed path."""
-    from pyspark.sql import types as T
-
-    integral = all(isinstance(f.dataType,
-                              (T.LongType, T.IntegerType,
-                               T.ShortType, T.ByteType))
-                   for f in e0.schema.fields)
-    probe = (local_edges_budget if integral
-             else max(local_edges_budget // 4, 1))
-    try:
-        pdf = e0.limit(probe + 1).toPandas()
-    except Exception:  # pragma: no cover - maxResultSize guard
-        return None
-    if len(pdf) > probe:
-        return None
-    if not integral and len(pdf):
-        width = float(
-            (pdf["a"].astype(str).str.encode("utf-8").str.len()
-             + pdf["b"].astype(str).str.encode("utf-8").str.len())
-            .mean())
-        if len(pdf) * max(width, 16.0) > local_edges_budget * 16.0:
-            return None
-    return pdf
-
-
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iterations: int = 20,
                          local_edges_budget: int = 5_000_000) -> DataFrame:
@@ -248,13 +205,31 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     e0 = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
           .distinct())
     if local_edges_budget:
-        # budget probe + collect in ONE action (see
-        # _collect_within_budget) — the local path never checkpoints:
-        # the driver copy IS the materialization, so the common
-        # under-budget case pays one computation of the upstream pair
-        # join instead of the checkpoint's compute + re-compute-to-
-        # write + read-back
-        pdf = _collect_within_budget(e0, local_edges_budget)
+        # budget probe + collect in ONE action (r11 — the former shape
+        # was checkpoint-then-count-then-toPandas: three jobs and TWO
+        # computations of the upstream pair join). The local path
+        # never checkpoints: the driver copy IS the materialization.
+        # Byte-aware (round-10 advice): the row budget is calibrated
+        # for fixed-width numeric ids (~16 bytes/edge driver-side), so
+        # for other id types the probe's row cap is budget/4 (a 64-byte
+        # floor per edge) and the true byte gate — rows x max(width,
+        # 16) <= budget x 16, width measured over the collected rows —
+        # applies after the collect: ~80 MB of edge payload whatever
+        # the id type.
+        integral = all(isinstance(f.dataType,
+                                  (T.LongType, T.IntegerType,
+                                   T.ShortType, T.ByteType))
+                       for f in e0.schema.fields)
+        pdf = collect_within_budget(
+            e0, local_edges_budget if integral
+            else max(local_edges_budget // 4, 1))
+        if pdf is not None and not integral and len(pdf):
+            width = float(
+                (pdf["a"].astype(str).str.encode("utf-8").str.len()
+                 + pdf["b"].astype(str).str.encode("utf-8").str.len())
+                .mean())
+            if len(pdf) * max(width, 16.0) > local_edges_budget * 16.0:
+                pdf = None
         if pdf is not None:
             local = _local_components(e0, pdf=pdf)
             if local is not None:

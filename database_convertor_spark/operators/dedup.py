@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity, token_jaccard
-from ..session import spread
+from ..session import session_memo, spread
 from ..plans.persist_slots import swap_persisted
 from ..functions.text import (
     HASH_PRIME,
@@ -111,38 +111,25 @@ def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
             .filter(F.col("jaccard") >= threshold))
 
 
-# pair-mass estimates keyed by (session, estimate plan, adjacency):
-# the gate's histogram job runs ONCE per distinct input within a
-# session — a pipeline invoking several gated operators over the same
-# upstream (corpus_deduped + curation_stats both estimate on the raw
-# documents scan) pays for the estimate once, not per operator. The
-# estimate is a coarse work bound, so intra-session staleness (same
-# plan, mutated files underneath) is an accepted trade; bounded FIFO.
-_PAIR_MASS_CACHE: dict[tuple, float] = {}
-_PAIR_MASS_CACHE_MAX = 64
+# pair-mass estimates keyed by (estimate plan, adjacency): the gate's
+# histogram job runs ONCE per distinct input within a session — a
+# pipeline invoking several gated operators over the same upstream
+# (corpus_deduped + curation_stats both estimate on the raw documents
+# scan) pays for the estimate once, not per operator. The estimate is
+# a coarse work bound, so intra-session staleness (same plan, mutated
+# files underneath) is an accepted trade.
+_pair_mass_memo = session_memo(64)
 
 
 def _session_plan_cached(frame: DataFrame, tag, compute) -> float:
-    """Shared cache policy for gate estimates: key = stable session
-    identity (applicationId + startTime — NOT id(session): a GC'd
-    session's id() can be reused by a new one, silently serving a
-    stale estimate across sessions) + the input's analyzed-plan
-    semanticHash + a caller tag; bounded FIFO eviction. ``compute``
-    is the thunk that runs the (one) histogram job on a miss."""
+    """Gate estimates memoized per session on the input's analyzed-plan
+    semanticHash + a caller tag. ``compute`` is the thunk that runs
+    the (one) histogram job on a miss."""
     try:
-        sc = frame.sparkSession.sparkContext
-        key = (sc.applicationId, sc.startTime,
-               frame._jdf.queryExecution().analyzed().semanticHash(), tag)
+        key = (frame._jdf.queryExecution().analyzed().semanticHash(), tag)
     except Exception:                      # connect / API drift: no cache
-        key = None
-    if key is not None and key in _PAIR_MASS_CACHE:
-        return _PAIR_MASS_CACHE[key]
-    mass = compute()
-    if key is not None:
-        while len(_PAIR_MASS_CACHE) >= _PAIR_MASS_CACHE_MAX:
-            _PAIR_MASS_CACHE.pop(next(iter(_PAIR_MASS_CACHE)))
-        _PAIR_MASS_CACHE[key] = mass
-    return mass
+        return compute()
+    return _pair_mass_memo(key, compute)
 
 
 def _block_pair_mass_cached(docs: DataFrame,
@@ -660,9 +647,9 @@ def _minhash_signature(base_col: Column, num_hashes: int) -> Column:
 
 
 # num_hashes -> Arrow-batched signature UDF (constructed once per
-# width; a per-call construction would re-pickle the closure into
-# every plan built)
-_MINHASH_SIG_UDFS: dict[int, object] = {}
+# width and session; a per-call construction would re-pickle the
+# closure into every plan built)
+_minhash_sig_udf_memo = session_memo(16)
 
 
 def _minhash_sig_udf(num_hashes: int):
@@ -682,7 +669,7 @@ def _minhash_sig_udf(num_hashes: int):
     import pandas as pd
     import numpy as np
 
-    if num_hashes not in _MINHASH_SIG_UDFS:
+    def build():
         A = np.asarray(MINHASH_A[:num_hashes], dtype=np.int64)
         B = np.asarray(MINHASH_B[:num_hashes], dtype=np.int64)
         nulls = [None] * num_hashes
@@ -699,8 +686,9 @@ def _minhash_sig_udf(num_hashes: int):
                            .min(axis=0).tolist())
             return pd.Series(out)
 
-        _MINHASH_SIG_UDFS[num_hashes] = sig_from_base
-    return _MINHASH_SIG_UDFS[num_hashes]
+        return sig_from_base
+
+    return _minhash_sig_udf_memo(num_hashes, build)
 
 
 def minhash_signatures(documents: DataFrame, num_hashes: int = 32,
@@ -1765,8 +1753,10 @@ def winnow_fingerprints(documents: DataFrame, k: int = 10,
             .filter(F.col("fp").isNotNull()))
 
 
-# (k, w) -> Arrow-batched fingerprint UDF (constructed once per shape)
-_WINNOW_UDFS: dict[tuple[int, int], object] = {}
+# (k, w) -> Arrow-batched fingerprint UDF (constructed once per shape
+# and session: a UDF kept past a session restart reports its
+# accumulator updates to the dead context)
+_winnow_udf_memo = session_memo(16)
 
 
 def _winnow_fps_udf(k: int, w: int):
@@ -1781,8 +1771,7 @@ def _winnow_fps_udf(k: int, w: int):
     import numpy as np
     import pandas as pd
 
-    if (k, w) not in _WINNOW_UDFS:
-
+    def build():
         @F.pandas_udf("array<long>")
         def winnow_fps(norms: pd.Series) -> pd.Series:
             from numpy.lib.stride_tricks import sliding_window_view
@@ -1808,8 +1797,9 @@ def _winnow_fps_udf(k: int, w: int):
                     out.append([int(h.min())])
             return pd.Series(out)
 
-        _WINNOW_UDFS[(k, w)] = winnow_fps
-    return _WINNOW_UDFS[(k, w)]
+        return winnow_fps
+
+    return _winnow_udf_memo((k, w), build)
 
 
 def _winnow_fingerprints_expr(documents: DataFrame, k: int = 10,

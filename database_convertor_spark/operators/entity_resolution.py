@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import normalize_company_name
 from ..plans.persist_slots import swap_persisted
+from ..session import collect_within_budget
 from ..functions.similarity import (
     levenshtein_similarity,
     sequence_ratio,
@@ -578,23 +579,17 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
             # The size gate's count doubles as the rescue dimension's
             # collect when the native rung will run (r11, guide §1.2 —
             # count-then-toPandas was two sequential jobs over the
-            # same persisted dimension): a limit(limit+1) probe either
+            # same persisted dimension): the budget probe either
             # returns the WHOLE dimension (len IS the exact count,
-            # and the rows feed _duckdb_lev_rescue directly) or
-            # proves it past the gate with one over-budget row. The
-            # probe also materializes the persist, exactly as the
-            # count did.
+            # and the rows feed _duckdb_lev_rescue directly) or the
+            # gate falls back to the count. The probe also
+            # materializes the persist, exactly as the count does.
             rights_pdf = None
             if native_rung and exact_rescue_limit:
-                probe = (rnorm.select(right_key, "_rnorm")
-                         .limit(exact_rescue_limit + 1).toPandas())
-                if len(probe) <= exact_rescue_limit:
-                    rights_pdf = probe
-                    n_right = len(probe)
-                else:
-                    n_right = rnorm.count()
-            else:
-                n_right = rnorm.count()
+                rights_pdf = collect_within_budget(
+                    rnorm.select(right_key, "_rnorm"), exact_rescue_limit)
+            n_right = (len(rights_pdf) if rights_pdf is not None
+                       else rnorm.count())
             # worst-case residual count for the pair budget: a count
             # over the bare left (column-pruned scan — the normalize/
             # tokenize projections are dropped by the optimizer), so

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity
+from ..session import collect_within_budget, session_memo
 
 # brute_force_topk_numpy materializes the query set on the driver and
 # broadcasts it — the guard that keeps that contract from OOMing when
@@ -83,13 +84,13 @@ def brute_force_topk_numpy(queries: DataFrame, corpus: DataFrame,
     c_t = dict(corpus.dtypes)["vec_id"]
     out_schema = (f"query_id {q_t}, neighbor_id {c_t}, "
                   f"rank int, cosine double")
-    n_q = queries.limit(MAX_BROADCAST_QUERIES + 1).count()
-    if n_q > MAX_BROADCAST_QUERIES:
+    qpd = collect_within_budget(queries.select("vec_id", "embedding"),
+                                MAX_BROADCAST_QUERIES)
+    if qpd is None:
         raise ValueError(
             f"brute_force_topk_numpy broadcasts the query set; got more "
             f"than {MAX_BROADCAST_QUERIES} query vectors — use ivf_topk/"
             f"ivf_topk_multiprobe for corpus-scale query sets")
-    qpd = queries.select("vec_id", "embedding").toPandas()
     if len(qpd) == 0:
         return spark.createDataFrame([], out_schema)
     qids = qpd["vec_id"].to_numpy()
@@ -343,21 +344,11 @@ def _arrow_batch_rows(spark) -> int:
 
 
 def _collect_vectors_local(emb: DataFrame, budget_rows: int):
-    """Collect the (_id, _v) projection when it fits the local-fit
-    budget; None past it (or on any collect failure, e.g.
-    spark.driver.maxResultSize) — callers fall back to the
-    distributed loop. The limit(budget+1) probe bounds what a
-    past-budget corpus can ship: one row over the budget proves the
-    fallback without counting first."""
-    if not budget_rows:
-        return None
-    try:
-        pdf = emb.limit(budget_rows + 1).toPandas()
-    except Exception:
-        return None
-    if len(pdf) > budget_rows:
-        return None
-    if len(pdf):
+    """The (_id, _v) projection collected for a local fit, or None
+    past ``budget_rows`` rows (0 disables), past the element cap, or on
+    a failed collect — callers fall back to the distributed loop."""
+    pdf = collect_within_budget(emb, budget_rows) if budget_rows else None
+    if pdf is not None and len(pdf):
         head = pdf["_v"].iloc[0]
         dim = 0 if head is None else len(head)
         if len(pdf) * dim > _LOCAL_FIT_MAX_ELEMENTS:
@@ -1280,7 +1271,7 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     # searchers' — need only happen once per session per index
     ckey = ("inmem", hashlib.md5(
         json.dumps([coarse, books]).encode()).hexdigest())
-    exprs = _rank_exprs_cached(queries.sparkSession, ckey, coarse, books)
+    exprs = _rank_exprs_cached(ckey, coarse, books)
     return _ivfpq_rank(codes, probes, coarse, books, k, exprs=exprs)
 
 
@@ -1358,16 +1349,17 @@ def ivfpq_fit_encode(corpus: DataFrame, n_cells: int = 8, m: int = 4,
             _pq_init_books(_residual_init_vecs(local_init[:ks], coarse),
                            m),
             n_iter)
+        res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
     else:
         init = _md5_init_vecs(corpus, max(n_cells, ks))
         coarse, _ = kmeans_fit(corpus, k=n_cells, n_iter=n_iter,
                                init_vecs=init, local_rows_budget=0)
         coarse = [[round(x, 9) for x in c] for c in coarse]
-        res_fit = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
-        books = pq_fit(res_fit, m=m, ks=ks, n_iter=n_iter,
+        # the fit's persisted residuals feed the encode too
+        res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
+        books = pq_fit(res, m=m, ks=ks, n_iter=n_iter,
                        init_vecs=_residual_init_vecs(init[:ks], coarse),
                        pre_persisted=True, local_rows_budget=0)
-    res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
     codes = (pq_encode(res, books, carry_cols=("cluster_id",))
              .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
     return coarse, books, codes
@@ -1472,29 +1464,15 @@ def _ivfpq_rank_exprs(coarse: list, books: list) -> tuple[Column, Column]:
     return qres, tables
 
 
-# (session key, sidecar key) -> (qres, tables); FIFO-bounded like the
-# dedup gate-estimate cache (same policy rationale: bench loops and
-# interactive servers re-touch a handful of live indexes, and a
-# session restart must not serve stale JVM expression handles)
-_RANK_EXPR_CACHE: dict = {}
-_RANK_EXPR_CACHE_MAX = 32
+# sidecar key -> (qres, tables): bench loops and interactive servers
+# re-touch a handful of live indexes
+_rank_exprs_memo = session_memo(32)
 
 
-def _session_key(spark) -> tuple:
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
-
-
-def _rank_exprs_cached(spark, sidecar_key: tuple, coarse: list,
+def _rank_exprs_cached(sidecar_key: tuple, coarse: list,
                        books: list) -> tuple[Column, Column]:
-    key = (_session_key(spark), sidecar_key)
-    hit = _RANK_EXPR_CACHE.get(key)
-    if hit is None:
-        hit = _ivfpq_rank_exprs(coarse, books)
-        _RANK_EXPR_CACHE[key] = hit
-        while len(_RANK_EXPR_CACHE) > _RANK_EXPR_CACHE_MAX:
-            _RANK_EXPR_CACHE.pop(next(iter(_RANK_EXPR_CACHE)))
-    return hit
+    return _rank_exprs_memo(sidecar_key,
+                            lambda: _ivfpq_rank_exprs(coarse, books))
 
 
 def _ivfpq_rank(codes: DataFrame, probes: DataFrame, coarse: list,
@@ -1615,15 +1593,14 @@ def _require_local_index_path(path: str) -> None:
             "the codebooks in the table metadata/catalog instead.")
 
 
-# (sidecar path, content digest) -> parsed JSON; FIFO-bounded. Keyed
+# (sidecar path, content digest) -> parsed JSON. Keyed
 # on the BYTES, not mtime+size: a re-land/compaction producing a
 # same-size sidecar within one coarse-mtime tick must not serve stale
 # codebooks (round-9 advice). Sidecars are small JSON, so re-reading +
 # hashing per call is cheap; what the cache saves is the JSON parse
 # and — via the key doubling as the identity token for
 # ``_rank_exprs_cached`` — the ~1.5 s ADC expression rebuild.
-_SIDECAR_CACHE: dict = {}
-_SIDECAR_CACHE_MAX = 64
+_sidecar_memo = session_memo(64)
 
 
 def _sidecar_cached(path: str, name: str) -> tuple[tuple, dict]:
@@ -1639,13 +1616,7 @@ def _sidecar_cached(path: str, name: str) -> tuple[tuple, dict]:
     with open(full, "rb") as fh:
         raw = fh.read()
     key = (full, hashlib.md5(raw).hexdigest())
-    hit = _SIDECAR_CACHE.get(key)
-    if hit is None:
-        hit = json.loads(raw)
-        _SIDECAR_CACHE[key] = hit
-        while len(_SIDECAR_CACHE) > _SIDECAR_CACHE_MAX:
-            _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-    return key, copy.deepcopy(hit)
+    return key, copy.deepcopy(_sidecar_memo(key, lambda: json.loads(raw)))
 
 
 def _spark_round_py(x: float, scale: int = 6) -> float:
@@ -1664,21 +1635,23 @@ def _spark_round_py(x: float, scale: int = 6) -> float:
 
 def _spark_round_np(arr, scale: int = 9):
     """Vectorized ``_spark_round_py``: the fast path rounds to nearest
-    via floor(x*10^s + 0.5) — for values whose scaled fraction is at
-    least 1e-4 from the .5 boundary this EQUALS HALF_UP on the
-    shortest-roundtrip decimal (the float scaling error is below 1e-6
-    at embedding magnitudes, so only boundary-adjacent values can
-    disagree, and ties-away-from-zero vs ties-up differ only AT the
-    boundary); boundary-adjacent elements take the exact Decimal
-    fallback. Bit-equality with the scalar twin pinned by
-    test_spark_round_np_matches_py."""
+    via floor(x*10^s + 0.5) — for values whose scaled fraction is
+    farther from the .5 boundary than the float error of x*10^s this
+    EQUALS HALF_UP on the shortest-roundtrip decimal (ties-away-from-
+    zero vs ties-up differ only AT the boundary); boundary-adjacent
+    elements take the exact Decimal fallback. The error — x's distance
+    from its shortest decimal plus the product's rounding, both scaled
+    — is under 1.5 ulp of x*10^s, so the suspect band is the larger of
+    1e-4 and |x*10^s| * 2^-50 (at |x| ~ 1e4 and scale 9 the error is
+    ~1e-3, past a fixed 1e-4 band). Bit-equality with the scalar twin
+    pinned by test_spark_round_np_matches_py."""
     import numpy as np
 
     p = 10.0 ** scale
     s = arr * p
     frac = s - np.floor(s)
     out = np.floor(s + 0.5) / p
-    suspect = np.abs(frac - 0.5) < 1e-4
+    suspect = np.abs(frac - 0.5) < np.maximum(1e-4, np.abs(s) * 2.0 ** -50)
     if suspect.any():
         flat_out = out.reshape(-1)
         flat_in = np.asarray(arr, dtype="float64").reshape(-1)
@@ -1731,7 +1704,7 @@ def search_ivfpq_index(spark, path: str, queries: DataFrame, k: int = 5,
     codes = (spark.read.parquet(path)
              .filter(F.col("cell").isin(probed_cells)))
     return _ivfpq_rank(codes, probes, coarse, books, k,
-                       exprs=_rank_exprs_cached(spark, ckey, coarse, books))
+                       exprs=_rank_exprs_cached(ckey, coarse, books))
 
 
 def search_ivfpq_index_local(spark, path: str, queries: list,
@@ -1762,7 +1735,7 @@ def search_ivfpq_index_local(spark, path: str, queries: list,
     codes = (spark.read.parquet(path)
              .filter(F.col("cell").isin(probed_cells)))
     return _ivfpq_rank(codes, probes, coarse, books, k,
-                       exprs=_rank_exprs_cached(spark, ckey, coarse, books))
+                       exprs=_rank_exprs_cached(ckey, coarse, books))
 
 
 def ann_pq_rerank(queries: DataFrame, corpus: DataFrame, k: int = 5,

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import spread
+from ..session import collect_within_budget, spread
 from ..functions.text import (
     detect_language,
     fingerprint,
@@ -1188,16 +1188,16 @@ def bpe_merges(documents: DataFrame, n_merges: int = 8,
     if word_cap is not None:
         wc = wc.orderBy(F.desc("cnt"), F.asc("w")).limit(word_cap)
     # gate and collect in ONE job (r11, guide §1.2 — the count ran a
-    # separate full aggregate before an identical collect): the
-    # limit(budget+1) probe bounds what a past-budget vocabulary can
-    # ship to the driver, and one extra row proves the overflow. The
-    # trainer is insensitive to row order (integer pair counts summed
-    # over distinct words; ties broken on symbols), so the limited
-    # collect feeding it is set-identical to the unlimited one.
+    # separate full aggregate before an identical collect): the budget
+    # probe bounds what a past-budget vocabulary can ship to the
+    # driver. The trainer is insensitive to row order (integer pair
+    # counts summed over distinct words; ties broken on symbols), so
+    # the limited collect feeding it is set-identical to the unlimited
+    # one.
     words = wc.select("w", "cnt")
     if max_train_words is not None:
-        rows_in = words.limit(max_train_words + 1).collect()
-        if len(rows_in) > max_train_words:
+        pdf = collect_within_budget(words, max_train_words)
+        if pdf is None:
             raise ValueError(
                 f"bpe_merges: more than {max_train_words:,} distinct "
                 f"training words (max_train_words; driver working "
@@ -1207,9 +1207,9 @@ def bpe_merges(documents: DataFrame, n_merges: int = 8,
                 f"by count covers >99.9% of token mass under Zipf), "
                 f"or raise max_train_words on a bigger driver")
     else:
-        rows_in = words.collect()
+        pdf = words.toPandas()
     rows = _fast_bpe(
-        ((r["w"], int(r["cnt"])) for r in rows_in),
+        ((w, int(c)) for w, c in zip(pdf["w"], pdf["cnt"])),
         n_merges, symbolizer=_byte_syms if byte_level else None)
     return documents.sparkSession.createDataFrame(
         rows, "rank int, left_sym string, right_sym string, "

@@ -85,3 +85,59 @@ def spread(df):
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+def collect_within_budget(df, max_rows: int):
+    """A size gate whose probe IS the collect: one
+    ``limit(max_rows + 1).toPandas()`` either returns the whole frame
+    (at most ``max_rows`` rows came back) or proves the overflow with
+    the one extra row and returns None. A collect that raises (e.g.
+    ``spark.driver.maxResultSize``) also returns None, so every caller
+    falls back to its distributed path instead of failing."""
+    try:
+        pdf = df.limit(max_rows + 1).toPandas()
+    except Exception:
+        return None
+    return None if len(pdf) > max_rows else pdf
+
+
+def _context_identity():
+    """(applicationId, startTime) of the live SparkContext, or None.
+    Not ``id(sc)``: a stopped context's id can be reused by the next."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    return None if sc is None else (sc.applicationId, sc.startTime)
+
+
+def session_memo(maxsize: int):
+    """A get-or-compute memo ``memo(key, compute)`` scoped to the live
+    SparkContext: the first use under a different context drops every
+    entry (a memoized Column or UDF wraps handles into the JVM that
+    built it), and at most ``maxsize`` entries are kept, oldest out
+    first. With no live context it just computes."""
+    import threading
+
+    entries: dict = {}
+    owner = [None]
+    lock = threading.Lock()
+
+    def memo(key, compute):
+        ctx = _context_identity()
+        if ctx is None:
+            return compute()
+        with lock:
+            if owner[0] != ctx:
+                entries.clear()
+                owner[0] = ctx
+            if key in entries:
+                return entries[key]
+        value = compute()
+        with lock:
+            if owner[0] == ctx:
+                while len(entries) >= maxsize:
+                    entries.pop(next(iter(entries)))
+                entries[key] = value
+        return value
+
+    return memo

@@ -955,7 +955,9 @@ def test_spark_round_np_matches_py(spark):
     adversarial = [0.0000000005, -0.0000000005, 0.1234567895,
                    -0.1234567895, 1.0000000015, -1.0000000015,
                    0.12345678949999, 0.1234567895000001, 2.5e-10,
-                   -2.5e-10, 123.4567890125, -123.4567890125]
+                   -2.5e-10, 123.4567890125, -123.4567890125,
+                   # |x| ~ 1e4: x * 1e9 carries ~1e-3 of float error
+                   8585.8374241475, -34525.1557494455]
     vals = np.asarray(rng + adversarial, dtype="float64")
     got = _spark_round_np(vals, 9)
     want = np.asarray([_spark_round_py(float(v), 9) for v in vals])
@@ -1010,3 +1012,31 @@ def test_ivfpq_local_fit_matches_distributed(spark):
     rows_d = sorted((r.vec_id, r.cell, list(r.codes))
                     for r in codd.collect())
     assert rows_l == rows_d
+
+
+def test_ivfpq_past_budget_builds_residuals_once(spark, monkeypatch):
+    """The past-budget IVFADC build encodes from the residual frame its
+    PQ fit trained on — one residual build, not a second one that
+    takes over the fit's persist slot — and the codes are those of an
+    encode over freshly built residuals."""
+    from database_convertor_spark.operators import similarity_search as ss
+
+    built = []
+    orig = ss._ivfpq_residuals
+
+    def counting(*a, **k):
+        built.append(k.get("slot"))
+        return orig(*a, **k)
+
+    monkeypatch.setattr(ss, "_ivfpq_residuals", counting)
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    coarse, books, codes = ss.ivfpq_fit_encode(
+        emb, n_cells=8, m=4, ks=8, n_iter=3, local_rows_budget=0)
+    got = sorted((r.vec_id, r.cell, list(r.codes)) for r in codes.collect())
+    assert built == ["ivfpq_res_fit"]
+
+    res = orig(emb, coarse, slot="ivfpq_res_fit")
+    want = (ss.pq_encode(res, books, carry_cols=("cluster_id",))
+            .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
+    assert got == sorted((r.vec_id, r.cell, list(r.codes))
+                         for r in want.collect())

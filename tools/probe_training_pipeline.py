@@ -37,7 +37,7 @@ def main() -> int:
     # wrap connected_components to time its internals
     orig_cc = comp.connected_components
     orig_local = comp._local_components
-    orig_budget = comp._collect_within_budget
+    orig_budget = comp.collect_within_budget
 
     def cc_timed(*a, **k):
         t0 = time.perf_counter()
@@ -45,9 +45,9 @@ def main() -> int:
         marks.append(("connected_components total", time.perf_counter() - t0))
         return out
 
-    def budget_timed(e0, b):
+    def budget_timed(df, max_rows):
         t0 = time.perf_counter()
-        out = orig_budget(e0, b)
+        out = orig_budget(df, max_rows)
         marks.append(("cc: budget probe+collect job", time.perf_counter() - t0))
         return out
 
@@ -59,7 +59,7 @@ def main() -> int:
         return out
 
     comp.connected_components = cc_timed
-    comp._collect_within_budget = budget_timed
+    comp.collect_within_budget = budget_timed
     comp._local_components = local_timed
 
     orig_pairs = dd.ngram_jaccard_pairs
