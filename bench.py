@@ -149,7 +149,9 @@ def main() -> None:
     # next (same session, same plans — 40s vs 80s totals minutes
     # apart). min-of-2 reports the engine's capability, not the
     # neighbor's weather; a genuine plan regression still shows in
-    # BOTH passes.
+    # BOTH passes. Each builder call starts a new query, which
+    # releases what the previous query persisted, so pass 2 reuses
+    # no cached frame of pass 1.
     timings: dict[str, float] = {}
     for _ in range(2):
         for name in HEADLINE:

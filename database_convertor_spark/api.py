@@ -11,12 +11,14 @@ materialize)."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .schemas import MERGE_KEYS, MERGE_PARTITION_SPECS, WAREHOUSE_SCHEMAS
+from .session import new_query
 from .sources.writers import BUCKET_COL, merge_upsert, write_csv, write_excel
 
 
@@ -732,3 +734,20 @@ class Engine:
                 F.col("id").alias("company_id"), "company_name"))
         existing = self.table("planning_applications")
         return run_weekly_pipeline(discovered, existing, companies)
+
+
+def _starts_query(method):
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        new_query()
+        return method(self, *args, **kwargs)
+    return run
+
+
+# Every public method is one query: it releases what the previous one
+# persisted. The readers ``table`` and ``sql`` are not: other methods
+# call them while their own query runs.
+for _name, _method in list(vars(Engine).items()):
+    if (callable(_method) and not _name.startswith("_")
+            and _name not in ("table", "sql")):
+        setattr(Engine, _name, _starts_query(_method))

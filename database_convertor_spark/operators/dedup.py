@@ -23,8 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity, token_jaccard
-from ..session import session_memo, spread
-from ..plans.persist_slots import swap_persisted
+from ..session import persist_for_query, session_memo, spread
 from ..functions.text import (
     HASH_PRIME,
     MINHASH_A,
@@ -354,21 +353,19 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.9,
         raise ValueError(
             f"on_budget_exceeded must be 'raise' or 'ignore', got "
             f"{on_budget_exceeded!r}")
-    from pyspark.storagelevel import StorageLevel
 
     # The tokenized doc frame feeds FIVE consumers (df build, prefix
     # ranking, the candidate join's full-token side, and the two
     # verify-join sides) — unpersisted, each re-scanned the parquet
     # and re-ran the tokenize regex + array_distinct (5 scans in the
-    # r11 before-plan). One bounded persist slot (guide §5 reuse;
+    # r11 before-plan). One persist for the query (guide §5 reuse;
     # ~tokens-per-doc x 8B per row, spilled to disk past memory)
     # collapses them to one pass.
     docs = documents.select(
         "doc_id", "lang",
         F.array_distinct(tokens(F.lower(F.col("text")))).alias("toks"))
     docs = docs.withColumn("n", F.size("toks"))
-    docs = swap_persisted("containment_docs",
-                          docs.persist(StorageLevel.MEMORY_AND_DISK))
+    docs = persist_for_query(docs)
     tok = docs.select("doc_id", "lang", "n",
                       F.explode("toks").alias("tok"))
     dfreq = tok.groupBy("lang", "tok").agg(F.count("*").alias("df"))
@@ -465,20 +462,17 @@ def cross_corpus_containment(needles: DataFrame, haystack: DataFrame,
             f"on_budget_exceeded must be 'raise' or 'ignore', got "
             f"{on_budget_exceeded!r}")
 
-    from pyspark.storagelevel import StorageLevel
-
-    def _prep(frame, slot):
+    def _prep(frame):
         # same one-pass tokenize discipline as ``containment_pairs``:
         # each side feeds 2-3 consumers (df/ranking + verify join)
         d = frame.select(
             "doc_id", "lang",
             F.array_distinct(tokens(F.lower(F.col("text")))).alias("toks"))
         d = d.withColumn("n", F.size("toks"))
-        return swap_persisted(slot,
-                              d.persist(StorageLevel.MEMORY_AND_DISK))
+        return persist_for_query(d)
 
-    nd = _prep(needles, "containment_needles")
-    hs = _prep(haystack, "containment_haystack")
+    nd = _prep(needles)
+    hs = _prep(haystack)
     h_tok = hs.select("doc_id", "lang", F.explode("toks").alias("tok"))
     dfreq = h_tok.groupBy("lang", "tok").agg(F.count("*").alias("df"))
     n_tok = nd.select("doc_id", "lang", "n", F.explode("toks").alias("tok"))
@@ -755,12 +749,12 @@ def minhash_lsh_pairs_incremental(new_docs: DataFrame,
     from pyspark.storagelevel import StorageLevel
 
     rows_per_band = num_hashes // bands
-    sn = minhash_signatures(new_docs, num_hashes, shingle_n).persist(
+    sn = persist_for_query(
+        minhash_signatures(new_docs, num_hashes, shingle_n),
         StorageLevel.DISK_ONLY)
-    swap_persisted("minhash_sigs_inc_new", sn)
-    sc_ = minhash_signatures(corpus_docs, num_hashes, shingle_n).persist(
+    sc_ = persist_for_query(
+        minhash_signatures(corpus_docs, num_hashes, shingle_n),
         StorageLevel.DISK_ONLY)
-    swap_persisted("minhash_sigs_inc_corpus", sc_)
     band_keys = _minhash_band_keys(bands, rows_per_band)
     bn = sn.select(
         "doc_id", F.posexplode(band_keys).alias("band_id", "band_hash"))
@@ -833,16 +827,13 @@ def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5,
     # persisted parquet stage).
     from pyspark.storagelevel import StorageLevel
 
-    # bound the session's signature-cache footprint: repeated
-    # invocations (catalog sweeps, bench loops) would otherwise
-    # accumulate DISK_ONLY blocks until session end. The session-keyed
-    # slot releases the PREVIOUS call's cache (safe: lineage intact,
-    # unpersist only costs recomputation) and, unlike the old
-    # module-global list, never calls unpersist into a stopped
-    # SparkContext after a session restart.
-    sigs = minhash_signatures(documents, num_hashes, shingle_n).persist(
+    # the signatures live for the query: the next query releases them
+    # (repeated invocations never accumulate DISK_ONLY blocks), and
+    # after a session restart they are dropped without a call into the
+    # stopped SparkContext.
+    sigs = persist_for_query(
+        minhash_signatures(documents, num_hashes, shingle_n),
         StorageLevel.DISK_ONLY)
-    swap_persisted("minhash_sigs", sigs)
     band_keys = _minhash_band_keys(bands, rows_per_band)
     # the band self-join moves ONLY (doc_id, band_id, band_hash) — the
     # shingle arrays would otherwise ride every exploded band row
@@ -1031,13 +1022,9 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
     C(k,2) candidates in EVERY subset) or a too-small key space
     (raise ``n_blocks`` per Manku's tables). ``'ignore'`` /
     ``max_candidate_pairs=None`` runs regardless. The banding keys are
-    computed once (persisted slot) — the gate's histogram and the join
-    share the signature work."""
+    computed once (persisted for the query) — the gate's histogram and
+    the join share the signature work."""
     from itertools import combinations
-
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
 
     if on_budget_exceeded not in ("raise", "ignore"):
         raise ValueError(
@@ -1073,8 +1060,7 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
     chunked = sh.select(
         "doc_id", "sh",
         F.posexplode(F.array(*keys)).alias("chunk_id", "chunk_val"))
-    chunked = swap_persisted(
-        "simhash_chunked", chunked.persist(StorageLevel.MEMORY_AND_DISK))
+    chunked = persist_for_query(chunked)
     if max_candidate_pairs is not None and on_budget_exceeded != "ignore":
         mass = _keyed_candidate_mass_cached(
             chunked, ["chunk_id", "chunk_val"], "simhash")
@@ -1411,8 +1397,6 @@ def embedding_srp_pairs(embeddings: DataFrame,
     stay correct through the exact verify while the scale contract
     evaporated. A caller-supplied dim that disagrees fails fast.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if on_budget_exceeded not in ("raise", "ignore"):
         raise ValueError(
             f"on_budget_exceeded must be 'raise' or 'ignore', got "
@@ -1435,8 +1419,7 @@ def embedding_srp_pairs(embeddings: DataFrame,
         "vec_id",
         F.col("embedding").cast("array<double>").alias("_emb"))
     sigs = _srp_signatures(e, dim, nbits=nbits, band_bits=band_bits)
-    sigs = swap_persisted(
-        "srp_sigs", sigs.persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = persist_for_query(sigs)
     banded = sigs.select(
         "vec_id", "_emb",
         F.posexplode(F.col("_bands")).alias("band_id", "band_val"))
@@ -1855,25 +1838,18 @@ def winnow_pairs(documents: DataFrame, k: int = 10, w: int = 8,
     fingerprints leave the similarity universe entirely: the per-doc
     set sizes in the denominator count the PRUNED sets, so the
     coefficient stays a true overlap over the retained universe. The
-    fingerprint relation is computed ONCE (session-slot persisted)
+    fingerprint relation is computed ONCE (persisted for the query)
     and feeds the document-frequency filter, both sides of the
     equi-join, and the set sizes.
 
     Output: (doc_a, doc_b, n_shared, overlap) with doc_a < doc_b.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    fps = swap_persisted(
-        "winnow_fps",
-        winnow_fingerprints(documents, k, w)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    fps = persist_for_query(winnow_fingerprints(documents, k, w))
     rare = (fps.groupBy("fp")
             .agg(F.count(F.lit(1)).alias("_df"))
             .filter(F.col("_df") <= max_df)
             .select("fp"))
-    pruned = swap_persisted(
-        "winnow_fps_pruned",
-        fps.join(rare, "fp").persist(StorageLevel.MEMORY_AND_DISK))
+    pruned = persist_for_query(fps.join(rare, "fp"))
     sizes = pruned.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("_sz"))
     a, b = pruned.alias("a"), pruned.alias("b")

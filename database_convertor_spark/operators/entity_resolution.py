@@ -31,8 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import normalize_company_name
-from ..plans.persist_slots import swap_persisted
-from ..session import collect_within_budget
+from ..session import collect_within_budget, persist_for_query
 from ..functions.similarity import (
     levenshtein_similarity,
     sequence_ratio,
@@ -537,7 +536,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     Performance shape: normalization and tokenization are projected
     BELOW the join (once per input row, not once per candidate pair);
     the per-pair expression is one array_intersect + size algebra + one
-    levenshtein. The right side is persisted (session-slot-bounded)
+    levenshtein. The right side is persisted for the query
     before the gate's count so the count and the join read ONE scan of
     the dimension, not two.
     """
@@ -570,12 +569,9 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
             # persist the normalized dimension BEFORE counting so the
             # gate's count, the token join, and the rescue join all
             # read ONE materialization of the right side (the verdict's
-            # double-scan note); the session slot releases the previous
-            # call's cache, bounding footprint across catalog sweeps.
-            from pyspark.storagelevel import StorageLevel
-
-            rnorm = rnorm.persist(StorageLevel.MEMORY_AND_DISK)
-            swap_persisted("fuzzy_rescue_dim", rnorm)
+            # double-scan note); the next query releases it, bounding
+            # footprint across catalog sweeps.
+            rnorm = persist_for_query(rnorm)
             # The size gate's count doubles as the rescue dimension's
             # collect when the native rung will run (r11, guide §1.2 —
             # count-then-toPandas was two sequential jobs over the
@@ -607,9 +603,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
             # capped in this regime and its dropDuplicates already
             # shuffles the full candidate set, so a disk-backed persist
             # adds no asymptotic cost while halving the blocking work
-            pairs = swap_persisted(
-                "fuzzy_block_pairs",
-                pairs.persist(StorageLevel.MEMORY_AND_DISK))
+            pairs = persist_for_query(pairs)
         confidence, method = _ladder_score(pairs)
         scored = pairs.select(left_key, right_key,
                               confidence.alias("confidence"),
@@ -623,12 +617,9 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
             # anti-join's build side); every rescue rung consuming it
             # re-executes that chain from the scan (measured: 3 token
             # blocking passes per fuzzy_match_customers run). Persist
-            # once — session-slot-bounded, <= |left| rows of
-            # (key, name, tokens), same discipline as the dimension
-            # persist above.
-            residual = swap_persisted(
-                "fuzzy_residual",
-                residual.persist(StorageLevel.MEMORY_AND_DISK))
+            # once for the query, <= |left| rows of (key, name,
+            # tokens), same discipline as the dimension persist above.
+            residual = persist_for_query(residual)
             if (exact_rescue_limit and n_right <= exact_rescue_limit
                     and n_left * n_right <= max_rescue_pairs):
                 # exact regime: every residual left against the whole

@@ -214,7 +214,7 @@ def pagerank(pairs: DataFrame, damping: float = 0.85, n_iter: int = 5,
             prev.unpersist()
         prev = ranks
     # the final ranks frame is materialized in cache; the builder
-    # frames can release their slots (an evicted-final-cache recompute
+    # frames can be released (an evicted-final-cache recompute
     # would replay from source — correct, just cold)
     edges.unpersist()
     deg.unpersist()

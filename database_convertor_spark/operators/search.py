@@ -43,6 +43,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import persist_for_query
+
 
 def query_terms(query: str) -> list[str]:
     """Distinct, lowercased, sorted query terms — the deterministic
@@ -79,10 +81,7 @@ def bm25_search(documents: DataFrame, query: str,
     Reference analog: ES match-query search pages
     (api_clients.py:678-728); the scoring function is ES's own.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import tokens
-    from ..plans.persist_slots import swap_persisted
 
     terms = query_terms(query)
     m = len(terms)
@@ -103,8 +102,7 @@ def bm25_search(documents: DataFrame, query: str,
         "doc_id", F.coalesce(row, zero).alias("_s")).select(
         "doc_id", F.col("_s.dl").alias("_dl"),
         *[F.col(f"_s.tf{i}").alias(f"_tf{i}") for i in range(m)])
-    per_doc = swap_persisted(
-        "bm25_per_doc", per_doc.persist(StorageLevel.MEMORY_AND_DISK))
+    per_doc = persist_for_query(per_doc)
 
     gstats = per_doc.agg(
         F.count(F.lit(1)).cast("double").alias("_n"),
@@ -211,16 +209,13 @@ def tfidf_keywords(documents: DataFrame, k: int = 3) -> DataFrame:
     (doc_id, term, rank, tfidf), ties broken by term asc; empty
     documents yield no rows.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import tokens
-    from ..plans.persist_slots import swap_persisted
 
     tf = (documents.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("_tf")))
-    tf = swap_persisted("tfidf_tf", tf.persist(StorageLevel.MEMORY_AND_DISK))
+    tf = persist_for_query(tf)
     dl = tf.groupBy("doc_id").agg(F.sum("_tf").alias("_dl"))
     df_ = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("_df"))

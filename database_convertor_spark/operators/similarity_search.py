@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity
-from ..session import collect_within_budget, session_memo
+from ..session import collect_within_budget, persist_for_query, session_memo
 
 # brute_force_topk_numpy materializes the query set on the driver and
 # broadcasts it — the guard that keeps that contract from OOMing when
@@ -969,8 +969,8 @@ def pq_fit(corpus: DataFrame, m: int = 4, ks: int = 8, n_iter: int = 3,
             return _pq_iterations_local(
                 _vec_chunks(pdf["_v"], _arrow_batch_rows(spark)),
                 C, n_iter)
-    # ``pre_persisted``: the caller's input is already a persisted
-    # slot (the IVFADC residual frame) — a second .persist() of the
+    # ``pre_persisted``: the caller's input is already persisted for
+    # the query (the IVFADC residual frame) — a second .persist() of the
     # renamed projection would cache the same bytes twice (r11)
     if not pre_persisted:
         emb = emb.persist()
@@ -1312,8 +1312,8 @@ def ivfpq_fit_encode(corpus: DataFrame, n_cells: int = 8, m: int = 4,
     train — coarse Lloyd iterations, per-row residuals (the exact
     kmeans_assign arithmetic + HALF_UP 9dp round twin), PQ
     iterations — runs driver-local, so the build is ONE job plus the
-    lazy encode; the residual FRAME stays a distributed persist slot
-    that materializes inside the first consumer's job (the encode
+    lazy encode; the residual FRAME stays a distributed persist (for
+    the query) that materializes inside the first consumer's job (the encode
     scans the corpus — that never collects). Past the budget: one
     md5-init collect feeds both fits (init ordering is
     content-independent; the PQ init residuals are derived driver-side
@@ -1349,14 +1349,14 @@ def ivfpq_fit_encode(corpus: DataFrame, n_cells: int = 8, m: int = 4,
             _pq_init_books(_residual_init_vecs(local_init[:ks], coarse),
                            m),
             n_iter)
-        res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
+        res = _ivfpq_residuals(corpus, coarse)
     else:
         init = _md5_init_vecs(corpus, max(n_cells, ks))
         coarse, _ = kmeans_fit(corpus, k=n_cells, n_iter=n_iter,
                                init_vecs=init, local_rows_budget=0)
         coarse = [[round(x, 9) for x in c] for c in coarse]
         # the fit's persisted residuals feed the encode too
-        res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_fit")
+        res = _ivfpq_residuals(corpus, coarse)
         books = pq_fit(res, m=m, ks=ks, n_iter=n_iter,
                        init_vecs=_residual_init_vecs(init[:ks], coarse),
                        pre_persisted=True, local_rows_budget=0)
@@ -1378,18 +1378,13 @@ def _pq_init_books(init_vecs: list[list[float]], m: int) -> list:
     return [X0[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
 
 
-def _ivfpq_residuals(corpus: DataFrame, coarse: list,
-                     slot: str = "ivfpq_res") -> DataFrame:
+def _ivfpq_residuals(corpus: DataFrame, coarse: list) -> DataFrame:
     """(vec_id, cluster_id, embedding=9dp-rounded residual) under a
-    fixed coarse codebook. PERSISTED (session slot): the residual
+    fixed coarse codebook. PERSISTED for the query: the residual
     frame feeds every PQ sub-fit (m slices x n_iter passes), the
     encode pass, and the cell join — without the persist, each of
     those re-runs the assignment GEMM + corpus join from scratch
     (m+2 full corpus-residual computations where one suffices)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
-
     # carry_vec: assignment and vector come out of ONE corpus pass —
     # the former corpus.join(assign) shape re-scanned the corpus and
     # paid a sort-merge exchange to reunite a row with its own label.
@@ -1403,7 +1398,7 @@ def _ivfpq_residuals(corpus: DataFrame, coarse: list,
                                 f"cluster_id + 1), "
                                 f"(a, b) -> round(a - b, 9))")
                          .alias("embedding")))
-    return swap_persisted(slot, res.persist(StorageLevel.MEMORY_AND_DISK))
+    return persist_for_query(res)
 
 
 def ivfpq_encode_under(corpus: DataFrame, coarse: list,
@@ -1413,7 +1408,7 @@ def ivfpq_encode_under(corpus: DataFrame, coarse: list,
     at build time, arrivals are assigned + residual-encoded under
     them). Returns (vec_id, cell, codes) ready to append to the
     cell-partitioned codes table."""
-    res = _ivfpq_residuals(corpus, coarse, slot="ivfpq_res_under")
+    res = _ivfpq_residuals(corpus, coarse)
     return (pq_encode(res, books, carry_cols=("cluster_id",))
             .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import collect_within_budget, spread
+from ..session import collect_within_budget, persist_for_query, spread
 from ..functions.text import (
     detect_language,
     fingerprint,
@@ -220,22 +220,18 @@ def doc_lm_logprob(documents: DataFrame) -> DataFrame:
          word-count), then groupBy(doc_id) mean.
 
     The exploded token frame feeds BOTH passes, so it is persisted
-    (session-slot-bounded, same discipline as
-    ``cross_doc_span_signals``) — the corpus-wide tokenize+explode
-    scan runs once, not once per pass.
+    for the query (same discipline as ``cross_doc_span_signals``) —
+    the corpus-wide tokenize+explode scan runs once, not once per
+    pass.
 
     Output: (doc_id, n_tokens, avg_logprob) with avg_logprob = mean
     ln P(token) rounded to 4dp; empty docs carry NULL.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import tokens
-    from ..plans.persist_slots import swap_persisted
 
     toks = documents.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("_tok"))
-    toks = swap_persisted("lm_logprob_toks",
-                          toks.persist(StorageLevel.MEMORY_AND_DISK))
+    toks = persist_for_query(toks)
     freq = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_c"))
     total = freq.agg(F.sum("_c").cast("double").alias("_tot"))
     scored = (toks.join(freq, "_tok")
@@ -274,7 +270,7 @@ def doc_bigram_logprob(documents: DataFrame,
     row) and guarded by a size >= 2 ``when`` (slice needs a
     non-negative length; and ``sequence(1, 0)`` is DESCENDING in
     Spark, not empty). The exploded bigram frame persists once
-    (session slot) and feeds BOTH the bigram-frequency aggregate and
+    (for the query) and feeds BOTH the bigram-frequency aggregate and
     the scoring pass; frequencies join back on their own keys (all
     map-side-combining word-count shapes, AQE handles Zipf-head
     skew); the token-frequency table and corpus total come from the
@@ -284,16 +280,12 @@ def doc_bigram_logprob(documents: DataFrame,
     Output: (doc_id, n_bigrams, avg_bigram_logprob rounded 4dp).
     Reference has no analog (beyond-reference training-data operator).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import tokens
-    from ..plans.persist_slots import swap_persisted
 
     base = documents.select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("_ta"))
     toks = base.select("doc_id", F.explode("_ta").alias("_tok"))
-    toks = swap_persisted("bigram_toks",
-                          toks.persist(StorageLevel.MEMORY_AND_DISK))
+    toks = persist_for_query(toks)
     n = F.size("_ta")
     pairs = F.when(n >= 2, F.zip_with(
         F.slice("_ta", 1, n - 1),
@@ -304,8 +296,7 @@ def doc_bigram_logprob(documents: DataFrame,
             .select("doc_id", F.explode("_bg").alias("_b"))
             .select("doc_id", F.col("_b.w1").alias("_w1"),
                     F.col("_b.w2").alias("_w2")))
-    bigs = swap_persisted("bigram_bigs",
-                          bigs.persist(StorageLevel.MEMORY_AND_DISK))
+    bigs = persist_for_query(bigs)
     bfreq = bigs.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).alias("_cb"))
     ufreq = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_cu"))
     total = ufreq.agg(F.sum("_cu").cast("double").alias("_tot"))
@@ -351,7 +342,7 @@ def cross_doc_span_signals(documents: DataFrame,
     combine map-side; no distinct pass), the occurrence join is on
     the hash, the final roll-up on doc_id. The
     exploded+hashed window frame is referenced by BOTH the frequency
-    build and the probe side — it is persisted (session-slot-bounded)
+    build and the probe side — it is persisted for the query
     so the corpus-wide explode scan runs once, not twice. A doc
     shorter than ``window`` tokens
     contributes its whole text as one window — two short identical
@@ -360,10 +351,7 @@ def cross_doc_span_signals(documents: DataFrame,
 
     Output: (doc_id, n_windows, cross_dup_frac).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import md5_long, shingles
-    from ..plans.persist_slots import swap_persisted
 
     # explode_OUTER + isNotNull guard: a non-outer Generate infers
     # `size(shingles(text)) > 0` and pushes it below the spread
@@ -377,8 +365,7 @@ def cross_doc_span_signals(documents: DataFrame,
                  .alias("_w"))
          .filter(F.col("_w").isNotNull())
          .select("doc_id", md5_long(F.col("_w")).alias("_h")))
-    w = swap_persisted("cross_dup_spans_w",
-                       w.persist(StorageLevel.MEMORY_AND_DISK))
+    w = persist_for_query(w)
     # distinct-doc frequency >= 2 is min(doc) != max(doc): one
     # partial-aggregable pass instead of distinct + count (the
     # pre-distinct shuffle of every (doc, window) pair disappears)
@@ -410,7 +397,7 @@ def duplicated_spans(documents: DataFrame, window: int = 8) -> DataFrame:
     (gaps-and-islands over window starts).
 
     Shape: windows ride as 60-bit md5 hashes (the exploded frame is
-    persisted session-slot-bounded and read by both the
+    persisted for the query and read by both the
     first-occurrence aggregate and the probe join); min(struct) /
     count(distinct) per hash are partial-aggregable, so a million-way
     duplicated window combines map-side. The island merge is a window
@@ -424,10 +411,7 @@ def duplicated_spans(documents: DataFrame, window: int = 8) -> DataFrame:
     n_tokens) with 1-based inclusive token positions, span_id ordered
     by start within each doc.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import md5_long, shingles, token_count
-    from ..plans.persist_slots import swap_persisted
 
     # spread the explode+hash work before it runs: a few big input
     # splits (or one single-file partition) would otherwise hash every
@@ -459,8 +443,7 @@ def duplicated_spans(documents: DataFrame, window: int = 8) -> DataFrame:
          .filter(F.col("_w") != "")
          .select("doc_id", "_n", (F.col("_p") + 1).alias("_ws"),
                  md5_long(F.col("_w")).alias("_h")))
-    w = swap_persisted("dup_spans_w",
-                       w.persist(StorageLevel.MEMORY_AND_DISK))
+    w = persist_for_query(w)
     # "distinct docs >= 2" is min(doc) != max(doc) — three fully
     # partial-aggregable aggregates in ONE pass, no count-distinct
     # expand and no pre-distinct shuffle: a million-way duplicated
@@ -615,10 +598,7 @@ def top_terms_heavy_hitters(documents: DataFrame, k: int = 5,
 
     import pandas as pd
 
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import tokens
-    from ..plans.persist_slots import swap_persisted
 
     java_ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")
 
@@ -646,11 +626,10 @@ def top_terms_heavy_hitters(documents: DataFrame, k: int = 5,
                 for lang, d in summaries.items() for t in d]
         yield pd.DataFrame(rows, columns=["lang", "term"])
 
-    candidates = (documents.select("lang", "text")
-                  .mapInPandas(mg_partial, "lang string, term string")
-                  .distinct()
-                  .persist(StorageLevel.MEMORY_AND_DISK))
-    swap_persisted("top_terms_hh_candidates", candidates)
+    candidates = persist_for_query(
+        documents.select("lang", "text")
+        .mapInPandas(mg_partial, "lang string, term string")
+        .distinct())
     if candidates.count() > max_broadcast_candidates:
         # the summary outgrew any sane broadcast; every join strategy
         # from here shuffles raw tokens and loses to the exact path
@@ -658,10 +637,9 @@ def top_terms_heavy_hitters(documents: DataFrame, k: int = 5,
         return top_terms_per_lang(documents, k)
     exploded = documents.select(
         "lang", F.explode(tokens(F.lower(F.col("text")))).alias("term"))
-    counts = (exploded.join(F.broadcast(candidates), ["lang", "term"])
-              .groupBy("lang", "term").agg(F.count(F.lit(1)).alias("n"))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    swap_persisted("top_terms_hh_counts", counts)
+    counts = persist_for_query(
+        exploded.join(F.broadcast(candidates), ["lang", "term"])
+        .groupBy("lang", "term").agg(F.count(F.lit(1)).alias("n")))
     topk = _rank_topk(counts, k)
     totals = (token_stats_by_lang(documents)
               .select("lang", F.col("total_tokens").alias("_N")))
@@ -717,9 +695,8 @@ def dsir_importance_weights(documents: DataFrame,
     vocabulary (the hashing trick bounds both models to B counters no
     matter the corpus vocabulary — DSIR's core scalability move).
 
-    Distributed shape: ONE tokenize+explode scan (persisted,
-    session-slot bounded) feeds both count passes and the scoring
-    pass; each count pass is a partial-aggregable groupBy on the
+    Distributed shape: ONE tokenize+explode scan (persisted for the
+    query) feeds both count passes and the scoring pass; each count pass is a partial-aggregable groupBy on the
     bucket key (<= B distinct keys, Zipf heads combine map-side); the
     per-bucket log-ratio table is <= B rows and BROADCASTS into the
     scoring join, so the only corpus-sized shuffle is the final
@@ -732,10 +709,7 @@ def dsir_importance_weights(documents: DataFrame,
     ``select_top_quality``). Reference has no analog
     (beyond-reference training-data operator).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import md5_long, tokens
-    from ..plans.persist_slots import swap_persisted
 
     lam = float(smoothing)
     b_count = F.lit(float(num_buckets))
@@ -744,8 +718,7 @@ def dsir_importance_weights(documents: DataFrame,
         F.explode(tokens(F.lower(F.col("text")))).alias("_tok"))
     toks = toks.withColumn(
         "_b", F.pmod(md5_long(F.col("_tok")), F.lit(num_buckets)))
-    toks = swap_persisted("dsir_toks",
-                          toks.persist(StorageLevel.MEMORY_AND_DISK))
+    toks = persist_for_query(toks)
     raw = toks.groupBy("_b").agg(F.count(F.lit(1)).alias("_cr"))
     tgt = (toks.filter(F.col("_is_t"))
            .groupBy("_b").agg(F.count(F.lit(1)).alias("_ct")))
@@ -849,8 +822,8 @@ def naive_bayes_quality(documents: DataFrame,
       score(doc) = prior + sum over in-vocab token OCCURRENCES of w(t);
       out-of-vocab tokens contribute 0.
 
-    Distributed shape: ONE tokenize+explode scan (persisted,
-    session-slot bounded) feeds the count pass and the scoring pass;
+    Distributed shape: ONE tokenize+explode scan (persisted for the
+    query) feeds the count pass and the scoring pass;
     the count pass is a word-count-shaped partial-aggregable groupBy
     on the token key; the vocabulary cap is a TakeOrderedAndProject
     (top-k per partition, never a full vocabulary sort), persisted so
@@ -871,12 +844,7 @@ def naive_bayes_quality(documents: DataFrame,
     the trained model itself is a beyond-reference training-data
     operator.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import quality_score, tokens
-    from ..plans.persist_slots import swap_persisted
-
-    from ..session import spread
 
     # the per-doc quality_score is the heavy projection — spread a
     # single-file scan across the cluster before evaluating it (a
@@ -890,12 +858,9 @@ def naive_bayes_quality(documents: DataFrame,
     # second documents.select would re-scan the corpus and re-evaluate
     # quality_score per document (the r6 ADVICE items); the columnar
     # cache prunes _ta out of the narrow seed reads.
-    base = swap_persisted(
-        "nb_quality_base",
-        documents.select(
-            "doc_id", hq.alias("_hq"),
-            tokens(F.lower(F.col("text"))).alias("_ta"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    base = persist_for_query(documents.select(
+        "doc_id", hq.alias("_hq"),
+        tokens(F.lower(F.col("text"))).alias("_ta")))
     seed = base.select("doc_id", F.col("_hq").alias("seed_hq"))
     # the label and the token ARRAY are bound in a projection BELOW the
     # explode, then the bound array column explodes in a second select.
@@ -914,8 +879,7 @@ def naive_bayes_quality(documents: DataFrame,
     toks = (base.select("doc_id", "_hq",
                         F.explode_outer("_ta").alias("_tok"))
             .filter(F.col("_tok").isNotNull()))
-    toks = swap_persisted("nb_quality_toks",
-                          toks.persist(StorageLevel.MEMORY_AND_DISK))
+    toks = persist_for_query(toks)
     counts = (toks.groupBy("_tok")
               .agg(F.count(F.lit(1)).alias("_n"),
                    F.sum(F.when(F.col("_hq"), 1).otherwise(0))
@@ -924,9 +888,7 @@ def naive_bayes_quality(documents: DataFrame,
              .orderBy(F.col("_n").desc(), "_tok").limit(vocab_cap))
     # <= vocab_cap rows, read twice (stats aggregate + model
     # projection): persisting makes the token groupBy + top-k run once
-    vocab = swap_persisted(
-        "nb_quality_vocab",
-        vocab.persist(StorageLevel.MEMORY_AND_DISK))
+    vocab = persist_for_query(vocab)
     stats = vocab.agg(F.sum("_np").cast("double").alias("_tp"),
                       F.sum(F.col("_n") - F.col("_np")).cast("double")
                       .alias("_tn"),
@@ -964,17 +926,13 @@ def _bpe_word_counts(documents: DataFrame) -> DataFrame:
     table grows ~Heaps'-law sub-linearly in the corpus (~3e7 distinct
     alphabetic words at a 100 TB web corpus for K~30, beta~0.45) —
     orders below the corpus at any realistic scale."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
     from ..functions.text import tokens
 
     wc = (spread(documents)
           .select(F.explode(tokens(F.lower(F.col("text")))).alias("w"))
           .filter(F.col("w").rlike("^[a-z]+$"))
           .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
-    return swap_persisted(
-        "bpe_word_counts", wc.persist(StorageLevel.MEMORY_AND_DISK))
+    return persist_for_query(wc)
 
 
 def _gpt2_bytes_to_unicode() -> dict[int, str]:
@@ -1028,17 +986,12 @@ def _bpe_pretoken_counts(documents: DataFrame) -> DataFrame:
     (pretoken, cnt) and persisted. Same Heaps'-law sub-linearity —
     the pre-token vocabulary of a 100 TB web corpus is orders below
     the corpus."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
-
     wc = (spread(documents)
           .select(F.explode(
               F.regexp_extract_all(F.col("text"),
                                    F.lit(GPT2_PRETOKEN_RE), 0)).alias("w"))
           .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
-    return swap_persisted(
-        "bpe_pretoken_counts", wc.persist(StorageLevel.MEMORY_AND_DISK))
+    return persist_for_query(wc)
 
 
 def _fast_bpe(word_counts, n_merges: int, symbolizer=None):

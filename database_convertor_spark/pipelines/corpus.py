@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import gopher_passes, quality_score, tokens
 from ..operators import components, curation, dedup
+from ..session import persist_for_query
 
 
 def curate_corpus(documents: DataFrame, threshold: float = 0.5,
@@ -47,15 +48,9 @@ def curate_corpus(documents: DataFrame, threshold: float = 0.5,
     # prepare_training_corpus got in r10): it feeds BOTH sides of the
     # pair self-join (materialized inside the components checkpoint)
     # and the final anti-join, each of which otherwise re-runs the
-    # gopher predicate from a fresh scan. Slot-bounded per session.
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
-
-    kept = swap_persisted(
-        "curate_kept",
-        documents.filter(gopher_passes(F.col("text")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    # gopher predicate from a fresh scan. Released when the next query
+    # starts.
+    kept = persist_for_query(documents.filter(gopher_passes(F.col("text"))))
     # budget-estimate on the raw scan: the filtered frame would re-run
     # the gopher predicate for the gate's histogram, and the raw
     # histogram upper-bounds the filtered one (same n_chars band key)
@@ -261,16 +256,9 @@ def prepare_training_corpus(documents: DataFrame, *,
     # — without the persist each consumer re-runs
     # gopher+redact+line-dedup from the scan (~2.6 s per re-execution
     # profiled at sf0.1; A/B of the full query: 10.6 s -> 7.2 s).
-    # Slot-bounded (one cached frame per session slot, released on the
-    # next different-plan swap) so repeated invocations never
-    # accumulate executor cache
-    from pyspark.storagelevel import StorageLevel
-
-    from ..plans.persist_slots import swap_persisted
-
-    kept = swap_persisted(
-        "training_pipeline_kept",
-        kept.persist(StorageLevel.MEMORY_AND_DISK))
+    # Released when the next query starts, so repeated invocations
+    # never accumulate executor cache
+    kept = persist_for_query(kept)
     # budget-estimate on the raw scan, not the multi-stage `kept`
     # sub-plan (the gate's one histogram aggregate would otherwise
     # eagerly execute the whole hygiene chain an extra time); raw

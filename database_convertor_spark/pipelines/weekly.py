@@ -30,11 +30,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.cleaning import normalize_company_name
 from ..operators.entity_resolution import fuzzy_join, is_likely_individual
-from ..plans.persist_slots import swap_persisted
+from ..session import persist_for_query
 
 
 @dataclass
@@ -103,12 +102,12 @@ def run_weekly_pipeline(discovered: DataFrame, existing_applications: DataFrame,
         broadcast_right=broadcast_companies)
     # Persisted before the stats action, which fills the cache: a caller
     # materializing res.matches reads that one evaluation instead of
-    # re-running normalize, cross join, ladder and argmax. A write that
-    # refreshes a source path (merge_upsert into `companies`) makes
-    # Spark rebuild the entry, so matches read after it reflect the new
-    # state. The session slot releases the previous run's matches.
-    matches = swap_persisted(
-        "weekly_matches", matches.persist(StorageLevel.MEMORY_AND_DISK))
+    # re-running normalize, cross join, ladder and argmax. The matches
+    # live until the next query starts: an Engine call in between (an
+    # upsert, say) releases them first, so a later merge_upsert's
+    # refreshByPath has no cache entry over the path to re-plan. Matches
+    # read after that are recomputed against the table as it is then.
+    matches = persist_for_query(matches)
 
     # Stage 9: metrics in ONE multi-aggregate job (A12); the reference
     # mutates a counter dict per row — here counts are facts about the

@@ -40,6 +40,7 @@ from ..operators import (
     text_analysis,
 )
 from ..pipelines import corpus as corpus_pipeline
+from ..session import new_query
 from ..sources.readers import read_table
 
 
@@ -81,7 +82,13 @@ _SPECS: list[QuerySpec] = []
 
 
 def _add(name: str, builder, oracle: str | None, survey_ids: str, desc: str):
-    _SPECS.append(QuerySpec(name, builder, oracle, survey_ids, desc))
+    """Register a query; its builder starts a new query, so what the
+    previous query persisted is released before this one builds."""
+    def start_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        new_query()
+        return builder(spark, sf_dir)
+
+    _SPECS.append(QuerySpec(name, start_query, oracle, survey_ids, desc))
 
 
 # ===================================================================== A6 / Q1
@@ -5454,7 +5461,7 @@ _add(
 # (3) [RETIRED in r9 — every catalog entry now carries a DuckDB
 # oracle; the rule existed because a windowed rows-only row recorded
 # err="no_oracle", which read as a failure it was not];
-# (4) remaining slots rotate hard-green veterans on normal cadence.
+# (4) remaining places rotate hard-green veterans on normal cadence.
 #
 # Round 8:
 #   - NEW: doc_hybrid_search_indexed (index-backed hybrid retrieval —
@@ -5477,7 +5484,7 @@ _add(
 #     sf10 probe measures it); ann_ivfpq_topk windows because its
 #     oracle generator was refactored into the shared chain (output
 #     proven byte-identical, re-verified anyway);
-#   - remaining slots: the r7-pushed veterans return on rotation
+#   - remaining places: the r7-pushed veterans return on rotation
 #     (ann_pq_topk, ann_pq_rerank, doc_bigram_logprob,
 #     benchmark_contamination_fraction, corpus_source_cap,
 #     corpus_vocab_stats, doc_cross_dup_spans, top_terms_two_pass,
@@ -5532,7 +5539,7 @@ _add(
 #     user_sessions, event_funnel, distinct_customer_priorities,
 #     order_stats_summary, top_orders_per_customer;
 #   - the r6-pushed veterans return on rotation; dedup_semantic
-#     (sf10-probed this round) keeps its slot; dedup_simhash windows
+#     (sf10-probed this round) keeps its place; dedup_simhash windows
 #     because its banding changed in-round (Manku 3-of-6 multi-block
 #     keys after the sf10 probe caught the 22x regime — results
 #     banding-invariant, property-tested), displacing

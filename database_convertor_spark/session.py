@@ -10,8 +10,10 @@ and re-splits skewed partitions on a 1000-executor cluster tomorrow.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+from pyspark.storagelevel import StorageLevel
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -116,8 +118,6 @@ def session_memo(maxsize: int):
     entry (a memoized Column or UDF wraps handles into the JVM that
     built it), and at most ``maxsize`` entries are kept, oldest out
     first. With no live context it just computes."""
-    import threading
-
     entries: dict = {}
     owner = [None]
     lock = threading.Lock()
@@ -141,3 +141,35 @@ def session_memo(maxsize: int):
         return value
 
     return memo
+
+
+# frames persisted by the running query, keyed by the context identity
+# they were persisted under
+_QUERY_FRAMES: dict = {}
+_QUERY_LOCK = threading.Lock()
+
+
+def persist_for_query(df, level=StorageLevel.MEMORY_AND_DISK):
+    """Persist ``df`` for the running query: it stays cached through the
+    query's build and its sink, and the next ``new_query()`` releases
+    it. Returns the persisted frame."""
+    df = df.persist(level)
+    ctx = _context_identity()
+    with _QUERY_LOCK:
+        _QUERY_FRAMES.setdefault(ctx, []).append(df)
+    return df
+
+
+def new_query() -> None:
+    """Start a query: unpersist every frame ``persist_for_query``
+    recorded under the live context, newest first (a frame cached over
+    an earlier one goes before its base, so Spark never re-plans it).
+    Frames recorded under a stopped context are dropped without a call
+    into its JVM. Releasing a frame some caller still holds costs a
+    recompute, never a wrong answer: its lineage is intact."""
+    ctx = _context_identity()
+    with _QUERY_LOCK:
+        frames = _QUERY_FRAMES.pop(ctx, [])
+        _QUERY_FRAMES.clear()
+    for df in reversed(frames):
+        df.unpersist()

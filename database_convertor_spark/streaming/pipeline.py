@@ -17,6 +17,10 @@ windows. Spark-natively:
 - Trigger.AvailableNow = the scheduled weekly micro-batch pattern:
   drain everything new, checkpoint, exit (crash recovery T6 is the
   checkpoint).
+
+Each foreachBatch callback starts with ``new_query()``: a micro-batch
+is one query, so what the previous batch persisted is released before
+this one runs.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA_SCHEMAS
+from ..session import new_query
 
 # T1: LinkedHelper event-type -> connection-status mapping
 # (webhook_handler.py:30-88), transposed to the driver's event types.
@@ -79,6 +84,7 @@ def run_events_stream(spark: SparkSession, sf_dir: str, out_path: str,
               .withColumn("status", event_status_mapping(F.col("event_type"))))
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        new_query()
         merge_upsert(spark, out_path, batch_df, keys=["event_id"])
 
     q = (stream.writeStream.foreachBatch(sink)
@@ -317,6 +323,7 @@ def run_ingest_stream(spark: SparkSession, sf_dir: str,
             pair_path = "lsh"
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
+        new_query()
         sp = batch.sparkSession
         sp.catalog.refreshByPath(corpus_path)
         corpus = sp.read.schema(TESTDATA_SCHEMAS["documents"]).parquet(
@@ -414,6 +421,7 @@ def run_index_ingest_stream(spark: SparkSession, landing_dir: str,
               .dropDuplicates(["vec_id"]))
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        new_query()
         # RE-INGESTION guard: dropDuplicates dedups only within this
         # stream — a vec_id already IN the index would append a
         # duplicate code row that surfaces as a duplicate neighbor in
@@ -549,6 +557,7 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
               .dropDuplicates(["doc_id"]))
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        new_query()
         # fresh snapshot per batch: earlier batches' appends count
         spark.catalog.refreshByPath(manifest_path)
         indexed = spark.read.parquet(manifest_path)

@@ -183,14 +183,14 @@ def test_nb_quality_scans_corpus_exactly_once(spark):
     """Round-6 ADVICE closure: naive_bayes_quality evaluates the heavy
     quality_score projection on EXACTLY ONE corpus scan. Structural
     proof on the optimized logical plans: the output reads only caches
-    (no direct parquet relation), and of the operator's persist slots
-    exactly one — the base frame — reads the corpus; the token stream
-    derives from that cache, so quality_score has a single evaluating
-    subtree."""
+    (no direct parquet relation), and of the frames the operator
+    persists for the query exactly one — the base frame — reads the
+    corpus; the token stream derives from that cache, so quality_score
+    has a single evaluating subtree."""
+    from database_convertor_spark import session
     from database_convertor_spark.operators.text_analysis import (
         naive_bayes_quality,
     )
-    from database_convertor_spark.plans import persist_slots
     from database_convertor_spark.sources.readers import read_table
 
     docs = read_table(spark, SF_SMALL, "documents")
@@ -201,12 +201,12 @@ def test_nb_quality_scans_corpus_exactly_once(spark):
         "output must read the corpus only through the persisted base"
     assert any("InMemoryRelation" in n for n in names)
 
-    with persist_slots._LOCK:
-        slots = {name: df for (sess, name), df in
-                 persist_slots._SLOTS.items()
-                 if name.startswith("nb_quality")}
-    assert set(slots) == {"nb_quality_base", "nb_quality_toks",
-                          "nb_quality_vocab"}
+    # the fixture started a new query, so the record holds exactly
+    # this call's frames, in persist order: base, toks, vocab
+    with session._QUERY_LOCK:
+        frames = [df for dfs in session._QUERY_FRAMES.values()
+                  for df in dfs]
+    assert len(frames) == 3
 
     def _physical_node_names(node):
         """Walk a cached SparkPlan; InMemoryTableScanExec is a leaf,
@@ -220,38 +220,51 @@ def test_nb_quality_scans_corpus_exactly_once(spark):
             yield from _physical_node_names(node.children().apply(i))
 
     direct_readers = []
-    for name, df in sorted(slots.items()):
+    for name, df in zip(["base", "toks", "vocab"], frames):
         imr = df._jdf.queryExecution().optimizedPlan()
-        # each slot is self-cached: its optimized plan IS its own
+        # each frame is self-cached: its optimized plan IS its own
         # InMemoryRelation; the computation lives in cachedPlan()
         assert imr.getClass().getSimpleName() == "InMemoryRelation"
         if any("FileSourceScan" in n for n in
                _physical_node_names(imr.cachedPlan())):
             direct_readers.append(name)
-    assert direct_readers == ["nb_quality_base"], \
-        f"only the base slot may scan the corpus, got {direct_readers}"
+    assert direct_readers == ["base"], \
+        f"only the base frame may scan the corpus, got {direct_readers}"
     out.limit(1).collect()   # the plan executes
 
 
-def test_swap_persisted_survives_same_plan_reinvocation(spark):
+def test_persist_for_query_survives_same_plan_reinvocation(spark):
     """Regression (r7): CacheManager dedups cache entries by canonical
     plan, so invoking an operator twice on the same input makes the
-    slot swap's release of the previous occupant point at the SHARED
-    entry — without the same-plan guard the second call silently ran
-    uncached (every consumer re-scanning; bench min-of-2 second passes
-    included). Both invocations must read through InMemoryRelation."""
+    second call's persist share the first call's entry — releasing the
+    first call's frame would silently un-cache the second (every
+    consumer re-scanning). Both invocations must read through
+    InMemoryRelation, within one query and across a ``new_query()``
+    (which releases the shared entry BEFORE the second persist)."""
+    from pyspark.storagelevel import StorageLevel
+
+    from database_convertor_spark import session
     from database_convertor_spark.operators.text_analysis import (
         naive_bayes_quality,
     )
     from database_convertor_spark.sources.readers import read_table
 
     docs = read_table(spark, SF_SMALL, "documents")
-    for _ in range(2):
-        out = naive_bayes_quality(docs)
-        names = list(_logical_node_names(
-            out._jdf.queryExecution().optimizedPlan()))
-        assert not any("LogicalRelation" in n for n in names)
-        assert any("InMemoryRelation" in n for n in names)
+    for between in (lambda: None, session.new_query):
+        for i in range(2):
+            if i:
+                between()
+            out = naive_bayes_quality(docs)
+            names = list(_logical_node_names(
+                out._jdf.queryExecution().optimizedPlan()))
+            assert not any("LogicalRelation" in n for n in names)
+            assert any("InMemoryRelation" in n for n in names)
+        # the second call's persisted frames (base, toks, vocab)
+        with session._QUERY_LOCK:
+            frames = [df for dfs in session._QUERY_FRAMES.values()
+                      for df in dfs][-3:]
+        assert [df.storageLevel for df in frames] \
+            == [StorageLevel.MEMORY_AND_DISK] * 3
 
 
 def test_orders_page_keyset_plan_and_contents(spark):

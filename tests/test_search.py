@@ -555,3 +555,66 @@ def test_hybrid_indexed_many_matches_single(spark, tmp_path):
                     top_k=25, candidates=50, nprobe=2,
                     shortlist=60).collect()]
         assert got.get(qi, []) == want, q
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from database_convertor_spark.functions.text import tokens
+from database_convertor_spark.operators.search import land_text_index
+from database_convertor_spark.session import get_spark
+from database_convertor_spark.sources.readers import read_table
+
+sf_dir, out = sys.argv[1], sys.argv[2]
+marker = os.path.join(out, "failed")
+spark = get_spark("retry", master="local[4,2]", shuffle_partitions=4)
+docs = read_table(spark, sf_dir, "documents")
+
+@F.udf("boolean")
+def fail_first_attempt(doc_id):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(marker, "a").close()
+        raise RuntimeError("injected task failure")
+    return True
+
+stats = land_text_index(docs.filter(fail_first_attempt("doc_id")),
+                        os.path.join(out, "index"), n_buckets=8)
+n = docs.select(F.size(tokens(F.lower(F.col("text")))).alias("n"))
+row = n.agg(F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n").alias("sumdl"),
+            F.sum((F.col("n") > 0).cast("long")).alias("nd")).first()
+print(json.dumps({
+    "failed": os.path.exists(marker),
+    "sidecar": [stats["n_docs"], stats["sumdl"],
+                stats["n_docs"] - stats["n_tokenless"]],
+    "recount": [row.n_docs, row.sumdl, row.nd]}))
+spark.stop()
+"""
+
+
+def test_land_text_index_stats_exact_under_task_retry(tmp_path):
+    """The sidecar's n_docs, sumdl and nd are observed on the landing
+    writes (accumulator-backed): under local[4,2] with partition 0's
+    first attempt failing in every job that reads the input, they
+    still equal an exact recount. Runs in its own interpreter so the
+    suite's shared session keeps its master."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from .conftest import SF_SMALL
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root + os.pathsep
+               + os.environ.get("PYTHONPATH", ""),
+               SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, SF_SMALL, str(tmp_path)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["failed"], "the injected failure never fired"
+    assert out["sidecar"] == out["recount"]

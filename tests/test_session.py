@@ -1,6 +1,8 @@
-"""The two session helpers every gate and memo goes through:
-``collect_within_budget`` (the size probe that doubles as the collect)
-and ``session_memo`` (get-or-compute scoped to the live SparkContext)."""
+"""The session helpers every gate, memo and persisted intermediate
+goes through: ``collect_within_budget`` (the size probe that doubles
+as the collect), ``session_memo`` (get-or-compute scoped to the live
+SparkContext) and ``persist_for_query`` / ``new_query`` (a persisted
+intermediate lives until the next query starts)."""
 
 from __future__ import annotations
 
@@ -12,6 +14,8 @@ import sys
 from database_convertor_spark import session
 from database_convertor_spark.session import (
     collect_within_budget,
+    new_query,
+    persist_for_query,
     session_memo,
 )
 
@@ -153,6 +157,86 @@ def test_session_memo_cleared_by_new_context(monkeypatch):
     assert memo("k", lambda: "new") == "new"
     ctx[0] = None                                 # no live context
     assert memo("k", lambda: "bare") == "bare"
+
+
+# ------------------------------------------- persist_for_query / new_query
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_next_query_releases_previous_intermediates(spark):
+    """Building the next catalog query releases what the previous one
+    persisted: after doc_nb_quality and then pricing_summary the
+    CacheManager is empty. Fails at the parent commit, where
+    doc_nb_quality's three frames stayed cached between queries."""
+    from database_convertor_spark.plans.catalog import CATALOG
+
+    from .conftest import SF_SMALL
+
+    spark.catalog.clearCache()
+    CATALOG["doc_nb_quality"].builder(spark, SF_SMALL).collect()
+    assert not _cache_is_empty(spark)
+    CATALOG["pricing_summary"].builder(spark, SF_SMALL).collect()
+    assert _cache_is_empty(spark)
+
+
+def test_persists_within_one_query_do_not_evict_each_other(spark):
+    """Two weekly runs in one query, on different inputs, both keep
+    their matches cached. Fails at the parent commit, where the second
+    run evicted the first run's matches."""
+    from pyspark.storagelevel import StorageLevel
+
+    from database_convertor_spark.pipelines.weekly import (
+        run_weekly_pipeline,
+    )
+
+    discovered = spark.createDataFrame(
+        [("camden", "APP/1", "Barratt Homes Limited", None),
+         ("camden", "APP/2", "Taylor Wimpey PLC", None)],
+        "borough string, reference string, applicant_name string, "
+        "agent_name string")
+    existing = spark.createDataFrame([], "borough string, reference string")
+    companies = spark.createDataFrame(
+        [(101, "BARRATT HOMES LIMITED"), (102, "TAYLOR WIMPEY PLC")],
+        ["company_id", "company_name"])
+    first = run_weekly_pipeline(discovered, existing, companies)
+    second = run_weekly_pipeline(discovered, existing, companies.limit(1))
+    assert first.matches.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert second.matches.storageLevel == StorageLevel.MEMORY_AND_DISK
+
+
+class _Frame:
+    """Stands in for a DataFrame without a JVM: records whether it was
+    unpersisted."""
+
+    def __init__(self):
+        self.unpersisted = False
+
+    def persist(self, level):
+        return self
+
+    def unpersist(self):
+        self.unpersisted = True
+
+
+def test_new_query_drops_stopped_context_frames_without_jvm_call(
+        monkeypatch):
+    """Frames persisted under a context that has since stopped are
+    dropped from the record, never unpersisted; frames of the live
+    context are unpersisted. (At the parent commit neither function
+    exists.)"""
+    ctx = [("app-1", 100)]
+    monkeypatch.setattr(session, "_context_identity", lambda: ctx[0])
+    monkeypatch.setattr(session, "_QUERY_FRAMES", {})
+    dead = persist_for_query(_Frame())
+    ctx[0] = ("app-2", 200)                       # a restarted session
+    live = persist_for_query(_Frame())
+    new_query()
+    assert not dead.unpersisted
+    assert live.unpersisted
+    assert session._QUERY_FRAMES == {}
 
 
 _RESTART_SCRIPT = """

@@ -864,7 +864,7 @@ def test_ivfpq_driver_init_matches_cluster_residuals(spark):
     coarse, _ = kmeans_fit(emb, k=n_cells, n_iter=3, init_vecs=init)
     coarse = [[round(x, 9) for x in c] for c in coarse]
     got = _residual_init_vecs(init[:ks], coarse)
-    res = _ivfpq_residuals(emb, coarse, slot="test_res_init")
+    res = _ivfpq_residuals(emb, coarse)
     want = [list(r._v) for r in
             (res.select(F.col("vec_id").alias("_id"),
                         F.col("embedding").alias("_v"),
@@ -1016,26 +1016,25 @@ def test_ivfpq_local_fit_matches_distributed(spark):
 
 def test_ivfpq_past_budget_builds_residuals_once(spark, monkeypatch):
     """The past-budget IVFADC build encodes from the residual frame its
-    PQ fit trained on — one residual build, not a second one that
-    takes over the fit's persist slot — and the codes are those of an
-    encode over freshly built residuals."""
+    PQ fit trained on — one residual build, not a second one — and
+    the codes are those of an encode over freshly built residuals."""
     from database_convertor_spark.operators import similarity_search as ss
 
     built = []
     orig = ss._ivfpq_residuals
 
-    def counting(*a, **k):
-        built.append(k.get("slot"))
-        return orig(*a, **k)
+    def counting(corpus, coarse):
+        built.append(coarse)
+        return orig(corpus, coarse)
 
     monkeypatch.setattr(ss, "_ivfpq_residuals", counting)
     emb = read_table(spark, SF_SMALL, "embeddings")
     coarse, books, codes = ss.ivfpq_fit_encode(
         emb, n_cells=8, m=4, ks=8, n_iter=3, local_rows_budget=0)
     got = sorted((r.vec_id, r.cell, list(r.codes)) for r in codes.collect())
-    assert built == ["ivfpq_res_fit"]
+    assert built == [coarse]
 
-    res = orig(emb, coarse, slot="ivfpq_res_fit")
+    res = orig(emb, coarse)
     want = (ss.pq_encode(res, books, carry_cols=("cluster_id",))
             .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
     assert got == sorted((r.vec_id, r.cell, list(r.codes))

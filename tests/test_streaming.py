@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from database_convertor_spark.operators.relational import hourly_event_rollup
@@ -125,18 +126,46 @@ def test_ingest_stream_admits_no_duplicates(spark, tmp_path):
     """Streaming twin of the incremental ingest: after draining the
     document backlog in micro-batches, the accumulated corpus must
     contain zero near-dup pairs — each batch deduped internally AND
-    against everything admitted before it."""
+    against everything admitted before it. Each micro-batch is one
+    query, so after the drain the session holds no more persisted
+    frames than one ``ingest_documents`` call records."""
+    from database_convertor_spark import session
     from database_convertor_spark.operators.dedup import ngram_jaccard_pairs
+    from database_convertor_spark.pipelines.corpus import ingest_documents
     from database_convertor_spark.sources.readers import read_table
     from database_convertor_spark.streaming.pipeline import run_ingest_stream
 
-    corpus = run_ingest_stream(
-        spark, SF_SMALL, str(tmp_path / "ckpt_ingest"),
-        str(tmp_path / "corpus"))
-    n_in = read_table(spark, SF_SMALL, "documents").count()
+    def recorded():
+        with session._QUERY_LOCK:
+            return sum(len(v) for v in session._QUERY_FRAMES.values())
+
+    ckpt = tmp_path / "ckpt_ingest"
+    corpus = run_ingest_stream(spark, SF_SMALL, str(ckpt),
+                               str(tmp_path / "corpus"))
+    batches = [f for f in os.listdir(ckpt / "commits") if f.isdigit()]
+    assert len(batches) >= 2                # micro-batches ran
+    after_stream = recorded()
+    docs = read_table(spark, SF_SMALL, "documents")
+    session.new_query()
+    ingest_documents(docs, corpus.limit(0), pair_path="exact").collect()
+    assert after_stream <= recorded()
+
+    n_in = docs.count()
     n_out = corpus.count()
     assert 0 < n_out < n_in                 # admitted some, dropped some
     assert ngram_jaccard_pairs(corpus).count() == 0
+
+    # the exact pair path persists nothing for the query; the routed
+    # (MinHash-LSH) path persists both sides' signatures, so the same
+    # bound there is not trivially zero
+    with pytest.warns(UserWarning, match="MinHash-LSH"):
+        run_ingest_stream(spark, SF_SMALL, str(tmp_path / "ckpt_lsh"),
+                          str(tmp_path / "corpus_lsh"), max_block_pairs=0,
+                          on_budget_exceeded="route")
+    after_stream = recorded()
+    session.new_query()
+    ingest_documents(docs, corpus.limit(0), pair_path="lsh").collect()
+    assert 0 < after_stream <= recorded()
 
 
 def test_index_ingest_stream_extends_landed_ann_index(spark, tmp_path):

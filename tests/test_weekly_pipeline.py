@@ -119,15 +119,16 @@ def test_weekly_matches_persisted_and_agree_with_stats(spark):
         {r.applicant_key for r in rows})
 
 
-def test_weekly_second_run_releases_first_matches(spark):
-    """The session slot holds one run's matches: a later run on other
-    inputs unpersists the earlier run's frame."""
+def test_weekly_second_run_releases_first_matches(spark, tmp_path):
+    """Each Engine call is one query: a later weekly run on other
+    inputs starts by unpersisting the earlier run's matches."""
     from pyspark.storagelevel import StorageLevel
 
-    first = run_weekly_pipeline(_discovered(spark), _existing(spark),
-                                _companies(spark))
+    from database_convertor_spark.api import Engine
+
+    eng = Engine(spark, str(tmp_path / "warehouse"))
+    first = eng.run_weekly(_discovered(spark), _companies(spark))
     assert first.matches.storageLevel != StorageLevel.NONE
-    second = run_weekly_pipeline(_discovered(spark), _existing(spark),
-                                 _companies(spark).limit(2))
+    second = eng.run_weekly(_discovered(spark), _companies(spark).limit(2))
     assert first.matches.storageLevel == StorageLevel.NONE
     assert second.matches.storageLevel == StorageLevel.MEMORY_AND_DISK
