@@ -16,6 +16,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_memo
+
 
 def levenshtein_similarity(a: Column, b: Column) -> Column:
     """1 - levenshtein/max(len). Native expression (C20); the reference
@@ -50,20 +52,32 @@ def token_jaccard_with_subset_boost(a_tokens: Column, b_tokens: Column) -> Colum
     return F.least(boosted, F.lit(1.0))
 
 
-@F.pandas_udf(T.DoubleType())
-def sequence_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
+def _make_sequence_ratio_udf():
+    @F.pandas_udf(T.DoubleType())
+    def sequence_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
+        from difflib import SequenceMatcher
+
+        def ratio(x, y):
+            if x is None or y is None:
+                return 0.0
+            return SequenceMatcher(None, x, y).ratio()
+
+        return pd.Series([ratio(x, y) for x, y in zip(a, b)])
+
+    return sequence_ratio
+
+
+# one kernel per session: a UDF kept past a session restart reports
+# its accumulator updates to the dead context
+_sequence_ratio_memo = session_memo(1)
+
+
+def sequence_ratio(a: Column, b: Column) -> Column:
     """difflib.SequenceMatcher.ratio() — exact port of the reference's
     order-sensitive similarity (applicant_processor.py:160-175, C21).
     Vectorized via Arrow; keep off the hot path (use levenshtein_similarity
     for blocking-scale comparisons, this for final scoring only)."""
-    from difflib import SequenceMatcher
-
-    def ratio(x, y):
-        if x is None or y is None:
-            return 0.0
-        return SequenceMatcher(None, x, y).ratio()
-
-    return pd.Series([ratio(x, y) for x, y in zip(a, b)])
+    return _sequence_ratio_memo(None, _make_sequence_ratio_udf)(a, b)
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:

@@ -226,23 +226,31 @@ def shingles(col: Column, n: int = 3) -> Column:
                   ).otherwise(F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " ")))
 
 
-@F.pandas_udf(T.StringType())
-def _nfc_udf(s: pd.Series) -> pd.Series:
-    import unicodedata
+def _make_nfc_udf():
+    @F.pandas_udf(T.StringType())
+    def nfc(s: pd.Series) -> pd.Series:
+        import unicodedata
 
-    return s.map(lambda x: None if x is None
-                 else unicodedata.normalize("NFC", x))
+        return s.map(lambda x: None if x is None
+                     else unicodedata.normalize("NFC", x))
+
+    return nfc
+
+
+# one NFC kernel per session: a UDF kept past a session restart
+# reports its accumulator updates to the dead context
+_nfc_udf_memo = session_memo(1)
 
 
 def nfc_normalize(col: Column) -> Column:
     """Unicode NFC normalization (compose combining sequences:
     'e' + U+0301 -> 'é'). Spark has no built-in normalizer, so this is
     an Arrow-batched pandas UDF — the one legitimately-Python stage of
-    text normalization (per-codepoint tables), defined once at module
-    scope (decorating per call would re-inspect hints and re-pickle
-    the closure for every plan built). ASCII-only batches pass through
+    text normalization (per-codepoint tables), built once per session
+    (decorating per call would re-inspect hints and re-pickle the
+    closure for every plan built). ASCII-only batches pass through
     allocation-free in CPython (NFC of ASCII is identity)."""
-    return _nfc_udf(col)
+    return _nfc_udf_memo(None, _make_nfc_udf)(col)
 
 
 def normalize_text_for_training(col: Column) -> Column:

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity, token_jaccard
-from ..session import persist_for_query, session_memo, spread
+from ..session import pair_budget, persist_for_query, session_memo, spread
 from ..functions.text import (
     HASH_PRIME,
     MINHASH_A,
@@ -120,12 +120,14 @@ def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
 _pair_mass_memo = session_memo(64)
 
 
-def _session_plan_cached(frame: DataFrame, tag, compute) -> float:
-    """Gate estimates memoized per session on the input's analyzed-plan
-    semanticHash + a caller tag. ``compute`` is the thunk that runs
-    the (one) histogram job on a miss."""
+def _session_plan_cached(frames: tuple[DataFrame, ...], tag,
+                         compute) -> float:
+    """Gate estimates memoized per session on the inputs' analyzed-plan
+    semanticHashes + a caller tag. ``compute`` is the thunk that runs
+    the estimate's job(s) on a miss."""
     try:
-        key = (frame._jdf.queryExecution().analyzed().semanticHash(), tag)
+        key = (tuple(f._jdf.queryExecution().analyzed().semanticHash()
+                     for f in frames), tag)
     except Exception:                      # connect / API drift: no cache
         return compute()
     return _pair_mass_memo(key, compute)
@@ -134,7 +136,7 @@ def _session_plan_cached(frame: DataFrame, tag, compute) -> float:
 def _block_pair_mass_cached(docs: DataFrame,
                             adjacent_bands: bool) -> float:
     return _session_plan_cached(
-        docs, ("block", adjacent_bands),
+        (docs,), ("block", adjacent_bands),
         lambda: _block_pair_mass(docs, adjacent_bands))
 
 
@@ -151,7 +153,7 @@ def _keyed_candidate_mass_cached(frame: DataFrame, key_cols: list[str],
                 .agg(F.count(F.lit(1)).cast("double").alias("c"))
                 .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("m"))
                 .collect()[0]["m"]) or 0.0
-    return _session_plan_cached(frame, tag, compute)
+    return _session_plan_cached((frame,), tag, compute)
 
 
 def _block_pair_mass(docs: DataFrame, adjacent_bands: bool) -> float:
@@ -198,9 +200,9 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5,
     data); ``'route'`` auto-routes to it (same output schema; note the
     similarity becomes SHINGLE Jaccard, LSH-approximate — results
     change, which is why routing is opt-in, not silent);
-    ``'ignore'``/``max_block_pairs=None`` runs the exact plan
-    regardless (``block_splits`` then shards the straggler blocks, but
-    total work is unchanged). ``estimate_on`` lets a caller whose
+    ``max_block_pairs=None`` skips the gate and runs the exact plan
+    (``block_splits`` then shards the straggler blocks, but total work
+    is unchanged). ``estimate_on`` lets a caller whose
     ``documents`` is an expensive sub-plan (the curation pipeline:
     filter → redact → line-dedup → decontaminate) estimate on the cheap
     upstream scan instead — a conservative UPPER bound, since the
@@ -231,38 +233,21 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5,
     vocabulary prefix filtering prunes well, but the scale-robust path
     in this engine is MinHash-LSH (candidates bounded by similarity
     structure, not block size)."""
-    import warnings
-
     docs = _ngram_docs(documents, band_chars)
-    if max_block_pairs is not None and on_budget_exceeded != "ignore":
-        if on_budget_exceeded not in ("raise", "route"):
-            raise ValueError(
-                f"on_budget_exceeded must be 'raise', 'route' or "
-                f"'ignore', got {on_budget_exceeded!r}")
-        mass = _block_pair_mass_cached(
+    gate = pair_budget(
+        "ngram_jaccard_pairs", "max_block_pairs", max_block_pairs,
+        lambda: _block_pair_mass_cached(
             docs if estimate_on is None
-            else _ngram_docs(estimate_on, band_chars), adjacent_bands)
-        if mass > max_block_pairs:
-            if on_budget_exceeded == "route":
-                warnings.warn(
-                    f"ngram_jaccard_pairs: estimated within-block pair "
-                    f"mass {mass:,.0f} exceeds max_block_pairs="
-                    f"{max_block_pairs:,.0f}; routing to "
-                    f"minhash_lsh_pairs (LSH-approximate, shingle "
-                    f"Jaccard) — pass on_budget_exceeded='ignore' or "
-                    f"raise max_block_pairs to force the exact plan",
-                    stacklevel=2)
-                return minhash_lsh_pairs(documents, threshold=threshold)
-            raise ValueError(
-                f"ngram_jaccard_pairs: estimated within-block pair mass "
-                f"{mass:,.0f} exceeds max_block_pairs="
-                f"{max_block_pairs:,.0f} — the exact all-pairs-within-"
-                f"block plan is quadratic at this scale. Use "
-                f"minhash_lsh_pairs (candidates bounded by similarity "
-                f"structure), pass on_budget_exceeded='route' to "
-                f"auto-route, or raise max_block_pairs / pass None and "
-                f"shard stragglers with block_splits if the quadratic "
-                f"cost is intended")
+            else _ngram_docs(estimate_on, band_chars), adjacent_bands),
+        "estimated within-block pair mass; the exact all-pairs-within-"
+        "block plan is quadratic at this scale. minhash_lsh_pairs "
+        "bounds candidates by similarity structure (LSH-approximate, "
+        "shingle Jaccard; on_budget_exceeded='route' routes there), or "
+        "raise max_block_pairs and shard stragglers with block_splits "
+        "if the quadratic cost is intended",
+        on_budget_exceeded)
+    if gate.route:
+        return minhash_lsh_pairs(documents, threshold=threshold)
     # single-file inputs arrive as one partition; the (broadcast) self-
     # join would then run on one core — spread the probe side first
     # (conditional: a many-split scan keeps its natural partitioning)
@@ -311,7 +296,7 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5,
 
 def containment_pairs(documents: DataFrame, threshold: float = 0.9,
                       max_candidate_pairs: float | None = 5_000_000,
-                      on_budget_exceeded: str = "raise") -> DataFrame:
+                      ) -> DataFrame:
     """Token-set CONTAINMENT near-duplicates: pairs where the smaller
     doc's token set is >= ``threshold`` contained in the bigger doc's
     (|A∩B| / |A| with |A| <= |B|). This is the predicate Jaccard
@@ -341,19 +326,15 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.9,
     the ordering needs, no pairs materialized. Past
     ``max_candidate_pairs`` the operator raises naming the remedies
     (raise ``threshold`` — the prefix shrinks linearly in 1-t; split
-    the corpus by source/lang; or ``'ignore'`` on a cluster that can
-    absorb the mass). No 'route': MinHash estimates Jaccard, not
-    containment — there is nothing semantically equivalent to route
-    to, and pretending otherwise would silently change the predicate.
+    the corpus by source/lang; or ``max_candidate_pairs=None`` on a
+    cluster that can absorb the mass). No 'route': MinHash estimates
+    Jaccard, not containment — there is nothing semantically
+    equivalent to route to, and pretending otherwise would silently
+    change the predicate.
 
     Output: (doc_small, doc_big, containment) rounded to 4dp,
     doc_small strictly smaller (ties broken by doc_id).
     """
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
-
     # The tokenized doc frame feeds FIVE consumers (df build, prefix
     # ranking, the candidate join's full-token side, and the two
     # verify-join sides) — unpersisted, each re-scanned the parquet
@@ -375,21 +356,16 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.9,
                 - F.ceil(F.lit(threshold) * F.col("n")).cast("int") + 1)
     prefix = (ranked.withColumn("rn", F.row_number().over(w))
               .filter(F.col("rn") <= pref_len))
-    if max_candidate_pairs is not None and on_budget_exceeded == "raise":
-        prefix = prefix.persist()
-        row = prefix.agg(F.sum(F.col("df") - 1).alias("m")).first()
-        mass = float(row["m"] or 0)
-        if mass > max_candidate_pairs:
-            prefix.unpersist()
-            raise ValueError(
-                f"containment_pairs: exact candidate row mass "
-                f"{mass:,.0f} (sum of df-1 over prefix tokens) exceeds "
-                f"max_candidate_pairs={max_candidate_pairs:,.0f} — the "
-                f"corpus's rarest-token prefixes are too frequent "
-                f"(flat vocabulary / hot tokens). Raise threshold "
-                f"(prefix shrinks linearly in 1-threshold), split the "
-                f"corpus by source, or pass on_budget_exceeded='ignore' "
-                f"on a cluster sized for the mass")
+    if max_candidate_pairs is not None:
+        # the gate's sum and the candidate join share the prefix
+        prefix = persist_for_query(prefix)
+    pair_budget(
+        "containment_pairs", "max_candidate_pairs", max_candidate_pairs,
+        lambda: prefix.agg(F.sum(F.col("df") - 1)).first()[0] or 0,
+        "exact candidate row mass (sum of df-1 over prefix tokens); the "
+        "corpus's rarest-token prefixes are too frequent (flat "
+        "vocabulary / hot tokens). Raise threshold (the prefix shrinks "
+        "linearly in 1-threshold) or split the corpus by source")
     a, b = prefix.alias("a"), tok.alias("b")
     smaller = ((F.col("a.n") < F.col("b.n"))
                | ((F.col("a.n") == F.col("b.n"))
@@ -414,7 +390,7 @@ def containment_pairs(documents: DataFrame, threshold: float = 0.9,
 
 def drop_contained_docs(documents: DataFrame, threshold: float = 0.9,
                         max_candidate_pairs: float | None = 5_000_000,
-                        on_budget_exceeded: str = "raise") -> DataFrame:
+                        ) -> DataFrame:
     """The containment family's consumable product: remove every doc
     whose token set is >= ``threshold`` contained in some LARGER doc's
     (the smaller side adds ~nothing the bigger doesn't already carry —
@@ -427,8 +403,7 @@ def drop_contained_docs(documents: DataFrame, threshold: float = 0.9,
     content-identical either way."""
     losers = (containment_pairs(
         documents, threshold=threshold,
-        max_candidate_pairs=max_candidate_pairs,
-        on_budget_exceeded=on_budget_exceeded)
+        max_candidate_pairs=max_candidate_pairs)
         .select(F.col("doc_small").alias("doc_id")).distinct())
     return documents.join(losers, "doc_id", "left_anti")
 
@@ -436,7 +411,7 @@ def drop_contained_docs(documents: DataFrame, threshold: float = 0.9,
 def cross_corpus_containment(needles: DataFrame, haystack: DataFrame,
                              threshold: float = 0.9,
                              max_candidate_pairs: float | None = 5_000_000,
-                             on_budget_exceeded: str = "raise") -> DataFrame:
+                             ) -> DataFrame:
     """Directional containment across TWO corpora: pairs where a
     ``needles`` doc's token set is >= ``threshold`` contained in a
     ``haystack`` doc's — the decontamination question n-gram overlap
@@ -453,14 +428,10 @@ def cross_corpus_containment(needles: DataFrame, haystack: DataFrame,
     against any haystack doc, so it correctly produces zero
     candidates). Candidate mass is the exact sum of haystack df over
     needle prefix tokens, known before any join; past the budget the
-    operator raises (``'ignore'`` runs regardless — no approximate
-    route exists for containment).
+    operator raises (``max_candidate_pairs=None`` runs regardless — no
+    approximate route exists for containment).
 
     Output: (needle_id, doc_id, containment) rounded to 4dp."""
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
 
     def _prep(frame):
         # same one-pass tokenize discipline as ``containment_pairs``:
@@ -483,19 +454,14 @@ def cross_corpus_containment(needles: DataFrame, haystack: DataFrame,
                 - F.ceil(F.lit(threshold) * F.col("n")).cast("int") + 1)
     prefix = (ranked.withColumn("rn", F.row_number().over(w))
               .filter(F.col("rn") <= pref_len))
-    if max_candidate_pairs is not None and on_budget_exceeded == "raise":
-        prefix = prefix.persist()
-        mass = float(prefix.agg(F.sum("df")).first()[0] or 0)
-        if mass > max_candidate_pairs:
-            prefix.unpersist()
-            raise ValueError(
-                f"cross_corpus_containment: exact candidate row mass "
-                f"{mass:,.0f} (sum of haystack df over needle prefix "
-                f"tokens) exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,.0f}. Raise threshold, split "
-                f"the haystack by source, or pass "
-                f"on_budget_exceeded='ignore' on a cluster sized for "
-                f"the mass")
+    if max_candidate_pairs is not None:
+        prefix = persist_for_query(prefix)
+    pair_budget(
+        "cross_corpus_containment", "max_candidate_pairs",
+        max_candidate_pairs,
+        lambda: prefix.agg(F.sum("df")).first()[0] or 0,
+        "exact candidate row mass (sum of haystack df over needle prefix "
+        "tokens). Raise threshold or split the haystack by source")
     a, b = prefix.alias("a"), h_tok.alias("b")
     cand = (a.join(b, (F.col("a.lang") == F.col("b.lang"))
                    & (F.col("a.tok") == F.col("b.tok")))
@@ -571,14 +537,10 @@ def incremental_block_pair_mass_cached(new_docs: DataFrame,
     estimate cache (the same policy as ``_block_pair_mass_cached`` —
     round-9 advice): a caller invoking the ingest gate repeatedly over
     the same two frames pays the two histogram jobs once per session,
-    not per call. Keyed on BOTH inputs' analyzed-plan semantic hashes
-    (new_docs via the shared helper, corpus_docs folded into the tag)."""
-    try:
-        chash = corpus_docs._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:                      # connect / API drift: no cache
-        return incremental_block_pair_mass(new_docs, corpus_docs, band_chars)
+    not per call. Keyed on BOTH inputs' analyzed-plan semantic
+    hashes."""
     return _session_plan_cached(
-        new_docs, ("incr_block", band_chars, chash),
+        (new_docs, corpus_docs), ("incr_block", band_chars),
         lambda: incremental_block_pair_mass(new_docs, corpus_docs,
                                             band_chars))
 
@@ -790,7 +752,7 @@ def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5,
                       num_hashes: int = 32, bands: int = 8,
                       shingle_n: int = 3,
                       max_candidate_pairs: float | None = 200_000_000,
-                      on_budget_exceeded: str = "raise") -> DataFrame:
+                      ) -> DataFrame:
     """MinHash-LSH near-dup pairs: shingle -> signature -> band buckets
     -> candidate pairs within a bucket -> verify true shingle Jaccard.
 
@@ -811,13 +773,9 @@ def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5,
     near-dup mass (collapse exact duplicates first: an exact-dup
     cluster of k docs costs C(k,2) candidates in EVERY band) or
     too-coarse banding (raise rows-per-band = num_hashes/bands for
-    stricter bucket agreement). ``'ignore'`` /
-    ``max_candidate_pairs=None`` runs regardless. The gate's histogram
-    and the join share the persisted signature work."""
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
+    stricter bucket agreement). ``max_candidate_pairs=None`` runs
+    regardless. The gate's histogram and the join share the persisted
+    signature work."""
     rows_per_band = num_hashes // bands
     # materialize signatures once: the self-join below would otherwise
     # recompute the (expensive) signature projection on both sides.
@@ -841,24 +799,17 @@ def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5,
     # back with two joins against the persisted signatures is cheaper
     banded = sigs.select(
         "doc_id", F.posexplode(band_keys).alias("band_id", "band_hash"))
-    if max_candidate_pairs is not None and on_budget_exceeded != "ignore":
-        mass = _keyed_candidate_mass_cached(
+    pair_budget(
+        "minhash_lsh_pairs", "max_candidate_pairs", max_candidate_pairs,
+        lambda: _keyed_candidate_mass_cached(
             banded, ["band_id", "band_hash"],
-            ("minhash", num_hashes, bands, shingle_n))
-        if mass > max_candidate_pairs:
-            raise ValueError(
-                f"minhash_lsh_pairs: estimated candidate-row mass "
-                f"{mass:,.0f} exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,.0f} — a band bucket is hot. "
-                f"Either the corpus has dense TRUE near-dup clusters "
-                f"(collapse exact duplicates first — "
-                f"drop_exact_duplicates; an exact-dup cluster of k "
-                f"docs costs C(k,2) candidates "
-                f"in every band) or the banding is too coarse for this "
-                f"corpus (raise rows-per-band = num_hashes/bands). "
-                f"Pass on_budget_exceeded='ignore' or raise "
-                f"max_candidate_pairs if the quadratic cost is "
-                f"intended")
+            ("minhash", num_hashes, bands, shingle_n)),
+        "estimated candidate-row mass; a band bucket is hot. Either the "
+        "corpus has dense TRUE near-dup clusters (collapse exact "
+        "duplicates first — drop_exact_duplicates; an exact-dup "
+        "cluster of k docs costs C(k,2) candidates in every band) or "
+        "the banding is too coarse for this corpus (raise rows-per-band "
+        "= num_hashes/bands)")
     a, b = spread(banded).alias("a"), banded.alias("b")
     cands = (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
                     & (F.col("a.band_hash") == F.col("b.band_hash"))
@@ -964,17 +915,17 @@ def _make_simhash_udf():
     return simhash_from_hashes
 
 
-_SIMHASH_UDF = None
+# one SimHash kernel per session: a UDF kept past a session restart
+# reports its accumulator updates to the dead context
+_simhash_udf_memo = session_memo(1)
 
 
 def simhash64_fast(text: Column) -> Column:
     """Kernelized SimHash column: JVM md5-60 token hashing (one
     ``transform`` pass, oracle-identical hash) + the numpy bit-fold
     UDF. Result-identical to ``simhash64`` (tested)."""
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is None:
-        _SIMHASH_UDF = _make_simhash_udf()
-    return _SIMHASH_UDF(_simhash_token_hashes(text))
+    udf = _simhash_udf_memo(None, _make_simhash_udf)
+    return udf(_simhash_token_hashes(text))
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -985,7 +936,7 @@ def hamming64(a: Column, b: Column) -> Column:
 def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
                   n_blocks: int = 6, key_blocks: int = 3,
                   max_candidate_pairs: float | None = 200_000_000,
-                  on_budget_exceeded: str = "raise") -> DataFrame:
+                  ) -> DataFrame:
     """SimHash near-dup pairs with MULTI-BLOCK banding (Manku et al.
     WWW'07, "Detecting Near-Duplicates for Web Crawling" §3 — the
     production simhash dedup design): split the 60-bit hash into
@@ -1020,16 +971,12 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
     a dense key means either dense TRUE near-dup mass (collapse exact
     duplicates first: any exact-dup cluster of k docs contributes
     C(k,2) candidates in EVERY subset) or a too-small key space
-    (raise ``n_blocks`` per Manku's tables). ``'ignore'`` /
-    ``max_candidate_pairs=None`` runs regardless. The banding keys are
-    computed once (persisted for the query) — the gate's histogram and
-    the join share the signature work."""
+    (raise ``n_blocks`` per Manku's tables). ``max_candidate_pairs=None``
+    runs regardless. The banding keys are computed once (persisted for
+    the query) — the gate's histogram and the join share the signature
+    work."""
     from itertools import combinations
 
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
     if n_blocks - key_blocks < max_hamming:
         raise ValueError(
             f"simhash_pairs: need n_blocks - key_blocks >= max_hamming "
@@ -1061,22 +1008,15 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3,
         "doc_id", "sh",
         F.posexplode(F.array(*keys)).alias("chunk_id", "chunk_val"))
     chunked = persist_for_query(chunked)
-    if max_candidate_pairs is not None and on_budget_exceeded != "ignore":
-        mass = _keyed_candidate_mass_cached(
-            chunked, ["chunk_id", "chunk_val"], "simhash")
-        if mass > max_candidate_pairs:
-            raise ValueError(
-                f"simhash_pairs: estimated candidate-row mass "
-                f"{mass:,.0f} exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,.0f} — the banding keys are "
-                f"dense. Either the corpus has dense TRUE near-dup "
-                f"clusters (collapse exact duplicates first — an "
-                f"exact-dup cluster of k docs costs C(k,2) candidates "
-                f"in every subset), or the key space is too small for "
-                f"this corpus (raise n_blocks per Manku WWW'07). Pass "
-                f"on_budget_exceeded='ignore' or raise "
-                f"max_candidate_pairs if the quadratic cost is "
-                f"intended")
+    pair_budget(
+        "simhash_pairs", "max_candidate_pairs", max_candidate_pairs,
+        lambda: _keyed_candidate_mass_cached(
+            chunked, ["chunk_id", "chunk_val"], "simhash"),
+        "estimated candidate-row mass; the banding keys are dense. "
+        "Either the corpus has dense TRUE near-dup clusters (collapse "
+        "exact duplicates first — an exact-dup cluster of k docs costs "
+        "C(k,2) candidates in every subset), or the key space is too "
+        "small for this corpus (raise n_blocks per Manku WWW'07)")
     a, b = spread(chunked).alias("a"), chunked.alias("b")
     cands = (a.join(b, (F.col("a.chunk_id") == F.col("b.chunk_id"))
                     & (F.col("a.chunk_val") == F.col("b.chunk_val"))
@@ -1095,7 +1035,6 @@ def dedup_family_agreement(documents: DataFrame,
                            minhash: DataFrame | None = None,
                            simhash: DataFrame | None = None,
                            winnowing: DataFrame | None = None,
-                           on_budget_exceeded: str = "raise",
                            ) -> DataFrame:
     """Cross-family near-dup AGREEMENT AUDIT — the corpus-QA report
     for choosing a dedup family: run the three text near-dup families
@@ -1130,25 +1069,18 @@ def dedup_family_agreement(documents: DataFrame,
     compare them is the audit's only expensive regime (measured: the
     sf10 probe's 201 s was exactly the sum of the three families).
 
-    ``on_budget_exceeded`` forwards to the recomputing families'
-    candidate-mass gates (simhash's today): a recomputing audit on a
-    dense-key corpus otherwise refuses mid-plan with the family's own
-    remedy message — pass ``'ignore'`` to accept the family's
-    documented quadratic cost for the audit, or land the pair frames
-    once and pass them in (the scale path).
+    A recomputing family keeps its default candidate-mass gate, so on
+    a dense-key corpus the audit refuses with that family's remedy
+    message. To accept the family's quadratic cost, pass its pairs
+    computed without the gate (``simhash=simhash_pairs(documents,
+    max_candidate_pairs=None)``), or land the pair frames once and
+    pass them in (the scale path).
     """
-    # validated HERE, not only inside simhash_pairs' recompute path:
-    # with a precomputed simhash frame an invalid value would
-    # otherwise be silently accepted (round-8 advice)
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
     mh = (minhash_lsh_pairs(documents) if minhash is None
           else minhash).select(
         "doc_a", "doc_b", F.lit("minhash").alias("_fam"))
-    sh = (simhash_pairs(documents, on_budget_exceeded=on_budget_exceeded)
-          if simhash is None else simhash).select(
+    sh = (simhash_pairs(documents) if simhash is None
+          else simhash).select(
         "doc_a", "doc_b", F.lit("simhash").alias("_fam"))
     wn = (winnow_pairs(documents) if winnowing is None
           else winnowing).select(
@@ -1334,7 +1266,7 @@ def embedding_srp_pairs(embeddings: DataFrame,
                         nbits: int = SRP_BITS,
                         band_bits: int = SRP_BAND_BITS,
                         max_candidate_pairs: float | None = 50_000_000,
-                        on_budget_exceeded: str = "raise") -> DataFrame:
+                        ) -> DataFrame:
     """Embedding-cosine near-duplicates WITHOUT a precomputed coarse
     quantizer: sign-random-projection LSH (Charikar 2002) generates
     candidates from a band equi-join over 128-bit signatures (8
@@ -1375,8 +1307,7 @@ def embedding_srp_pairs(embeddings: DataFrame,
     - coarse-block first: run SemDeDup/``embedding_neardup_pairs``
       within k-means labels — candidate mass rides label population,
       not the random-collision floor;
-    - ``on_budget_exceeded='ignore'`` / ``max_candidate_pairs=None``
-      runs regardless (a 1000-executor cluster absorbs 1e9 candidate
+    - ``max_candidate_pairs=None`` runs regardless (a 1000-executor cluster absorbs 1e9 candidate
       rows; this box's disk does not).
 
     Recall contract (LSH-probabilistic, like MinHash banding): a bit
@@ -1397,10 +1328,6 @@ def embedding_srp_pairs(embeddings: DataFrame,
     stay correct through the exact verify while the scale contract
     evaporated. A caller-supplied dim that disagrees fails fast.
     """
-    if on_budget_exceeded not in ("raise", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise' or 'ignore', got "
-            f"{on_budget_exceeded!r}")
     if nbits % band_bits:
         raise ValueError(
             f"embedding_srp_pairs: {nbits}-bit signature not "
@@ -1423,31 +1350,24 @@ def embedding_srp_pairs(embeddings: DataFrame,
     banded = sigs.select(
         "vec_id", "_emb",
         F.posexplode(F.col("_bands")).alias("band_id", "band_val"))
-    mass = None
-    if max_candidate_pairs is not None and on_budget_exceeded != "ignore":
-        mass = _keyed_candidate_mass_cached(
+    mass = pair_budget(
+        "embedding_srp_pairs", "max_candidate_pairs", max_candidate_pairs,
+        lambda: _keyed_candidate_mass_cached(
             banded.drop("_emb"), ["band_id", "band_val"],
-            f"srp:{nbits}:{band_bits}")
-        if mass > max_candidate_pairs:
-            raise ValueError(
-                f"embedding_srp_pairs: estimated candidate-row mass "
-                f"{mass:,.0f} exceeds max_candidate_pairs="
-                f"{max_candidate_pairs:,.0f} — the {band_bits}-bit "
-                f"band key space is saturated at this corpus size "
-                f"(random collisions ~ bands*n^2/2^{band_bits}). "
-                f"Re-band longer (nbits=480, band_bits=24 holds ~0.80 "
-                f"recall at cosine 0.95 with ~100x fewer random "
-                f"collisions — note the hyperplane signs are embedded "
-                f"as nbits*dim plan literals, ~{480 * (dim or 1000):,} "
-                f"doubles at nbits=480/dim={dim or 1000}: expect "
-                f"plan-build/codegen cost in the tens of seconds at "
-                f"that size; nbits=192, band_bits=24 is 2.5x cheaper "
-                f"but ~0.48 recall at 0.95), block on a coarse k-means "
-                f"label first (semantic_dedup), or pass "
-                f"on_budget_exceeded='ignore' — the streamed in-join "
-                f"verify is CPU-linear in this mass (nothing "
-                f"pair-sized is materialized), so 'ignore' is a time "
-                f"choice, not a disk gamble")
+            f"srp:{nbits}:{band_bits}"),
+        f"estimated candidate-row mass; the {band_bits}-bit band key "
+        f"space is saturated at this corpus size (random collisions ~ "
+        f"bands*n^2/2^{band_bits}). Re-band longer (nbits=480, "
+        f"band_bits=24 holds ~0.80 recall at cosine 0.95 with ~100x "
+        f"fewer random collisions — note the hyperplane signs are "
+        f"embedded as nbits*dim plan literals, ~{480 * (dim or 1000):,} "
+        f"doubles at nbits=480/dim={dim or 1000}: expect plan-build/"
+        f"codegen cost in the tens of seconds at that size; nbits=192, "
+        f"band_bits=24 is 2.5x cheaper but ~0.48 recall at 0.95) or "
+        f"block on a coarse k-means label first (semantic_dedup). The "
+        f"streamed in-join verify is CPU-linear in this mass (nothing "
+        f"pair-sized is materialized), so running it is a time choice, "
+        f"not a disk gamble").mass
     # TWO PHYSICAL PLANS, ONE RESULT (the r8 third-decade redesign,
     # chosen by the gate's own mass estimate):
     #
@@ -1471,10 +1391,10 @@ def embedding_srp_pairs(embeddings: DataFrame,
     # So: take (a) while the measured mass sorts safely
     # (<= _SRP_NARROW_ATTACH_MAX pairs, ~13 GB of wide sort), (b)
     # past it — and (b) unconditionally when no estimate exists
-    # (budget disabled/'ignore'), because an unknown mass is exactly
+    # (budget disabled), because an unknown mass is exactly
     # the case that must not gamble the disk. Results are identical
     # either way (cosine is deterministic; both dedup on the pair
-    # key), property-tested by the gate test's ignore-vs-default
+    # key), property-tested by the gate test's ungated-vs-default
     # comparison, which crosses the two plans.
     narrow = mass is not None and mass <= _SRP_NARROW_ATTACH_MAX
     if narrow:

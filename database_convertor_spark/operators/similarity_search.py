@@ -22,7 +22,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine_similarity
-from ..session import collect_within_budget, persist_for_query, session_memo
+from ..session import (
+    check_budget_policy,
+    collect_within_budget,
+    pair_budget,
+    persist_for_query,
+    session_memo,
+)
 
 # brute_force_topk_numpy materializes the query set on the driver and
 # broadcasts it — the guard that keeps that contract from OOMing when
@@ -833,8 +839,8 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
       then exact-cosine band + re-rank of the shortlist ONLY). Routed
       recall vs brute is bounded by the shortlist's recall — negatives
       are always a subset of the true band (precision exact: every
-      emitted pair passed the exact cosine verify); ``'ignore'`` /
-      ``max_pair_mass=None`` forces the exact plan.
+      emitted pair passed the exact cosine verify);
+      ``max_pair_mass=None`` skips the estimate and runs the exact plan.
 
     ``shortlist_k`` defaults to ``max(50, 10 * k)`` — head-room for
     band members ranked below the near-dup zone the shortlist
@@ -852,8 +858,7 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
     frames don't carry one).
     Reference has no analog (beyond-reference training-data operator).
     """
-    import warnings
-
+    check_budget_policy(on_budget_exceeded)
     n_q = queries.limit(MAX_BROADCAST_QUERIES + 1).count()
     if n_q > MAX_BROADCAST_QUERIES:
         raise ValueError(
@@ -867,40 +872,26 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").cast("array<double>").alias("c_emb"))
-    if max_pair_mass is not None and on_budget_exceeded != "ignore":
-        if on_budget_exceeded not in ("raise", "route"):
-            raise ValueError(
-                f"on_budget_exceeded must be 'raise', 'route' or "
-                f"'ignore', got {on_budget_exceeded!r}")
-        mass = float(n_q) * float(corpus.count())
-        if mass > max_pair_mass:
-            if on_budget_exceeded == "raise":
-                raise ValueError(
-                    f"hard_negatives: anchors x corpus pair mass "
-                    f"{mass:,.0f} exceeds max_pair_mass="
-                    f"{max_pair_mass:,.0f} — the exact scan is "
-                    f"quadratic when anchors ~ corpus. Pass "
-                    f"on_budget_exceeded='route' to mine from the "
-                    f"PQ/ADC shortlist (approximate recall, exact "
-                    f"precision), or 'ignore' to force the exact plan")
-            warnings.warn(
-                f"hard_negatives: pair mass {mass:,.0f} exceeds "
-                f"max_pair_mass={max_pair_mass:,.0f}; routing through "
-                f"the PQ/ADC shortlist (top {shortlist_k or max(50, 10 * k)} "
-                f"per anchor by approximate distance, exact-cosine "
-                f"band + re-rank of the shortlist only)",
-                stacklevel=2)
-            sk = shortlist_k if shortlist_k is not None else max(50, 10 * k)
-            cands = _pq_candidates(queries, corpus, m=m, ks=ks,
-                                   n_iter=n_iter)
-            sw = Window.partitionBy("query_id").orderBy(
-                F.asc("_adist"), F.asc("neighbor_id"))
-            short = (cands.withColumn("_r", F.row_number().over(sw))
-                     .filter(F.col("_r") <= sk)
-                     .select("query_id", "neighbor_id"))
-            pairs = (short.join(F.broadcast(q), "query_id")
-                     .join(c, "neighbor_id"))
-            return _band_topk(pairs, k, lo, hi)
+    sk = shortlist_k if shortlist_k is not None else max(50, 10 * k)
+    gate = pair_budget(
+        "hard_negatives", "max_pair_mass", max_pair_mass,
+        lambda: float(n_q) * float(corpus.count()),
+        f"anchors x corpus pair mass; the exact scan is quadratic when "
+        f"anchors ~ corpus. on_budget_exceeded='route' mines from the "
+        f"PQ/ADC shortlist (top {sk} per anchor by approximate "
+        f"distance, exact-cosine band + re-rank of the shortlist only: "
+        f"approximate recall, exact precision)",
+        on_budget_exceeded)
+    if gate.route:
+        cands = _pq_candidates(queries, corpus, m=m, ks=ks, n_iter=n_iter)
+        sw = Window.partitionBy("query_id").orderBy(
+            F.asc("_adist"), F.asc("neighbor_id"))
+        short = (cands.withColumn("_r", F.row_number().over(sw))
+                 .filter(F.col("_r") <= sk)
+                 .select("query_id", "neighbor_id"))
+        pairs = (short.join(F.broadcast(q), "query_id")
+                 .join(c, "neighbor_id"))
+        return _band_topk(pairs, k, lo, hi)
     pairs = c.crossJoin(F.broadcast(q)).filter(
         F.col("neighbor_id") != F.col("query_id"))
     return _band_topk(pairs, k, lo, hi)

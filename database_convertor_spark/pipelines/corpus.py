@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import gopher_passes, quality_score, tokens
 from ..operators import components, curation, dedup
-from ..session import persist_for_query
+from ..session import check_budget_policy, pair_budget, persist_for_query
 
 
 def curate_corpus(documents: DataFrame, threshold: float = 0.5,
@@ -94,7 +94,7 @@ def ingest_documents(new_docs: DataFrame, corpus_docs: DataFrame,
     signature agreement, not block population (similarity becomes
     LSH-verified SHINGLE Jaccard: which near-dup pairs are found
     changes, so routing is opt-in, the same language as
-    ``ngram_jaccard_pairs``); ``'ignore'``/``None`` runs the exact
+    ``ngram_jaccard_pairs``); ``max_block_pairs=None`` runs the exact
     plan regardless.
 
     ``pair_path`` pins the semantics explicitly: ``'exact'`` /
@@ -111,12 +111,7 @@ def ingest_documents(new_docs: DataFrame, corpus_docs: DataFrame,
     (deduped) corpus are EMPTY — nothing the ingest admits duplicates
     anything already admitted (under the pair semantics that ran).
     """
-    import warnings
-
-    if on_budget_exceeded not in ("raise", "route", "ignore"):
-        raise ValueError(
-            f"on_budget_exceeded must be 'raise', 'route' or 'ignore', "
-            f"got {on_budget_exceeded!r}")
+    check_budget_policy(on_budget_exceeded)
     if pair_path not in ("auto", "exact", "lsh"):
         raise ValueError(
             f"pair_path must be 'auto', 'exact' or 'lsh', "
@@ -128,28 +123,19 @@ def ingest_documents(new_docs: DataFrame, corpus_docs: DataFrame,
             else dedup.ngram_jaccard_pairs_incremental(
                 new_docs, corpus_docs, threshold=threshold))
         return _ingest_admit(new_docs, corpus_docs, pairs)
-    route = False
-    if max_block_pairs is not None and on_budget_exceeded != "ignore":
-        # session-plan-keyed cache: repeated gate calls over the same
-        # two frames pay the histogram jobs once (round-9 advice)
-        mass = dedup.incremental_block_pair_mass_cached(new_docs, corpus_docs)
-        if mass > max_block_pairs:
-            if on_budget_exceeded == "raise":
-                raise RuntimeError(
-                    f"ingest_documents: estimated incremental candidate "
-                    f"mass {mass:,.0f} exceeds max_block_pairs="
-                    f"{max_block_pairs:,.0f}. Remedies: "
-                    f"on_budget_exceeded='route' (MinHash-LSH incremental "
-                    f"— candidates bounded by similarity structure; "
-                    f"shingle-Jaccard semantics), smaller ingest batches, "
-                    f"or 'ignore' to run the exact quadratic plan.")
-            warnings.warn(
-                f"ingest_documents: routing pair stage to MinHash-LSH "
-                f"incremental (estimated exact-path mass {mass:,.0f} > "
-                f"budget {max_block_pairs:,.0f}); similarity is now "
-                f"LSH-verified shingle Jaccard.")
-            route = True
-    if route:
+    # session-plan-keyed cache: repeated gate calls over the same two
+    # frames pay the histogram jobs once (round-9 advice)
+    gate = pair_budget(
+        "ingest_documents", "max_block_pairs", max_block_pairs,
+        lambda: dedup.incremental_block_pair_mass_cached(new_docs,
+                                                         corpus_docs),
+        "estimated incremental candidate mass. Remedies: "
+        "on_budget_exceeded='route' (the MinHash-LSH incremental pair "
+        "stage — candidates bounded by similarity structure; "
+        "LSH-verified shingle-Jaccard semantics) or smaller ingest "
+        "batches",
+        on_budget_exceeded)
+    if gate.route:
         pairs = dedup.minhash_lsh_pairs_incremental(
             new_docs, corpus_docs, threshold=threshold)
     else:

@@ -1834,13 +1834,13 @@ _add(
     # (1.8M qualifying pairs at full sf0.1 — correct but a
     # driver-compare-hostile output size), so the entry demonstrates
     # the operator on a bounded slice, the ann_* vec_id<N precedent.
-    # on_budget_exceeded='ignore' keeps the entry a PRODUCER at any
+    # max_candidate_pairs=None keeps the entry a PRODUCER at any
     # driver scale (the corpus_deduped precedent); the operator
-    # default stays 'raise' with named remedies — there is no 'route'
+    # default budget raises with named remedies — there is no 'route'
     # because no approximate family estimates containment.
     lambda spark, sf: dedup.containment_pairs(
         _t(spark, sf, "documents")[0].filter("doc_id < 1000"),
-        threshold=0.9, on_budget_exceeded="ignore"),
+        threshold=0.9, max_candidate_pairs=None),
     f"""
     WITH d AS (
       SELECT doc_id, lang,
@@ -1885,10 +1885,10 @@ _add(
 
 _add(
     "corpus_drop_contained",
-    # same bounded slice + 'ignore' reasoning as dedup_containment_pairs
+    # same bounded slice + ungated reasoning as dedup_containment_pairs
     lambda spark, sf: dedup.drop_contained_docs(
         _t(spark, sf, "documents")[0].filter("doc_id < 1000"),
-        threshold=0.9, on_budget_exceeded="ignore")
+        threshold=0.9, max_candidate_pairs=None)
     .select("doc_id", "lang", "n_chars"),
     f"""
     WITH d AS (

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import os
 import threading
+import warnings
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -101,6 +103,60 @@ def collect_within_budget(df, max_rows: int):
     except Exception:
         return None
     return None if len(pdf) > max_rows else pdf
+
+
+class PairBudgetExceeded(ValueError, RuntimeError):
+    """A pair join's estimated mass exceeds its budget. Both a
+    ValueError and a RuntimeError, the two types the gates raised
+    before they shared ``pair_budget``. ``mass`` and ``budget`` carry
+    the numbers the message prints."""
+
+    def __init__(self, message: str, mass: float, budget: float):
+        super().__init__(message)
+        self.mass = mass
+        self.budget = budget
+
+
+class PairBudget(NamedTuple):
+    """A pair gate's decision: the estimate it took (None when the
+    budget is None and no estimate ran) and whether to route."""
+    mass: float | None
+    route: bool
+
+
+def check_budget_policy(on_exceeded: str) -> None:
+    """Reject an ``on_budget_exceeded`` value other than 'raise' or
+    'route'. Runs no job, so a caller that takes a job before its gate
+    calls it first."""
+    if on_exceeded not in ("raise", "route"):
+        raise ValueError(
+            f"on_budget_exceeded must be 'raise' or 'route', got "
+            f"{on_exceeded!r}")
+
+
+def pair_budget(op: str, budget_name: str, budget: float | None,
+                estimate, remedy: str,
+                on_exceeded: str = "raise") -> PairBudget:
+    """The one gate in front of a quadratic pair join: a budget of None
+    skips it without running ``estimate``; otherwise ``estimate()``
+    runs once and a mass past ``budget`` either raises
+    ``PairBudgetExceeded`` (``'raise'``) or warns once and returns
+    ``route=True`` (``'route'``, the caller runs its bounded plan).
+    ``remedy`` says what the mass is and what bounds it."""
+    check_budget_policy(on_exceeded)
+    if budget is None:
+        return PairBudget(None, False)
+    mass = float(estimate())
+    if mass <= budget:
+        return PairBudget(mass, False)
+    msg = f"{op}: {mass:,.0f} exceeds {budget_name}={budget:,.0f} — {remedy}"
+    if on_exceeded == "raise":
+        raise PairBudgetExceeded(
+            f"{msg}; pass {budget_name}=None to run the exact plan",
+            mass, budget)
+    warnings.warn(f"{msg}; routing to the on_budget_exceeded='route' plan",
+                  stacklevel=3)
+    return PairBudget(mass, True)
 
 
 def _context_identity():

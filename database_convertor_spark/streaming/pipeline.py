@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA_SCHEMAS
-from ..session import new_query
+from ..session import new_query, pair_budget
 
 # T1: LinkedHelper event-type -> connection-status mapping
 # (webhook_handler.py:30-88), transposed to the driver's event types.
@@ -252,16 +252,31 @@ def run_ingest_stream(spark: SparkSession, sf_dir: str,
     and a corpus admitted under mixed word-set/shingle semantics
     satisfies neither family's no-residual invariant (the sf1 routed
     probe caught exactly that). Past ``max_block_pairs``: 'raise'
-    (default) refuses at submit time naming remedies; 'route' pins the
-    MinHash-LSH incremental pair stage (shingle-Jaccard semantics)
-    with one warning; 'ignore' pins the exact path.
+    (default) refuses at submit time, before anything is written,
+    naming remedies; 'route' pins the MinHash-LSH incremental pair
+    stage (shingle-Jaccard semantics) with one warning;
+    ``max_block_pairs=None`` pins the exact path without an estimate.
     """
     import os
-    import warnings
 
     from ..operators.dedup import _block_pair_mass, _ngram_docs
     from ..pipelines.corpus import ingest_documents
     from ..sources.readers import read_table
+
+    # gate ONCE on the whole input (upper-bounds any batch-vs-corpus
+    # split of it), pin the semantics for every batch; deterministic
+    # across resume (same input -> same decision)
+    gate = pair_budget(
+        "run_ingest_stream", "max_block_pairs", max_block_pairs,
+        lambda: _block_pair_mass(
+            _ngram_docs(read_table(spark, sf_dir, "documents"), 100),
+            adjacent_bands=False),
+        "whole-input block-pair mass; the exact incremental pair stage "
+        "would go quadratic across the drain (measured 84x on 10x data, "
+        "SCALE.md). on_budget_exceeded='route' pins MinHash-LSH "
+        "incremental semantics for the whole stream",
+        on_budget_exceeded)
+    pair_path = "lsh" if gate.route else "exact"
 
     landing = checkpoint + "_landing"
     # a file-stream checkpoint writes its offsets log on first trigger;
@@ -292,35 +307,6 @@ def run_ingest_stream(spark: SparkSession, sf_dir: str,
         docs.repartition(8).write.mode("overwrite").parquet(landing)
         (spark.createDataFrame([], TESTDATA_SCHEMAS["documents"])
          .write.mode("overwrite").parquet(corpus_path))
-
-    # gate ONCE on the whole input (upper-bounds any batch-vs-corpus
-    # split of it), pin the semantics for every batch; deterministic
-    # across resume (same input -> same decision)
-    pair_path = "exact"
-    if max_block_pairs is not None and on_budget_exceeded != "ignore":
-        if on_budget_exceeded not in ("raise", "route"):
-            raise ValueError(
-                f"on_budget_exceeded must be 'raise', 'route' or "
-                f"'ignore', got {on_budget_exceeded!r}")
-        all_docs = read_table(spark, sf_dir, "documents")
-        mass = _block_pair_mass(_ngram_docs(all_docs, 100),
-                                adjacent_bands=False)
-        if mass > max_block_pairs:
-            if on_budget_exceeded == "raise":
-                raise RuntimeError(
-                    f"run_ingest_stream: whole-input block-pair mass "
-                    f"{mass:,.0f} exceeds max_block_pairs="
-                    f"{max_block_pairs:,.0f}; the exact incremental "
-                    f"pair stage would go quadratic across the drain "
-                    f"(measured 84x on 10x data, SCALE.md). Remedies: "
-                    f"on_budget_exceeded='route' (pin MinHash-LSH "
-                    f"incremental semantics for the whole stream) or "
-                    f"'ignore' to pin the exact plan regardless.")
-            warnings.warn(
-                f"run_ingest_stream: pinning MinHash-LSH incremental "
-                f"pair semantics for every batch (whole-input mass "
-                f"{mass:,.0f} > budget {max_block_pairs:,.0f}).")
-            pair_path = "lsh"
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         new_query()

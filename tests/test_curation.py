@@ -885,7 +885,7 @@ def test_containment_pairs_exact_vs_brute_force(spark):
 
 def test_containment_pairs_gate_raises_with_exact_mass(spark):
     """The candidate-mass gate: max_candidate_pairs=0 must raise
-    naming the remedies; 'ignore' runs the same plan regardless."""
+    naming the remedies; a None budget runs the same plan regardless."""
     import pytest
 
     from database_convertor_spark.operators.dedup import containment_pairs
@@ -897,8 +897,8 @@ def test_containment_pairs_gate_raises_with_exact_mass(spark):
     with pytest.raises(ValueError, match="candidate row mass"):
         containment_pairs(docs, threshold=0.9,
                           max_candidate_pairs=0).collect()
-    out = containment_pairs(docs, threshold=0.9, max_candidate_pairs=0,
-                            on_budget_exceeded="ignore").collect()
+    out = containment_pairs(docs, threshold=0.9,
+                            max_candidate_pairs=None).collect()
     assert {(r.doc_small, r.doc_big) for r in out} == {(1, 2)}
 
 

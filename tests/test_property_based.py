@@ -529,21 +529,12 @@ def test_dedup_family_agreement_accepts_precomputed_pairs(spark):
         docs, simhash=sh).collect())
     assert supplied == recomputed == partial
 
-    # r8 advice: an invalid on_budget_exceeded must be rejected even
-    # when every family is supplied precomputed (previously only the
-    # simhash RECOMPUTE path validated it, so 'route' slipped through
-    # silently with a precomputed frame)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="on_budget_exceeded"):
-        dedup_family_agreement(docs, minhash=mh, simhash=sh,
-                               winnowing=wn, on_budget_exceeded="route")
-
 
 def test_simhash_candidate_mass_gate(spark):
     """r8 gate (added after the sf100 probe filled 77 GB of shuffle
     on a dense-dup corpus): a tiny budget must raise naming the
-    remedies BEFORE the quadratic join runs; 'ignore' and the default
-    budget produce the identical pair set."""
+    remedies BEFORE the quadratic join runs; a None budget and the
+    default budget produce the identical pair set."""
     from database_convertor_spark.operators.dedup import simhash_pairs
     from database_convertor_spark.sources.readers import read_table
 
@@ -556,7 +547,7 @@ def test_simhash_candidate_mass_gate(spark):
         simhash_pairs(docs, max_candidate_pairs=1).collect()
     gated = {tuple(r) for r in simhash_pairs(docs).collect()}
     forced = {tuple(r) for r in simhash_pairs(
-        docs, on_budget_exceeded="ignore").collect()}
+        docs, max_candidate_pairs=None).collect()}
     assert gated == forced and gated
 
 
@@ -565,7 +556,7 @@ def test_minhash_candidate_mass_gate(spark):
     bucket — here an exact-dup cluster, which agrees in EVERY band —
     must trip a tiny budget BEFORE the self-join, naming dedup_exact
     as the first remedy; the named remedy (collapse exact duplicates
-    first) then completes under the same budget; 'ignore' and the
+    first) then completes under the same budget; a None budget and the
     default budget produce the identical pair set."""
     import pytest
     from pyspark.sql import functions as F
@@ -597,8 +588,8 @@ def test_minhash_candidate_mass_gate(spark):
     pairs = minhash_lsh_pairs(collapsed, max_candidate_pairs=1000)
     assert pairs.count() >= 0   # completes, no raise
 
-    # gate vs ignore: identical results when under budget
+    # gated vs ungated: identical results when under budget
     gated = {tuple(r) for r in minhash_lsh_pairs(base).collect()}
     forced = {tuple(r) for r in minhash_lsh_pairs(
-        base, on_budget_exceeded="ignore").collect()}
+        base, max_candidate_pairs=None).collect()}
     assert gated == forced

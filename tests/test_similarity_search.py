@@ -516,8 +516,8 @@ def test_srp_pairs_candidate_mass_gate(spark):
     random-collision term (bands*n^2/2^16) filled the disk through
     the vector-attach joins. The gate bounds candidate-row mass from
     the band-key histogram BEFORE the self-join: forced-tiny budgets
-    raise naming the re-banding remedies; 'ignore' runs the same plan
-    and emits the same pairs as the default (whose budget sits far
+    raise naming the re-banding remedies; a None budget runs the same
+    plan and emits the same pairs as the default (whose budget sits far
     above any certified scale's mass)."""
     from database_convertor_spark.operators.dedup import (
         embedding_srp_pairs,
@@ -536,10 +536,9 @@ def test_srp_pairs_candidate_mass_gate(spark):
         assert "nbits=480" in str(e)        # names the re-banding remedy
     gated = {(r.vec_a, r.vec_b) for r in embedding_srp_pairs(
         corpus).collect()}
-    ignored = {(r.vec_a, r.vec_b) for r in embedding_srp_pairs(
-        corpus, max_candidate_pairs=1,
-        on_budget_exceeded="ignore").collect()}
-    assert gated == ignored                 # gate chooses cost, not results
+    ungated = {(r.vec_a, r.vec_b) for r in embedding_srp_pairs(
+        corpus, max_candidate_pairs=None).collect()}
+    assert gated == ungated                 # gate chooses cost, not results
 
 
 def test_srp_pairs_rebanding_knobs(spark):

@@ -12,7 +12,7 @@ Legs:
 3. COMPLETION (sf1): where the corpus allows (the scale corpus's
    per-copy token suffixes keep cross-copy vocabulary disjoint, so
    prefix df — and the mass — ride within-copy frequency), run with
-   'ignore' and record wall clock + output size.
+   ``max_candidate_pairs=None`` and record wall clock + output size.
 4. rp_project decades: sf1/sf10(/sf100 if present) timings of the
    64->16 projection over the full embeddings table (noop sink).
 
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -37,7 +36,10 @@ from database_convertor_spark.functions.text import tokens  # noqa: E402
 from database_convertor_spark.operators.dedup import (  # noqa: E402
     containment_pairs,
 )
-from database_convertor_spark.session import get_spark  # noqa: E402
+from database_convertor_spark.session import (  # noqa: E402
+    PairBudgetExceeded,
+    get_spark,
+)
 from database_convertor_spark.sources.readers import read_table  # noqa: E402
 
 
@@ -82,20 +84,19 @@ def main() -> None:
     try:
         containment_pairs(docs1, threshold=0.9).count()
         out["sf1_gate"] = "DID NOT FIRE (unexpected)"
-    except ValueError as exc:
-        m = re.search(r"mass ([\d,]+)", str(exc))
+    except PairBudgetExceeded as exc:
         out["sf1_gate"] = "fired"
-        out["sf1_gate_mass"] = float(m.group(1).replace(",", "")) if m else None
+        out["sf1_gate_mass"] = exc.mass
         print(f"sf1 gate fired: mass {out['sf1_gate_mass']:,.0f}", flush=True)
 
-    # --- leg 3: completion at sf1 under 'ignore' --------------------
+    # --- leg 3: completion at sf1, ungated -------------------------
     if out.get("sf1_gate_mass", float("inf")) <= 500_000_000:
         t0 = time.perf_counter()
         n = containment_pairs(docs1, threshold=0.9,
-                              on_budget_exceeded="ignore").count()
+                              max_candidate_pairs=None).count()
         out["sf1_ignore_secs"] = round(time.perf_counter() - t0, 1)
         out["sf1_pairs"] = n
-        print(f"sf1 ignore: {n:,} pairs in {out['sf1_ignore_secs']}s",
+        print(f"sf1 ungated: {n:,} pairs in {out['sf1_ignore_secs']}s",
               flush=True)
     else:
         out["sf1_ignore_secs"] = "skipped (mass past local budget)"

@@ -156,7 +156,7 @@ def probe_sessions_stateful(spark, sf_dir: str, work: str) -> dict:
 
 def probe_corpus_ingest(spark, sf_dir: str, work: str,
                         threshold: float = 0.5,
-                        on_budget_exceeded: str = "ignore") -> dict:
+                        max_block_pairs: float | None = None) -> dict:
     from database_convertor_spark.operators import dedup
     from database_convertor_spark.streaming.pipeline import run_ingest_stream
 
@@ -165,7 +165,7 @@ def probe_corpus_ingest(spark, sf_dir: str, work: str,
     admitted = run_ingest_stream(spark, sf_dir,
                                  os.path.join(work, "ingest_ckpt"),
                                  corpus_path, threshold=threshold,
-                                 on_budget_exceeded=on_budget_exceeded)
+                                 max_block_pairs=max_block_pairs)
     n_admitted = admitted.count()
     drain_s = time.time() - t0
 
@@ -177,7 +177,7 @@ def probe_corpus_ingest(spark, sf_dir: str, work: str,
     # deterministic sample gives an EXACT check over the sampled
     # blocks: pick md5-ordered blocks until their residual pair mass
     # reaches ~20M, restrict the corpus to those blocks, run the exact
-    # all-pairs plan ('ignore' — the mass is budgeted by construction)
+    # all-pairs plan (ungated — the mass is budgeted by construction)
     # and assert zero pairs. At sf1 the budget covers every block
     # (full exact check); at sf10 it is an exact check over a stated
     # fraction of the quadratic mass.
@@ -201,7 +201,6 @@ def probe_corpus_ingest(spark, sf_dir: str, work: str,
                .select("doc_id"))
     subset = admitted.join(sampled, "doc_id", "left_semi")
     pairs = dedup.ngram_jaccard_pairs(subset, threshold=threshold,
-                                      on_budget_exceeded="ignore",
                                       max_block_pairs=None)
     n_residual = pairs.limit(1).count()
     return {"drain_s": round(drain_s, 1), "n_input_docs": n_in,
