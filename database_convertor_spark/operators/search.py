@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import persist_for_query
+from .similarity_search import _require_local_index_path, _sidecar_cached
 
 
 def query_terms(query: str) -> list[str]:
@@ -274,19 +275,6 @@ def _postings(documents: DataFrame, n_buckets: int) -> DataFrame:
                                                    n_buckets)))
 
 
-def _require_local_text_index_path(path: str) -> None:
-    """The stats sidecar is read/written with local-file I/O (the same
-    contract as the IVFPQ codebook sidecar); a URI-scheme path would
-    divorce it from the parquet. A production deployment keeps the
-    stats in the table's metadata/catalog."""
-    if "://" in path:
-        raise NotImplementedError(
-            "text index paths must be local-filesystem paths in this "
-            "environment: the stats sidecar (_stats.json) uses local "
-            "file I/O. For an object-store/HDFS deployment, keep the "
-            "corpus stats in the table metadata/catalog.")
-
-
 def land_text_index(documents: DataFrame, path: str,
                     n_buckets: int = N_TERM_BUCKETS) -> dict:
     """Build and LAND the BM25 index: the postings table
@@ -309,7 +297,7 @@ def land_text_index(documents: DataFrame, path: str,
 
     from pyspark.sql import Observation
 
-    _require_local_text_index_path(path)
+    _require_local_index_path(path, "_stats.json")
     post = _postings(documents, n_buckets)
     # sumdl / nd observed ON the postings write itself (r11, guide
     # §1.2 — the stats formerly cost a THIRD job that re-READ the
@@ -386,9 +374,7 @@ def search_text_index(spark, path: str, query: str,
     in the mixed regime a live df can approach or exceed the frozen N,
     which is why ``_bm25_score`` clamps idf at 0 — a heavily-appended
     term degrades to no-signal instead of scoring negatively."""
-    from ..operators.similarity_search import _sidecar_cached
-
-    _require_local_text_index_path(path)
+    _require_local_index_path(path, "_stats.json")
     _, stats = _sidecar_cached(path, "_stats.json")
     terms = query_terms(query)
     m = len(terms)
@@ -444,9 +430,7 @@ def search_text_index_many(spark, path: str, queries: list[str],
     query's position in ``queries``, top_k rows per query ordered by
     (bm25 desc, doc_id).
     """
-    from ..operators.similarity_search import _sidecar_cached
-
-    _require_local_text_index_path(path)
+    _require_local_index_path(path, "_stats.json")
     _, stats = _sidecar_cached(path, "_stats.json")
     per_query = [query_terms(q) for q in queries]
     all_terms = sorted({t for ts in per_query for t in ts})
@@ -513,17 +497,20 @@ def compact_text_index(spark, path: str) -> dict:
     — the one documented drift this pass cannot repair).
 
     Stage-and-swap, crash-safe ordering: the rewrite (stats sidecar
-    included) lands COMPLETE in a staging dir, the old index is
-    renamed aside, staging renames into place, and the old copy is
-    deleted LAST — at every intermediate point a full, searchable
-    index exists on disk under either the final or the aside name.
-    Returns the refreshed stats."""
+    included) lands COMPLETE in a staging dir and replaces the index
+    with ``writers._swap_dir`` — at every intermediate point a full,
+    searchable index exists on disk under either the final or the
+    aside name. A crash mid-swap is repaired by the next index writer
+    (this compaction, or the text index stream), which starts with
+    ``writers._reconcile_asides``. Returns the refreshed stats."""
     import json
     import os
-    import shutil
     import tempfile
 
-    _require_local_text_index_path(path)
+    from ..sources.writers import _reconcile_asides, _swap_dir
+
+    _require_local_index_path(path, "_stats.json")
+    _reconcile_asides(path)
     with open(os.path.join(path, "_stats.json")) as fh:
         old = json.load(fh)
     post = (spark.read.parquet(path)
@@ -553,11 +540,7 @@ def compact_text_index(spark, path: str) -> dict:
         os.path.join(staging, "_manifest"))
     with open(os.path.join(staging, "_stats.json"), "w") as fh:
         json.dump(stats, fh)
-    aside = tempfile.mkdtemp(prefix="text_index_old_", dir=parent)
-    os.rmdir(aside)
-    os.rename(path, aside)
-    os.rename(staging, path)
-    shutil.rmtree(aside)
+    _swap_dir(staging, path)
     spark.catalog.refreshByPath(path)
     return stats
 

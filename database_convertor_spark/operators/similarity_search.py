@@ -29,6 +29,7 @@ from ..session import (
     persist_for_query,
     session_memo,
 )
+from .dedup import _session_plan_cached
 
 # brute_force_topk_numpy materializes the query set on the driver and
 # broadcasts it — the guard that keeps that contract from OOMing when
@@ -851,7 +852,10 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
     COMPUTED corpus frame it materializes the subplan once — still
     ~dim x cheaper than the exact scan it guards against, but callers
     in that shape should persist the corpus first (or pass
-    ``max_pair_mass=None`` when the scale is known-safe).
+    ``max_pair_mass=None`` when the scale is known-safe). The corpus
+    count is memoized per session on the corpus plan
+    (``dedup._session_plan_cached``, as the histogram gates are), so
+    a repeat build over the same corpus pays only the anchor count.
 
     Output: (query_id, neighbor_id, rank, cosine). Inputs need only
     (vec_id, embedding) — no label column (shortlist-produced anchor
@@ -875,7 +879,8 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
     sk = shortlist_k if shortlist_k is not None else max(50, 10 * k)
     gate = pair_budget(
         "hard_negatives", "max_pair_mass", max_pair_mass,
-        lambda: float(n_q) * float(corpus.count()),
+        lambda: float(n_q) * _session_plan_cached(
+            (corpus,), "count", lambda: float(corpus.count())),
         f"anchors x corpus pair mass; the exact scan is quadratic when "
         f"anchors ~ corpus. on_budget_exceeded='route' mines from the "
         f"PQ/ADC shortlist (top {sk} per anchor by approximate "
@@ -1504,7 +1509,7 @@ def land_ivfpq_index(corpus: DataFrame, path: str, n_cells: int = 8,
     import json
     import os
 
-    _require_local_index_path(path)
+    _require_local_index_path(path, "_codebooks.json")
     coarse, books, codes = ivfpq_fit_encode(corpus, n_cells=n_cells,
                                             m=m, ks=ks, n_iter=n_iter)
     codes.write.mode("overwrite").partitionBy("cell").parquet(path)
@@ -1533,15 +1538,19 @@ def compact_ivfpq_index(spark, path: str) -> int:
     deterministic, documented approximation (codes carry no version).
     The codebook sidecar is untouched (frozen by design).
 
-    Crash-safe stage-and-swap, same ordering as the text twin: staging
-    lands COMPLETE (sidecar copied in), the old index renames aside,
-    staging renames into place, old copy deleted LAST. Returns the
-    compacted row count."""
+    Crash-safe stage-and-swap, as in the text twin: staging lands
+    COMPLETE (sidecar copied in) and replaces the index with
+    ``writers._swap_dir``; a crash mid-swap is repaired by the next
+    compaction, which starts with ``writers._reconcile_asides``.
+    Returns the compacted row count."""
     import os
     import shutil
     import tempfile
 
-    _require_local_index_path(path)
+    from ..sources.writers import _reconcile_asides, _swap_dir
+
+    _require_local_index_path(path, "_codebooks.json")
+    _reconcile_asides(path)
     codes = (spark.read.parquet(path)
              .groupBy("vec_id", "cell")
              .agg(F.max("codes").alias("codes"))
@@ -1556,27 +1565,24 @@ def compact_ivfpq_index(spark, path: str) -> int:
      .write.mode("overwrite").parquet(os.path.join(staging, "_manifest")))
     shutil.copyfile(os.path.join(path, "_codebooks.json"),
                     os.path.join(staging, "_codebooks.json"))
-    aside = tempfile.mkdtemp(prefix="ivfpq_index_old_", dir=parent)
-    os.rmdir(aside)
-    os.rename(path, aside)
-    os.rename(staging, path)
-    shutil.rmtree(aside)
+    _swap_dir(staging, path)
     spark.catalog.refreshByPath(path)
     return int(n)
 
 
-def _require_local_index_path(path: str) -> None:
-    """The codebook sidecar is read/written with local-file I/O; a
-    URI-scheme path (hdfs://, s3a://, ...) would land the parquet
-    remotely and then fail (or silently divorce) the sidecar — refuse
-    up front. A production deployment stores the codebooks in the
-    table's metadata/catalog instead of a sidecar file."""
+def _require_local_index_path(path: str, sidecar: str) -> None:
+    """An index's JSON sidecar (IVFPQ codebooks, text-index stats) is
+    read/written with local-file I/O; a URI-scheme path (hdfs://,
+    s3a://, ...) would land the parquet remotely and then fail (or
+    silently divorce) the sidecar — refuse up front. A production
+    deployment keeps the sidecar's contents in the table's
+    metadata/catalog instead."""
     if "://" in path:
         raise NotImplementedError(
-            "IVFPQ index paths must be local-filesystem paths in this "
-            "environment: the codebook sidecar (_codebooks.json) uses "
-            "local file I/O. For an object-store/HDFS deployment, keep "
-            "the codebooks in the table metadata/catalog instead.")
+            "index paths must be local-filesystem paths in this "
+            f"environment: the {sidecar} sidecar uses local file I/O. "
+            "For an object-store/HDFS deployment, keep its contents in "
+            "the table metadata/catalog instead.")
 
 
 # (sidecar path, content digest) -> parsed JSON. Keyed
@@ -1681,7 +1687,7 @@ def search_ivfpq_index(spark, path: str, queries: DataFrame, k: int = 5,
     and the query-independent ADC rank expressions are memoized per
     (session, sidecar mtime), so repeat searches of a live index skip
     the ~1.5 s expression build (SCALE.md warm-latency row)."""
-    _require_local_index_path(path)
+    _require_local_index_path(path, "_codebooks.json")
     ckey, cb = _sidecar_cached(path, "_codebooks.json")
     coarse, books = cb["coarse"], cb["books"]
     probes = _ivfpq_probes(queries, coarse, nprobe)
@@ -1708,7 +1714,7 @@ def search_ivfpq_index_local(spark, path: str, queries: list,
     (SCALE.md). The 100 TB framing: probe choice is an
     n_cells-sized decision per query — driver arithmetic, not a
     cluster job; the cluster only ever sees the pruned codes scan."""
-    _require_local_index_path(path)
+    _require_local_index_path(path, "_codebooks.json")
     ckey, cb = _sidecar_cached(path, "_codebooks.json")
     coarse, books = cb["coarse"], cb["books"]
     qvecs = [[float(x) for x in vec] for _, vec in queries]

@@ -28,12 +28,18 @@ Size ``hash_buckets`` so a typical batch touches a small fraction:
 buckets ≈ table_bytes / target_partition_bytes, and a batch of K
 random keys touches ≤ K buckets.
 
-Crash safety: every swap is stage → rename-aside → rename-in →
-delete-aside (the ``compact_text_index`` pattern, search.py). At every
+``merge_upsert`` and ``scd2_upsert`` differ only in their row logic;
+both run through ``_partition_scoped_write``.
+
+Crash safety: every directory swap in the package is ``_swap_dir`` —
+stage → rename-aside → rename-in → delete-aside — here, in the two
+index compactions (search.py, similarity_search.py) and in the text
+index stream's quarantine (streaming/pipeline.py). At every
 intermediate point the data exists on disk under either the final or
 the ``__aside`` name; ``_reconcile_asides`` (run at the start of every
-merge) rolls an interrupted swap forward or back, so a crash can never
-leave a table (or a partition of it) missing.
+writer of such a directory) rolls an interrupted swap forward or
+back, so a crash can never leave a table, an index (or a partition of
+either) missing.
 
 Per-table partition contracts live in ``schemas.MERGE_PARTITION_SPECS``
 next to the key contracts in ``schemas.MERGE_KEYS``. With a
@@ -54,6 +60,7 @@ from pyspark.sql import functions as F
 
 _ASIDE_SUFFIX = "__aside"
 _SPEC_FILE = "_merge_spec.json"  # leading '_' → invisible to Spark reads
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir name for null
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite",
@@ -129,135 +136,6 @@ def write_excel(df: DataFrame, path: str, sheet_name: str = "Export",
                    sheet_name=sheet_name, styled=styled)
 
 
-def scd2_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
-                keys: list[str], ts_col: str = "effective_at",
-                partition_by: str | None = None,
-                hash_buckets: int | None = None) -> DataFrame:
-    """Slowly-changing-dimension type 2 on parquet (the CDC/SCD2
-    pattern MERGE would express on Delta; emulated with
-    close-open-union semantics):
-
-    - a key arriving with a new ``ts_col`` closes the currently-open
-      row (valid_to = new ts, is_current = false),
-    - the new version is appended open (valid_to = null,
-      is_current = true),
-    - unchanged keys keep their history untouched.
-
-    The reference tracks only updated_at/onupdate (models.py:26);
-    SCD2 is the warehouse-grade upgrade of that contract — full change
-    history, point-in-time queries via valid_from/valid_to.
-
-    Partition scoping (round 10 — the same contract as
-    ``merge_upsert``, see the module docstring): ``partition_by`` (a
-    natural partition column, must be ∈ ``keys``) or ``hash_buckets``
-    (a derived key-hash bucket column). A key's ENTIRE history lives
-    in one partition — the partition value is a function of the key —
-    so the close-open logic runs against only the touched partitions
-    and only their directories are rewritten; history in every other
-    partition is physically untouched. The spec persists in the same
-    ``_merge_spec.json`` sidecar (validated, adopted by spec-less
-    calls, migrated from pre-spec layouts with one full rewrite)."""
-    if partition_by is not None and hash_buckets is not None:
-        raise ValueError("pass partition_by OR hash_buckets, not both")
-    if partition_by is not None and partition_by not in keys:
-        raise ValueError(
-            f"partition_by={partition_by!r} must be one of the SCD2 keys "
-            f"{keys}: a key's history must live in one partition")
-    _reconcile_asides(target_path)
-    exists = os.path.exists(target_path)
-    spec = _read_merge_spec(target_path) if exists else None
-    if spec is not None and partition_by is None and hash_buckets is None:
-        partition_by = spec["partition_by"]
-        hash_buckets = spec["hash_buckets"]
-    part_col = partition_by if partition_by is not None else (
-        BUCKET_COL if hash_buckets else None)
-    want_spec = {"partition_by": partition_by, "hash_buckets": hash_buckets,
-                 "keys": sorted(keys)}
-    if exists and spec is not None and part_col is not None \
-            and spec != want_spec:
-        raise ValueError(
-            f"merge spec mismatch for {target_path}: table was built with "
-            f"{spec}, called with {want_spec} — changing the partition "
-            "contract on an existing table would route keys to fresh "
-            "partitions; rebuild the table or keep the original spec")
-
-    updates = dedup_latest(updates, keys, ts_col)
-    if hash_buckets:
-        updates = updates.withColumn(
-            part_col, _bucket_expr(keys, hash_buckets))
-    incoming = (updates
-                .withColumn("valid_from", F.col(ts_col))
-                .withColumn("valid_to", F.lit(None).cast("timestamp"))
-                .withColumn("is_current", F.lit(True)))
-
-    parent = os.path.dirname(target_path) or "."
-    os.makedirs(parent, exist_ok=True)
-    scoped = (exists and part_col is not None and spec == want_spec)
-
-    if exists:
-        existing = spark.read.parquet(target_path)
-        if scoped:
-            touched = [r[0] for r in
-                       updates.select(part_col).distinct().collect()]
-            non_null = [v for v in touched if v is not None]
-            cond = F.col(part_col).isin(non_null)
-            if len(non_null) < len(touched):
-                cond = cond | F.col(part_col).isNull()
-            existing = existing.filter(cond)
-        elif hash_buckets and part_col not in existing.columns:
-            # one-time layout migration of a pre-spec table
-            existing = existing.withColumn(
-                part_col, _bucket_expr(keys, hash_buckets))
-        elif partition_by is not None \
-                and partition_by not in existing.columns:
-            raise ValueError(
-                f"partition_by={partition_by!r} not a column of the "
-                f"existing table at {target_path}")
-        # every key join below is null-safe (`<=>`, _key_cond) so a
-        # null-keyed key's history closes exactly like any other —
-        # the same contract merge_upsert keeps via _anti_join_keys
-        upd_keys = F.broadcast(updates.select(*keys).dropDuplicates())
-        cur = existing.filter(F.col("is_current"))
-        touched_open = cur.join(
-            upd_keys, _key_cond(cur, upd_keys, keys), "left_semi")
-        open_keys = touched_open.select(*keys, "valid_from")
-        untouched = existing.join(
-            open_keys,
-            _key_cond(existing, open_keys, keys + ["valid_from"]),
-            "left_anti")
-        new_ts = F.broadcast(updates.select(
-            *keys, F.col(ts_col).alias("_new_ts")))
-        closed = (touched_open
-                  .join(new_ts, _key_cond(touched_open, new_ts, keys))
-                  .select(touched_open["*"], new_ts["_new_ts"])
-                  .withColumn("valid_to", F.col("_new_ts"))
-                  .withColumn("is_current", F.lit(False))
-                  .drop("_new_ts"))
-        merged = (untouched
-                  .unionByName(closed)
-                  .unionByName(incoming.select(*untouched.columns)))
-    else:
-        merged = incoming
-
-    staging = tempfile.mkdtemp(prefix="scd2_stage_", dir=parent)
-    writer = merged.write.mode("overwrite")
-    if part_col:
-        writer = writer.partitionBy(part_col)
-    writer.parquet(staging)
-    if scoped:
-        for entry in os.listdir(staging):
-            if entry.startswith(part_col + "="):
-                _swap_dir(os.path.join(staging, entry),
-                          os.path.join(target_path, entry))
-        shutil.rmtree(staging)
-    else:
-        if part_col:
-            _write_merge_spec(staging, want_spec)
-        _swap_dir(staging, target_path)
-    spark.catalog.refreshByPath(target_path)
-    return spark.read.parquet(target_path)
-
-
 def dedup_latest(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     """Keep the newest row per key (deterministic upsert semantics)."""
     w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
@@ -291,6 +169,29 @@ def _swap_dir(src: str, dst: str) -> None:
         shutil.rmtree(aside)
 
 
+def swap_partitions(staging: str, target_path: str, part_col: str,
+                    touched: list) -> None:
+    """Swap each partition directory a staging write produced into
+    ``target_path`` (``_swap_dir`` each, Spark's own dir-name encoding
+    on both sides), remove a ``touched`` partition that staged nothing
+    (every row of it was dropped), then delete the staging dir.
+    Partitions outside ``touched`` are never opened. A removed
+    partition is named ``{part_col}={value}`` (null → Spark's default
+    partition name), so a value Spark would escape in a dir name must
+    always stage rows — as every value of an upsert batch does."""
+    staged = {e for e in os.listdir(staging)
+              if e.startswith(part_col + "=")}
+    for entry in staged:
+        _swap_dir(os.path.join(staging, entry),
+                  os.path.join(target_path, entry))
+    for v in touched:
+        entry = f"{part_col}={_NULL_PARTITION if v is None else v}"
+        dst = os.path.join(target_path, entry)
+        if entry not in staged and os.path.isdir(dst):
+            shutil.rmtree(dst)
+    shutil.rmtree(staging)
+
+
 def _reconcile_one_aside(aside: str, primary: str) -> None:
     if os.path.exists(primary):
         # swap completed (new data renamed in) but cleanup died → finish it
@@ -305,7 +206,9 @@ def _reconcile_asides(target_path: str) -> None:
     for every partition directory inside it, an aside leftover is
     rolled forward (primary present → delete aside) or rolled back
     (primary missing → rename aside to primary). Run at the start of
-    every merge/scd2 call, so the next write after a crash self-heals.
+    every writer of a swapped directory (both table writers, both
+    index compactions, the text index stream), so the next write after
+    a crash self-heals.
     A partition-scoped merge interrupted BETWEEN partition swaps leaves
     some partitions new and some old — never missing — and replaying
     the same batch (merge_upsert is idempotent) converges the rest."""
@@ -372,9 +275,101 @@ def _anti_join_keys(existing: DataFrame, upd_keys: DataFrame,
                          "left_anti")
 
 
+def _partition_scoped_write(spark: SparkSession, target_path: str,
+                            updates: DataFrame, keys: list[str],
+                            partition_by: str | None,
+                            hash_buckets: int | None,
+                            merge) -> DataFrame:
+    """The stage-and-swap rewrite both table writers share (see the
+    module docstring for the design): contract checks, crash
+    reconcile, the ``_merge_spec.json`` sidecar (adopted by spec-less
+    calls, validated otherwise), the hash-bucket column, the one
+    touched-partition collect and its pruned read, the one-time
+    migration of a pre-spec table, the staging write and the swap —
+    per touched partition, or the whole table with the spec written
+    in. ``merge(existing, updates)`` is the writer's row logic:
+    ``existing`` is None on the first write, otherwise the pruned (or
+    migrated) existing rows; ``updates`` carries the partition
+    column. Returns the refreshed table."""
+    if partition_by is not None and hash_buckets is not None:
+        raise ValueError("pass partition_by OR hash_buckets, not both")
+    if partition_by is not None and partition_by not in keys:
+        raise ValueError(
+            f"partition_by={partition_by!r} must be one of the merge keys "
+            f"{keys}: every version of a key must route to the partition "
+            "that already holds it, otherwise the old version survives in "
+            "the old partition")
+    _reconcile_asides(target_path)
+    exists = os.path.exists(target_path)
+    spec = _read_merge_spec(target_path) if exists else None
+    if spec is not None and partition_by is None and hash_buckets is None:
+        # caller passed no contract but the table has one persisted —
+        # adopt it (a plain upsert on a bucketed table must keep
+        # routing keys to their buckets, not flatten the layout)
+        partition_by = spec["partition_by"]
+        hash_buckets = spec["hash_buckets"]
+    part_col = partition_by if partition_by is not None else (
+        BUCKET_COL if hash_buckets else None)
+    want_spec = {"partition_by": partition_by, "hash_buckets": hash_buckets,
+                 "keys": sorted(keys)}
+    if spec is not None and part_col is not None and spec != want_spec:
+        raise ValueError(
+            f"merge spec mismatch for {target_path}: table was built with "
+            f"{spec}, called with {want_spec} — changing the partition "
+            "contract on an existing table would route keys to fresh "
+            "partitions; rebuild the table or keep the original spec")
+    if hash_buckets:
+        updates = updates.withColumn(
+            part_col, _bucket_expr(keys, hash_buckets))
+
+    # partition-scoped only when the on-disk layout already carries the
+    # partition column as a directory level (spec sidecar says so);
+    # otherwise this call rewrites the whole table (unpartitioned, or
+    # the one-time migration of a pre-spec table)
+    scoped = part_col is not None and spec == want_spec
+    existing = None
+    if exists:
+        existing = spark.read.parquet(target_path)
+        if scoped:
+            touched = [r[0] for r in
+                       updates.select(part_col).distinct().collect()]
+            non_null = [v for v in touched if v is not None]
+            cond = F.col(part_col).isin(non_null)
+            if len(non_null) < len(touched):        # null partition value
+                cond = cond | F.col(part_col).isNull()
+            # directory partition pruning: the open above listed every
+            # partition directory (one cores-sized job); only the
+            # touched partitions' files are read
+            existing = existing.filter(cond)
+        elif hash_buckets and part_col not in existing.columns:
+            existing = existing.withColumn(
+                part_col, _bucket_expr(keys, hash_buckets))
+        elif partition_by is not None \
+                and partition_by not in existing.columns:
+            raise ValueError(
+                f"partition_by={partition_by!r} not a column of the "
+                f"existing table at {target_path}")
+
+    writer = merge(existing, updates).write.mode("overwrite")
+    parent = os.path.dirname(target_path) or "."
+    os.makedirs(parent, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="merge_stage_", dir=parent)
+    if part_col:
+        writer = writer.partitionBy(part_col)
+    writer.parquet(staging)
+    if scoped:
+        swap_partitions(staging, target_path, part_col, touched)
+    else:
+        if part_col:
+            _write_merge_spec(staging, want_spec)
+        _swap_dir(staging, target_path)
+    # drop the session's cached file listing for the rewritten path
+    spark.catalog.refreshByPath(target_path)
+    return spark.read.parquet(target_path)
+
+
 def merge_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
-                 keys: list[str], broadcast_updates: bool = True,
-                 partition_by: str | None = None,
+                 keys: list[str], partition_by: str | None = None,
                  hash_buckets: int | None = None) -> DataFrame:
     """MERGE-equivalent on parquet: rows in ``updates`` replace rows in
     the target with the same key; unmatched update rows are inserted.
@@ -409,114 +404,76 @@ def merge_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
     unpartitioned) is migrated with one full rewrite, after which every
     merge is partition-scoped.
     """
-    if partition_by is not None and hash_buckets is not None:
-        raise ValueError("pass partition_by OR hash_buckets, not both")
-    if partition_by is not None and partition_by not in keys:
-        raise ValueError(
-            f"partition_by={partition_by!r} must be one of the merge keys "
-            f"{keys}: a matched row must route to the partition that "
-            "already holds it, otherwise the old version survives in the "
-            "old partition")
-    _reconcile_asides(target_path)
-    exists = os.path.exists(target_path)
-    spec = _read_merge_spec(target_path) if exists else None
-    if spec is not None and partition_by is None and hash_buckets is None:
-        # caller passed no contract but the table has one persisted —
-        # adopt it (a plain merge_upsert on a bucketed table must keep
-        # routing keys to their buckets, not flatten the layout)
-        partition_by = spec["partition_by"]
-        hash_buckets = spec["hash_buckets"]
-    part_col = partition_by if partition_by is not None else (
-        BUCKET_COL if hash_buckets else None)
+    def merge(existing, updates):
+        if existing is None:
+            return updates
+        kept = _anti_join_keys(
+            existing, F.broadcast(updates.select(*keys)), keys)
+        return kept.unionByName(updates.select(*existing.columns))
 
-    updates = updates.dropDuplicates(keys)  # idempotent within a batch
-    if hash_buckets:
-        updates = updates.withColumn(
-            part_col, _bucket_expr(keys, hash_buckets))
+    return _partition_scoped_write(
+        spark, target_path, updates.dropDuplicates(keys), keys,
+        partition_by, hash_buckets, merge)
 
-    parent = os.path.dirname(target_path) or "."
-    os.makedirs(parent, exist_ok=True)
 
-    want_spec = {"partition_by": partition_by, "hash_buckets": hash_buckets,
-                 "keys": sorted(keys)}
-    if exists and spec is not None and part_col is not None \
-            and spec != want_spec:
-        raise ValueError(
-            f"merge spec mismatch for {target_path}: table was built with "
-            f"{spec}, called with {want_spec} — changing the partition "
-            "contract on an existing table would route keys to fresh "
-            "partitions; rebuild the table or keep the original spec")
+def scd2_upsert(spark: SparkSession, target_path: str, updates: DataFrame,
+                keys: list[str], ts_col: str = "effective_at",
+                partition_by: str | None = None,
+                hash_buckets: int | None = None) -> DataFrame:
+    """Slowly-changing-dimension type 2 on parquet (the CDC/SCD2
+    pattern MERGE would express on Delta; emulated with
+    close-open-union semantics):
 
-    if not exists:
-        staging = tempfile.mkdtemp(prefix="merge_stage_", dir=parent)
-        writer = updates.write.mode("overwrite")
-        if part_col:
-            writer = writer.partitionBy(part_col)
-        writer.parquet(staging)
-        if part_col:
-            _write_merge_spec(staging, want_spec)
-        _swap_dir(staging, target_path)
-        spark.catalog.refreshByPath(target_path)
-        return spark.read.parquet(target_path)
+    - a key arriving with a new ``ts_col`` closes the currently-open
+      row (valid_to = new ts, is_current = false),
+    - the new version is appended open (valid_to = null,
+      is_current = true),
+    - unchanged keys keep their history untouched.
 
-    existing = spark.read.parquet(target_path)
-    # partition-scoped only when the on-disk layout already carries the
-    # partition column as a directory level (spec sidecar says so);
-    # otherwise this call performs the one-time layout migration below
-    scoped = part_col is not None and spec == want_spec
+    The reference tracks only updated_at/onupdate (models.py:26);
+    SCD2 is the warehouse-grade upgrade of that contract — full change
+    history, point-in-time queries via valid_from/valid_to.
 
-    if scoped:
-        # ---- touched partitions only -----------------------------------
-        touched = [r[0] for r in
-                   updates.select(part_col).distinct().collect()]
-        non_null = [v for v in touched if v is not None]
-        cond = F.col(part_col).isin(non_null)
-        if len(non_null) < len(touched):        # null partition value
-            cond = cond | F.col(part_col).isNull()
-        # directory partition pruning: the open above listed every
-        # partition directory (one cores-sized job); only the touched
-        # partitions' files are read
-        in_scope = existing.filter(cond)
-        upd_keys = updates.select(*keys)
-        if broadcast_updates:
-            upd_keys = F.broadcast(upd_keys)
-        kept = _anti_join_keys(in_scope, upd_keys, keys)
-        merged = kept.unionByName(updates.select(*existing.columns))
-        staging = tempfile.mkdtemp(prefix="merge_stage_", dir=parent)
-        merged.write.mode("overwrite").partitionBy(part_col).parquet(staging)
-        # swap exactly the partition directories the staging write
-        # produced (Spark's own dir-name encoding on both sides)
-        for entry in os.listdir(staging):
-            if entry.startswith(part_col + "="):
-                _swap_dir(os.path.join(staging, entry),
-                          os.path.join(target_path, entry))
-        shutil.rmtree(staging)
-    else:
-        # ---- full rewrite: unpartitioned table, or one-time migration
-        # of a pre-spec table into the partitioned layout ----------------
-        if hash_buckets and part_col not in existing.columns:
-            existing = existing.withColumn(
-                part_col, _bucket_expr(keys, hash_buckets))
-        if partition_by is not None and partition_by not in existing.columns:
-            raise ValueError(
-                f"partition_by={partition_by!r} not a column of the "
-                f"existing table at {target_path}")
-        upd_keys = updates.select(*keys)
-        if broadcast_updates:
-            upd_keys = F.broadcast(upd_keys)
-        kept = _anti_join_keys(existing, upd_keys, keys)
-        merged = kept.unionByName(updates.select(*existing.columns))
-        staging = tempfile.mkdtemp(prefix="merge_stage_", dir=parent)
-        writer = merged.write.mode("overwrite")
-        if part_col:
-            writer = writer.partitionBy(part_col)
-        writer.parquet(staging)
-        if part_col:
-            _write_merge_spec(staging, want_spec)
-        _swap_dir(staging, target_path)
-    # drop the session's cached file listing for the rewritten path
-    spark.catalog.refreshByPath(target_path)
-    return spark.read.parquet(target_path)
+    Partition scoping: the same contract and the same rewrite as
+    ``merge_upsert`` (``_partition_scoped_write``). A key's ENTIRE
+    history lives in one partition — the partition value is a function
+    of the key — so the close-open logic runs against only the touched
+    partitions and only their directories are rewritten; history in
+    every other partition is physically untouched."""
+    def close_open_union(existing, updates):
+        incoming = (updates
+                    .withColumn("valid_from", F.col(ts_col))
+                    .withColumn("valid_to", F.lit(None).cast("timestamp"))
+                    .withColumn("is_current", F.lit(True)))
+        if existing is None:
+            return incoming
+        # every key join below is null-safe (`<=>`, _key_cond) so a
+        # null-keyed key's history closes exactly like any other —
+        # the same contract merge_upsert keeps via _anti_join_keys
+        upd_keys = F.broadcast(updates.select(*keys).dropDuplicates())
+        cur = existing.filter(F.col("is_current"))
+        touched_open = cur.join(
+            upd_keys, _key_cond(cur, upd_keys, keys), "left_semi")
+        open_keys = touched_open.select(*keys, "valid_from")
+        untouched = existing.join(
+            open_keys,
+            _key_cond(existing, open_keys, keys + ["valid_from"]),
+            "left_anti")
+        new_ts = F.broadcast(updates.select(
+            *keys, F.col(ts_col).alias("_new_ts")))
+        closed = (touched_open
+                  .join(new_ts, _key_cond(touched_open, new_ts, keys))
+                  .select(touched_open["*"], new_ts["_new_ts"])
+                  .withColumn("valid_to", F.col("_new_ts"))
+                  .withColumn("is_current", F.lit(False))
+                  .drop("_new_ts"))
+        return (untouched
+                .unionByName(closed)
+                .unionByName(incoming.select(*untouched.columns)))
+
+    return _partition_scoped_write(
+        spark, target_path, dedup_latest(updates, keys, ts_col), keys,
+        partition_by, hash_buckets, close_open_union)
 
 
 def write_training_shards(chunks_with_bins: DataFrame, path: str) -> None:

@@ -377,7 +377,7 @@ def run_index_ingest_stream(spark: SparkSession, landing_dir: str,
         ivfpq_encode_under,
     )
 
-    _require_local_index_path(index_path)
+    _require_local_index_path(index_path, "_codebooks.json")
     with open(os.path.join(index_path, "_codebooks.json")) as fh:
         cb = json.load(fh)
     coarse, books = cb["coarse"], cb["books"]
@@ -467,13 +467,16 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
     the drain."""
     import json
     import os
+    import tempfile
 
-    from ..operators.search import (
-        _postings,
-        _require_local_text_index_path,
-    )
+    from ..operators.search import _postings
+    from ..operators.similarity_search import _require_local_index_path
+    from ..sources.writers import _reconcile_asides, swap_partitions
 
-    _require_local_text_index_path(index_path)
+    _require_local_index_path(index_path, "_stats.json")
+    # roll back (or forward) a quarantine swap a crash interrupted
+    # before anything reads the postings
+    _reconcile_asides(index_path)
     with open(os.path.join(index_path, "_stats.json")) as fh:
         n_buckets = json.load(fh)["n_buckets"]
 
@@ -499,11 +502,6 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
         # so AvailableNow replays it and re-appends complete postings
         # under the per-batch guard. Net: a crash costs one bounded
         # bucket rewrite, never a lost or half-indexed document.
-        import shutil
-        import tempfile
-
-        from ..sources.writers import _swap_dir
-
         manifest = spark.read.parquet(manifest_path)
         suspects = (spark.read.parquet(index_path)
                     .select("doc_id", "bucket")
@@ -520,20 +518,9 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
                 prefix="text_index_reconcile_", dir=parent)
             (cleaned.write.mode("overwrite").partitionBy("bucket")
              .parquet(staging))
-            staged = {e for e in os.listdir(staging)
-                      if e.startswith("bucket=")}
-            for entry in staged:
-                _swap_dir(os.path.join(staging, entry),
-                          os.path.join(index_path, entry))
             # a bucket whose every row was suspect stages nothing —
-            # its old dir must go entirely
-            for b in touched:
-                entry = f"bucket={b}"
-                if entry not in staged:
-                    leftover = os.path.join(index_path, entry)
-                    if os.path.isdir(leftover):
-                        shutil.rmtree(leftover)
-            shutil.rmtree(staging)
+            # swap_partitions removes its old dir entirely
+            swap_partitions(staging, index_path, "bucket", touched)
             spark.catalog.refreshByPath(index_path)
 
     stream = (spark.readStream

@@ -453,6 +453,55 @@ def test_compact_text_index_collapses_reingested_postings(spark, tmp_path):
     assert dupes.count() == 0
 
 
+def test_compact_text_index_crash_mid_swap_recovers(spark, tmp_path,
+                                                   monkeypatch):
+    """Kill point between the compaction swap's rename-aside and its
+    rename-in: the old index survives under the dot-aside name, and the
+    next compaction rolls it back before reading, then completes — the
+    index ends whole at its path, searching like a fresh build, with no
+    aside left beside it."""
+    import os
+
+    from database_convertor_spark.operators.search import (
+        _postings,
+        compact_text_index,
+        land_text_index,
+        search_text_index,
+    )
+    from database_convertor_spark.sources.readers import read_table
+    from .conftest import SF_SMALL
+
+    docs = read_table(spark, SF_SMALL, "documents").filter("doc_id < 300")
+    path = str(tmp_path / "ti")
+    land_text_index(docs, path, n_buckets=8)
+    _postings(docs.filter("doc_id < 50"), 8).write.mode("append") \
+        .partitionBy("bucket").parquet(path)
+    spark.catalog.refreshByPath(path)
+
+    calls = {"n": 0}
+    real_rename = os.rename
+
+    def crash_on_second_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_text_index(spark, path)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)           # caught mid-swap
+
+    stats = compact_text_index(spark, path)
+    fresh = str(tmp_path / "ti_fresh")
+    assert stats == land_text_index(docs, fresh, n_buckets=8)
+    got = search_text_index(spark, path, "dup join scan").collect()
+    want = search_text_index(spark, fresh, "dup join scan").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+
+
 def test_search_text_index_clamps_idf_nonnegative(spark, tmp_path):
     """ADVICE r7 closure: after heavy streaming appends, a term's LIVE
     postings df can exceed the FROZEN sidecar N; unclamped, its idf

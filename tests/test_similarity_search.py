@@ -633,6 +633,85 @@ def test_compact_ivfpq_index_collapses_reingested_codes(spark, tmp_path):
     assert got == want
 
 
+def test_compact_ivfpq_index_crash_mid_swap_recovers(spark, tmp_path,
+                                                    monkeypatch):
+    """Kill point between the compaction swap's rename-aside and its
+    rename-in: the next compaction rolls the old index back before
+    reading and completes — the index ends whole at its path,
+    searching like a fresh build, with no aside left beside it."""
+    import os
+
+    import pytest
+
+    from database_convertor_spark.operators.similarity_search import (
+        compact_ivfpq_index,
+        ivfpq_encode_under,
+        land_ivfpq_index,
+        search_ivfpq_index,
+    )
+
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    path = str(tmp_path / "ai")
+    coarse, books = land_ivfpq_index(emb, path, n_cells=4, m=4, ks=8,
+                                     n_iter=2)
+    ivfpq_encode_under(emb.filter("vec_id < 50"), coarse, books) \
+        .write.mode("append").partitionBy("cell").parquet(path)
+    spark.catalog.refreshByPath(path)
+
+    calls = {"n": 0}
+    real_rename = os.rename
+
+    def crash_on_second_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_ivfpq_index(spark, path)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)           # caught mid-swap
+
+    assert compact_ivfpq_index(spark, path) == emb.count()
+    fresh = str(tmp_path / "ai_fresh")
+    land_ivfpq_index(emb, fresh, n_cells=4, m=4, ks=8, n_iter=2)
+    q = emb.filter("vec_id < 3")
+    got = [tuple(r) for r in
+           search_ivfpq_index(spark, path, q, k=5, nprobe=2).collect()]
+    want = [tuple(r) for r in
+            search_ivfpq_index(spark, fresh, q, k=5, nprobe=2).collect()]
+    assert got == want
+    assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+
+
+def test_hard_negatives_rebuild_skips_corpus_count(spark, monkeypatch):
+    """The corpus count behind the pair-mass estimate is memoized per
+    session on the corpus plan, like the histogram gates: a second
+    build of ``ann_hard_negatives`` in one session runs fewer Spark
+    jobs than the first."""
+    import database_convertor_spark.operators.dedup as dedup
+    from database_convertor_spark.plans.catalog import CATALOG
+    from database_convertor_spark.session import session_memo
+
+    # start from an empty memo: earlier tests may have built this query
+    monkeypatch.setattr(dedup, "_pair_mass_memo", session_memo(64))
+    sc = spark.sparkContext
+
+    def build_jobs(group):
+        sc.setJobGroup(group, "ann_hard_negatives build")
+        try:
+            CATALOG["ann_hard_negatives"].builder(spark, SF_SMALL)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first = build_jobs("test-hard-negatives-build-1")
+    second = build_jobs("test-hard-negatives-build-2")
+    assert second < first, (first, second)
+
+
 def test_probe_cells_py_twins_spark_probes_on_every_vector(spark, tmp_path):
     """The driver-side probe twin (`_probe_cells_py`) must reproduce
     `_ivfpq_probes`' cell choice for EVERY fixture vector as a query —

@@ -443,6 +443,63 @@ def test_text_index_reconcile_repairs_partial_postings(spark, tmp_path):
     assert got == want     # complete postings, no dup, nothing partial
 
 
+def test_text_index_quarantine_crash_mid_swap_recovers(spark, tmp_path,
+                                                      monkeypatch):
+    """The partial-postings scenario above, with a kill point on the
+    quarantine's first bucket rename-in: that bucket's postings sit
+    under its dot-aside name, invisible to reads. The rerun stream
+    reconciles before it computes suspects, so it quarantines and
+    replays as if nothing had crashed — postings equal a fresh build
+    and no bucket aside remains."""
+    from database_convertor_spark.operators.search import (
+        _postings,
+        land_text_index,
+    )
+    from database_convertor_spark.streaming.pipeline import (
+        run_text_index_ingest_stream,
+    )
+
+    base = read_table(spark, SF_SMALL, "documents")
+    path = os.path.join(tmp_path, "tindex")
+    land_text_index(base.filter("doc_id < 300"), path, n_buckets=16)
+    crashed = base.filter(
+        (F.col("doc_id") >= 330) & (F.col("doc_id") < 335))
+    _postings(crashed, 16).filter(F.abs(F.hash("term")) % 2 == 0) \
+        .write.mode("append").partitionBy("bucket").parquet(path)
+    landing = os.path.join(tmp_path, "landing")
+    crashed.write.parquet(landing)
+    ckpt = os.path.join(tmp_path, "ckpt")
+
+    calls = {"n": 0}
+    real_rename = os.rename
+
+    def crash_on_first_rename_in(src, dst):
+        # the first bucket swap: rename-aside (1), rename-in (2)
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_first_rename_in)
+    with pytest.raises(OSError, match="injected crash"):
+        run_text_index_ingest_stream(spark, landing, path, ckpt)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert any(e.endswith("__aside") for e in os.listdir(path))
+
+    spark.catalog.refreshByPath(path)
+    after = run_text_index_ingest_stream(spark, landing, path, ckpt)
+    got = sorted(tuple(r) for r in after
+                 .select("bucket", "term", "doc_id", "tf", "dl").collect())
+    want = sorted(tuple(r) for r in
+                  _postings(base.filter(
+                      "doc_id < 300 OR (doc_id >= 330 AND doc_id < 335)"),
+                      16)
+                  .select("bucket", "term", "doc_id", "tf", "dl").collect())
+    assert got == want
+    assert not any(e.startswith(".bucket=") and e.endswith("__aside")
+                   for e in os.listdir(path))
+
+
 def test_ann_index_manifest_guard_and_compaction(spark, tmp_path):
     """ANN twin: the vec-id manifest self-heals from the codes table,
     the guard still makes re-landed vectors a no-op, and compaction

@@ -11,6 +11,7 @@ import pytest
 from database_convertor_spark.sources.writers import (
     dedup_latest,
     merge_upsert,
+    scd2_upsert,
 )
 
 
@@ -210,26 +211,53 @@ def test_merge_upsert_migrates_unpartitioned_layout(spark, tmp_path):
     assert unchanged > 0
 
 
-def test_merge_upsert_partition_contract_guards(spark, tmp_path):
+def _scd2_current(spark, target_path, updates, keys, **kw):
+    """``scd2_upsert`` in merge_upsert's call shape: each row's version
+    timestamp is its ``v`` (in seconds), and the returned frame is the
+    current rows without the history columns — on these tests' batches
+    that is exactly what merge_upsert returns."""
+    from pyspark.sql import functions as F
+
+    out = scd2_upsert(spark, target_path,
+                      updates.withColumn("effective_at",
+                                         F.col("v").cast("timestamp")),
+                      keys, **kw)
+    return out.filter("is_current").drop(
+        "effective_at", "valid_from", "valid_to", "is_current")
+
+
+# the partition contract and the crash recovery live in the rewrite
+# both table writers share; each test below runs on both
+WRITERS = pytest.mark.parametrize(
+    "write", [merge_upsert, _scd2_current],
+    ids=["merge_upsert", "scd2_upsert"])
+
+
+@WRITERS
+def test_merge_upsert_partition_contract_guards(spark, tmp_path, write):
     df = spark.createDataFrame([("a", "x", 1)], ["k", "p", "v"])
     # partition column must be part of the key
     with pytest.raises(ValueError, match="must be one of the merge keys"):
-        merge_upsert(spark, os.path.join(tmp_path, "t1"), df,
-                     keys=["k"], partition_by="p")
+        write(spark, os.path.join(tmp_path, "t1"), df,
+              keys=["k"], partition_by="p")
     # both shapes at once is ambiguous
     with pytest.raises(ValueError, match="not both"):
-        merge_upsert(spark, os.path.join(tmp_path, "t2"), df,
-                     keys=["k", "p"], partition_by="p", hash_buckets=4)
+        write(spark, os.path.join(tmp_path, "t2"), df,
+              keys=["k", "p"], partition_by="p", hash_buckets=4)
     # changing the bucket count on an existing table is rejected
     target = os.path.join(tmp_path, "t3")
-    merge_upsert(spark, target, df, keys=["k"], hash_buckets=4)
+    write(spark, target, df, keys=["k"], hash_buckets=4)
     with pytest.raises(ValueError, match="merge spec mismatch"):
-        merge_upsert(spark, target, df, keys=["k"], hash_buckets=8)
+        write(spark, target, df, keys=["k"], hash_buckets=8)
 
 
-@pytest.mark.parametrize("crash_at", [1, 2])
+@pytest.mark.parametrize(
+    "write,crash_at",
+    [(merge_upsert, 1), (merge_upsert, 2),
+     (_scd2_current, 1), (_scd2_current, 2)],
+    ids=["1", "2", "scd2_upsert-1", "scd2_upsert-2"])
 def test_merge_upsert_crash_mid_swap_recovers(spark, tmp_path, monkeypatch,
-                                              crash_at):
+                                              write, crash_at):
     """Kill-point injection: crash before/between the two renames of a
     partition swap. Invariant: the partition's data exists on disk at
     every point (under the primary or the dot-aside name — the aside is
@@ -241,7 +269,7 @@ def test_merge_upsert_crash_mid_swap_recovers(spark, tmp_path, monkeypatch,
     base = spark.createDataFrame(
         [("a", "p1", 1), ("b", "p1", 2), ("c", "p2", 3)],
         ["k", "p", "v"])
-    merge_upsert(spark, target, base, keys=["k", "p"], partition_by="p")
+    write(spark, target, base, keys=["k", "p"], partition_by="p")
     updates = spark.createDataFrame([("a", "p1", 10)], ["k", "p", "v"])
 
     calls = {"n": 0}
@@ -261,8 +289,7 @@ def test_merge_upsert_crash_mid_swap_recovers(spark, tmp_path, monkeypatch,
 
     monkeypatch.setattr(W.os, "rename", flaky_rename)
     with pytest.raises(OSError, match="injected crash"):
-        merge_upsert(spark, target, updates, keys=["k", "p"],
-                     partition_by="p")
+        write(spark, target, updates, keys=["k", "p"], partition_by="p")
     monkeypatch.setattr(W.os, "rename", real_rename)
 
     # the table is never in a "neither" state: either the old partition
@@ -273,25 +300,26 @@ def test_merge_upsert_crash_mid_swap_recovers(spark, tmp_path, monkeypatch,
 
     # replaying the batch self-heals (reconcile + idempotent merge)
     spark.catalog.refreshByPath(target)
-    result = merge_upsert(spark, target, updates, keys=["k", "p"],
-                          partition_by="p")
+    result = write(spark, target, updates, keys=["k", "p"],
+                   partition_by="p")
     rows = {(r.k, r.p): r.v for r in result.collect()}
     assert rows == {("a", "p1"): 10, ("b", "p1"): 2, ("c", "p2"): 3}
     assert not any(e.endswith("__aside") for e in os.listdir(target))
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
 
 
+@WRITERS
 def test_merge_upsert_crash_during_full_table_swap_recovers(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, write):
     """Same kill-point discipline for the whole-table swap (the
-    unpartitioned path scd2_upsert also uses): a crash between
-    rename-aside and rename-in leaves the old table recoverable; the
-    next call rolls it back and completes."""
+    unpartitioned path): a crash between rename-aside and rename-in
+    leaves the old table recoverable; the next call rolls it back and
+    completes."""
     import database_convertor_spark.sources.writers as W
 
     target = os.path.join(tmp_path, "t")
-    merge_upsert(spark, target,
-                 spark.createDataFrame([("a", 1)], ["k", "v"]), keys=["k"])
+    write(spark, target,
+          spark.createDataFrame([("a", 1)], ["k", "v"]), keys=["k"])
 
     real_rename = os.rename
 
@@ -303,17 +331,16 @@ def test_merge_upsert_crash_during_full_table_swap_recovers(
 
     monkeypatch.setattr(W.os, "rename", crash_after_aside)
     with pytest.raises(OSError, match="injected crash"):
-        merge_upsert(spark, target,
-                     spark.createDataFrame([("a", 2)], ["k", "v"]),
-                     keys=["k"])
+        write(spark, target,
+              spark.createDataFrame([("a", 2)], ["k", "v"]), keys=["k"])
     monkeypatch.setattr(W.os, "rename", real_rename)
 
     # target path is gone but the aside holds the old table
     assert os.path.isdir(os.path.join(tmp_path, ".t__aside"))
     spark.catalog.refreshByPath(target)
-    result = merge_upsert(spark, target,
-                          spark.createDataFrame([("a", 2)], ["k", "v"]),
-                          keys=["k"])
+    result = write(spark, target,
+                   spark.createDataFrame([("a", 2)], ["k", "v"]),
+                   keys=["k"])
     assert {(r.k, r.v) for r in result.collect()} == {("a", 2)}
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
 
@@ -553,3 +580,33 @@ def test_xlsx_styled_export_in_stdlib_codec(spark, tmp_path):
     back = read_excel(spark, path, "Companies")
     assert sorted(map(tuple, back.collect())) == \
         sorted(map(tuple, df.collect()))
+
+
+def test_directory_renames_live_only_in_writers():
+    """Every directory swap goes through ``writers._swap_dir`` (and its
+    crash reconcile): an ``os.rename`` / ``os.rmdir`` call anywhere
+    else in the package is a hand-rolled swap no reconcile knows about."""
+    import ast
+
+    import database_convertor_spark
+
+    root = os.path.dirname(database_convertor_spark.__file__)
+    allowed = os.path.join(root, "sources", "writers.py")
+    offenders = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == allowed:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for node in ast.walk(tree):
+                fn = node.func if isinstance(node, ast.Call) else None
+                if isinstance(fn, ast.Attribute) \
+                        and fn.attr in ("rename", "rmdir") \
+                        and isinstance(fn.value, ast.Name) \
+                        and fn.value.id == "os":
+                    offenders.append(
+                        f"{os.path.relpath(path, root)}:{node.lineno} "
+                        f"os.{fn.attr}")
+    assert offenders == [], offenders
