@@ -1541,7 +1541,8 @@ def compact_ivfpq_index(spark, path: str) -> int:
     Crash-safe stage-and-swap, as in the text twin: staging lands
     COMPLETE (sidecar copied in) and replaces the index with
     ``writers._swap_dir``; a crash mid-swap is repaired by the next
-    compaction, which starts with ``writers._reconcile_asides``.
+    index writer (this compaction, or the IVFPQ index stream), which
+    starts with ``writers._reconcile_asides``.
     Returns the compacted row count."""
     import os
     import shutil

@@ -37,9 +37,11 @@ index compactions (search.py, similarity_search.py) and in the text
 index stream's quarantine (streaming/pipeline.py). At every
 intermediate point the data exists on disk under either the final or
 the ``__aside`` name; ``_reconcile_asides`` (run at the start of every
-writer of such a directory) rolls an interrupted swap forward or
-back, so a crash can never leave a table, an index (or a partition of
-either) missing.
+writer of such a directory: both table writers, both index
+compactions and both index streams) rolls an interrupted swap
+forward or back, so a crash never loses a table, an index or a
+partition of either. Readers do not reconcile: until the next writer
+runs, the data sits under the aside name, out of readers' sight.
 
 Per-table partition contracts live in ``schemas.MERGE_PARTITION_SPECS``
 next to the key contracts in ``schemas.MERGE_KEYS``. With a
@@ -60,7 +62,6 @@ from pyspark.sql import functions as F
 
 _ASIDE_SUFFIX = "__aside"
 _SPEC_FILE = "_merge_spec.json"  # leading '_' → invisible to Spark reads
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir name for null
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite",
@@ -169,26 +170,16 @@ def _swap_dir(src: str, dst: str) -> None:
         shutil.rmtree(aside)
 
 
-def swap_partitions(staging: str, target_path: str, part_col: str,
-                    touched: list) -> None:
+def _swap_partitions(staging: str, target_path: str, part_col: str) -> None:
     """Swap each partition directory a staging write produced into
-    ``target_path`` (``_swap_dir`` each, Spark's own dir-name encoding
-    on both sides), remove a ``touched`` partition that staged nothing
-    (every row of it was dropped), then delete the staging dir.
-    Partitions outside ``touched`` are never opened. A removed
-    partition is named ``{part_col}={value}`` (null → Spark's default
-    partition name), so a value Spark would escape in a dir name must
-    always stage rows — as every value of an upsert batch does."""
-    staged = {e for e in os.listdir(staging)
-              if e.startswith(part_col + "=")}
-    for entry in staged:
-        _swap_dir(os.path.join(staging, entry),
-                  os.path.join(target_path, entry))
-    for v in touched:
-        entry = f"{part_col}={_NULL_PARTITION if v is None else v}"
-        dst = os.path.join(target_path, entry)
-        if entry not in staged and os.path.isdir(dst):
-            shutil.rmtree(dst)
+    ``target_path`` (``_swap_dir`` each), then delete the staging dir.
+    Dir names come from Spark's listing of the staging dir, so both
+    sides carry Spark's own escaping; partitions that staged nothing
+    are never opened."""
+    for entry in os.listdir(staging):
+        if entry.startswith(part_col + "="):
+            _swap_dir(os.path.join(staging, entry),
+                      os.path.join(target_path, entry))
     shutil.rmtree(staging)
 
 
@@ -207,7 +198,7 @@ def _reconcile_asides(target_path: str) -> None:
     rolled forward (primary present → delete aside) or rolled back
     (primary missing → rename aside to primary). Run at the start of
     every writer of a swapped directory (both table writers, both
-    index compactions, the text index stream), so the next write after
+    index compactions, both index streams), so the next write after
     a crash self-heals.
     A partition-scoped merge interrupted BETWEEN partition swaps leaves
     some partitions new and some old — never missing — and replaying
@@ -358,7 +349,8 @@ def _partition_scoped_write(spark: SparkSession, target_path: str,
         writer = writer.partitionBy(part_col)
     writer.parquet(staging)
     if scoped:
-        swap_partitions(staging, target_path, part_col, touched)
+        # every touched partition stages at least its update rows
+        _swap_partitions(staging, target_path, part_col)
     else:
         if part_col:
             _write_merge_spec(staging, want_spec)

@@ -376,8 +376,11 @@ def run_index_ingest_stream(spark: SparkSession, landing_dir: str,
         _require_local_index_path,
         ivfpq_encode_under,
     )
+    from ..sources.writers import _reconcile_asides
 
     _require_local_index_path(index_path, "_codebooks.json")
+    # roll back (or forward) a compaction swap a crash interrupted
+    _reconcile_asides(index_path)
     with open(os.path.join(index_path, "_codebooks.json")) as fh:
         cb = json.load(fh)
     coarse, books = cb["coarse"], cb["books"]
@@ -467,11 +470,12 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
     the drain."""
     import json
     import os
+    import shutil
     import tempfile
 
     from ..operators.search import _postings
     from ..operators.similarity_search import _require_local_index_path
-    from ..sources.writers import _reconcile_asides, swap_partitions
+    from ..sources.writers import _reconcile_asides, _swap_partitions
 
     _require_local_index_path(index_path, "_stats.json")
     # roll back (or forward) a quarantine swap a crash interrupted
@@ -518,9 +522,14 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
                 prefix="text_index_reconcile_", dir=parent)
             (cleaned.write.mode("overwrite").partitionBy("bucket")
              .parquet(staging))
+            staged = set(os.listdir(staging))
+            _swap_partitions(staging, index_path, "bucket")
             # a bucket whose every row was suspect stages nothing —
-            # swap_partitions removes its old dir entirely
-            swap_partitions(staging, index_path, "bucket", touched)
+            # its old dir must go entirely
+            for b in touched:
+                leftover = os.path.join(index_path, f"bucket={b}")
+                if f"bucket={b}" not in staged and os.path.isdir(leftover):
+                    shutil.rmtree(leftover)
             spark.catalog.refreshByPath(index_path)
 
     stream = (spark.readStream

@@ -331,6 +331,56 @@ def test_ann_index_stream_skips_already_indexed_vecs(spark, tmp_path):
     assert got == want
 
 
+def test_ann_index_stream_recovers_crashed_compaction(spark, tmp_path,
+                                                     monkeypatch):
+    """A compaction that crashed between its rename-aside and its
+    rename-in leaves the index under its aside name; the IVFPQ stream
+    reconciles before it opens the codebooks, so it rolls the index
+    back and appends to it — the codes equal a fresh encode of the
+    union and no aside is left."""
+    from database_convertor_spark.operators.similarity_search import (
+        compact_ivfpq_index,
+        ivfpq_encode_under,
+        land_ivfpq_index,
+    )
+    from database_convertor_spark.streaming.pipeline import (
+        run_index_ingest_stream,
+    )
+
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    path = os.path.join(tmp_path, "aindex")
+    coarse, books = land_ivfpq_index(emb.filter("vec_id < 300"), path,
+                                     n_cells=4, m=4, ks=8, n_iter=2)
+
+    calls = {"n": 0}
+    real_rename = os.rename
+
+    def crash_on_second_rename(src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError("injected crash")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_ivfpq_index(spark, path)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(path)           # caught mid-swap
+
+    landing = os.path.join(tmp_path, "landing")
+    emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 350)) \
+        .write.parquet(landing)
+    after = run_index_ingest_stream(spark, landing, path,
+                                    os.path.join(tmp_path, "ckpt"))
+    got = sorted((r.vec_id, r.cell, tuple(r.codes))
+                 for r in after.collect())
+    want = sorted((r.vec_id, r.cell, tuple(r.codes)) for r in
+                  ivfpq_encode_under(emb.filter("vec_id < 350"),
+                                     coarse, books).collect())
+    assert got == want
+    assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+
+
 def test_text_index_manifest_self_heals_and_reconciles(spark, tmp_path):
     """The doc-id manifest guard (round 9): (a) a pre-manifest index
     self-heals — the stream derives the manifest from postings once

@@ -363,6 +363,30 @@ def test_merge_upsert_null_partition_value(spark, tmp_path):
     assert rows == [("a", "p1", 1), ("b", None, 20)]
 
 
+@WRITERS
+@pytest.mark.parametrize("first,second",
+                         [("a", "a/.."), ("a:b", "a%3Ab")],
+                         ids=["dot-dot", "escaped"])
+def test_scoped_write_keeps_partitions_spark_escapes(spark, tmp_path, write,
+                                                     first, second):
+    """Natural partition values come from outside the program, and
+    Spark escapes some characters in a partition dir name ('/' → %2F,
+    ':' → %3A, '%' → %25). A scoped write swaps only the dir names
+    Spark staged, so a value that reads like a path ('a/..') or like
+    another value's escaped name ('a%3Ab') never reaches past its own
+    partition: the table, its parent and every other partition
+    survive."""
+    target = os.path.join(tmp_path, "planning")
+    kw = {"keys": ["k", "borough"], "partition_by": "borough"}
+    write(spark, target, spark.createDataFrame(
+        [("x", first, 1), ("y", "z", 2)], ["k", "borough", "v"]), **kw)
+    out = write(spark, target, spark.createDataFrame(
+        [("x", second, 3)], ["k", "borough", "v"]), **kw)
+    assert sorted((r.k, r.borough, r.v) for r in out.collect()) == sorted(
+        [("x", first, 1), ("y", "z", 2), ("x", second, 3)])
+    assert os.listdir(tmp_path) == ["planning"]
+
+
 def test_engine_upsert_uses_partition_contract(spark, tmp_path):
     """Engine.upsert wires schemas.MERGE_PARTITION_SPECS through: the
     companies table lands hash-bucketed on disk and the facade's
