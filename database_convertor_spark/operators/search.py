@@ -505,9 +505,8 @@ def compact_text_index(spark, path: str) -> dict:
     ``writers._reconcile_asides``. Returns the refreshed stats."""
     import json
     import os
-    import tempfile
 
-    from ..sources.writers import _reconcile_asides, _swap_dir
+    from ..sources.writers import _reconcile_asides, _stage_dir, _swap_dir
 
     _require_local_index_path(path, "_stats.json")
     _reconcile_asides(path)
@@ -525,8 +524,7 @@ def compact_text_index(spark, path: str) -> dict:
              "sumdl": int(agg["sumdl"]),
              "n_buckets": int(old["n_buckets"]),
              "n_tokenless": int(n_tokenless)}
-    parent = os.path.dirname(path) or "."
-    staging = tempfile.mkdtemp(prefix="text_index_compact_", dir=parent)
+    staging = _stage_dir(path)
     post.write.mode("overwrite").partitionBy("bucket").parquet(staging)
     # rebuild the ingest-guard manifest from the deduplicated postings
     # UNION the old manifest (which alone remembers token-less docs —

@@ -1,19 +1,26 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
+Search:
 - ``brute_force_topk`` — exact top-k by cosine; the query set
   broadcasts, the corpus streams; per-partition top-k then a global
   k-merge (TakeOrdered via window over query_id). Baseline + oracle.
-- ``ivf_topk`` — the scale path: probe only the coarse-quantizer
-  bucket(s) of each query (the ``label`` column is the precomputed
-  centroid assignment). Bucket pruning turns the scan into
+  ``brute_force_topk_numpy`` is its Arrow-batched GEMM twin.
+- ``ivf_topk`` and the IVF/PQ/IVFADC family — the scale paths: probe
+  only the coarse-quantizer bucket(s) of each query and/or scan
+  compressed codes. Bucket pruning turns the scan into
   corpus/n_buckets per query, the IVF trade: recall bounded by bucket
   assignment.
+Pair scoring is higher-order-function expressions (zip_with +
+aggregate) — JVM-side, no Python per row.
 
-The dot product / norms are higher-order-function expressions
-(zip_with + aggregate) — JVM-side, no Python per row. For very wide
-vectors a Pandas-UDF + numpy batch path would amortize better; at 64
-dims the expression path wins (no Arrow transfer).
+Codebooks: the k-means and PQ fits, ``kmeans_assign`` and
+``pq_encode`` are Arrow-batched numpy GEMM kernels (``mapInPandas``)
+sharing one expanded-form squared L2 (``_sq_dists``) and one Lloyd
+per-task fold (``_lloyd_partials``). k-means is PQ with one subspace
+(plus optional re-normalization); under ``LOCAL_FIT_ROWS_BUDGET`` rows
+a fit collects the vectors once and runs that fold driver-side over
+every chunk (``_lloyd_local``), past it once per task per iteration
+(``_lloyd_distributed``).
 """
 
 from __future__ import annotations
@@ -333,9 +340,14 @@ def _norm_rows(mat):
 #: collect-barrier jobs per fit. 65,536 rows x 64 dims is ~32 MB of
 #: driver floats; the element cap below bounds wide-vector corpora.
 #: A 100 TB corpus blows the limit probe and falls back to the
-#: distributed loop — it never collects.
+#: distributed loop — it never collects. Read at call time, so a test
+#: forces the distributed loop by setting it to 0.
 LOCAL_FIT_ROWS_BUDGET = 65_536
 _LOCAL_FIT_MAX_ELEMENTS = 8_388_608
+#: a distributed Lloyd iteration collects its npart x m x k per-task
+#: partial rows directly up to this many, else reduces them through a
+#: groupBy (see _lloyd_distributed)
+_DIRECT_PARTIAL_ROWS = 65_536
 
 
 def _arrow_batch_rows(spark) -> int:
@@ -350,11 +362,20 @@ def _arrow_batch_rows(spark) -> int:
         return 10_000
 
 
-def _collect_vectors_local(emb: DataFrame, budget_rows: int):
+def _vectors(frame: DataFrame, id_col: str = "vec_id",
+             vec_col: str = "embedding") -> DataFrame:
+    """The (_id, _v array<double>) projection the fits and assign read."""
+    return frame.select(F.col(id_col).alias("_id"),
+                        F.col(vec_col).cast("array<double>").alias("_v"))
+
+
+def _collect_vectors_local(emb: DataFrame):
     """The (_id, _v) projection collected for a local fit, or None
-    past ``budget_rows`` rows (0 disables), past the element cap, or on
-    a failed collect — callers fall back to the distributed loop."""
-    pdf = collect_within_budget(emb, budget_rows) if budget_rows else None
+    past ``LOCAL_FIT_ROWS_BUDGET`` rows (0 disables), past the element
+    cap, or on a failed collect — callers fall back to the distributed
+    loop."""
+    budget = LOCAL_FIT_ROWS_BUDGET
+    pdf = collect_within_budget(emb, budget) if budget else None
     if pdf is not None and len(pdf):
         head = pdf["_v"].iloc[0]
         dim = 0 if head is None else len(head)
@@ -398,90 +419,223 @@ def _vec_chunks(vs, batch_rows: int):
             for i in range(0, len(vs), batch_rows)]
 
 
-def _kmeans_iterations_local(chunks, C, n_iter: int, normalize: bool
-                             ) -> tuple[list[list[float]], list[float]]:
-    """Driver-local twin of kmeans_fit's distributed loop: per chunk
-    the SAME GEMM/argmin/masked-sum ops as the mapInPandas generator,
-    folded in the same (ascending cluster) order the direct-collect
-    driver fold applies — bit-identical to the distributed path on a
-    single-partition input (pinned by test)."""
+def _sq_dists(X, cents):
+    """Squared L2 from every row of ``X`` to every row of ``cents`` in
+    expanded form, ||x||^2 - 2 x.c + ||c||^2: one GEMM. The one
+    distance of the fits, ``kmeans_assign``, ``pq_encode`` and their
+    driver-side twins — a twin is bit-identical to its kernel because
+    both evaluate this expression on the same shapes; argmin takes the
+    lowest index on ties."""
+    return (X ** 2).sum(1)[:, None] - 2 * X @ cents.T + (cents ** 2).sum(1)
+
+
+def _init_books(init_vecs: list[list[float]], m: int, normalize: bool,
+                op: str) -> list:
+    """The m per-subspace init codebooks from full init vectors (one
+    codebook of k = len(init_vecs) rows each; k-means is m=1),
+    unit-normalized first when ``normalize``. Refuses an empty init
+    (empty corpus) and a dim not divisible by m, naming ``op``."""
     import numpy as np
 
-    k, dim = C.shape
-    inertia: list[float] = []
-    for _ in range(n_iter):
-        c_sq = (C ** 2).sum(axis=1)
-        t_sums = np.zeros((k, dim))
-        t_counts = np.zeros(k, dtype=np.int64)
-        t_d = np.zeros(k)
-        seen = np.zeros(k, dtype=bool)
-        for X0 in chunks:
-            X = _norm_rows(X0) if normalize else X0
-            d2 = (X ** 2).sum(1)[:, None] - 2 * X @ C.T + c_sq
-            a = d2.argmin(axis=1)
-            mind = d2[np.arange(len(X)), a]
-            for c in np.unique(a):
-                m_ = a == c
-                t_sums[c] += X[m_].sum(0)
-                t_counts[c] += int(m_.sum())
-                t_d[c] += float(mind[m_].sum())
-                seen[c] = True
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k)
-        sq_sum = 0.0
-        for c in range(k):
-            if seen[c]:
-                sums[c] += t_sums[c]
-                counts[c] += int(t_counts[c])
-                sq_sum += float(t_d[c])
-        newC = C.copy()
-        nz = counts > 0
-        newC[nz] = sums[nz] / counts[nz, None]
+    if not init_vecs:
+        raise ValueError(f"{op}: empty corpus — nothing to train on")
+    X0 = np.vstack([np.asarray(v, dtype="float64") for v in init_vecs])
+    if normalize:
+        X0 = _norm_rows(X0)
+    dim = X0.shape[1]
+    if dim % m:
+        raise ValueError(f"{op}: dim {dim} not divisible by m={m}")
+    sub = dim // m
+    return [X0[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
+
+
+def _lloyd_partials(chunks, books: list, normalize: bool) -> list:
+    """One task's Lloyd fold: each chunk (a float64 matrix of full
+    vectors, unit-normalized first when ``normalize``) is assigned per
+    subspace to its nearest centroid by ``_sq_dists``, and the
+    per-(subspace, cluster) vector sums, counts and squared distances
+    accumulate over the chunks in order. Returns one
+    (j, c, sum, count, sq-dist) row per (subspace, cluster) that won a
+    row, in (j asc, c asc) order. The distributed loop runs it once per
+    task; the local loop once over every collected chunk."""
+    import numpy as np
+
+    m = len(books)
+    k, sub = books[0].shape
+    sums = np.zeros((m, k, sub))
+    counts = np.zeros((m, k), dtype=np.int64)
+    dists = np.zeros((m, k))
+    seen = np.zeros((m, k), dtype=bool)
+    for X in chunks:
         if normalize:
-            newC = _norm_rows(newC)
-        C = newC
-        inertia.append(sq_sum)
-    return [row.tolist() for row in C], inertia
+            X = _norm_rows(X)
+        for j, cents in enumerate(books):
+            Xj = X[:, j * sub:(j + 1) * sub]
+            d2 = _sq_dists(Xj, cents)
+            a = d2.argmin(axis=1)
+            mind = d2[np.arange(len(Xj)), a]
+            for c in np.unique(a):
+                msk = a == c
+                sums[j, c] += Xj[msk].sum(0)
+                counts[j, c] += int(msk.sum())
+                dists[j, c] += float(mind[msk].sum())
+                seen[j, c] = True
+    return [(j, c, sums[j, c], int(counts[j, c]), float(dists[j, c]))
+            for j in range(m) for c in range(k) if seen[j, c]]
 
 
-def _pq_iterations_local(chunks, C: list, n_iter: int
-                         ) -> list[list[list[float]]]:
-    """Driver-local twin of pq_fit's distributed loop — same per-chunk
-    subspace GEMMs, same (subspace asc, cluster asc) fold order as the
-    direct-collect path, same 9dp-rounded return."""
+def _lloyd_step(books: list, rows, normalize: bool) -> tuple[list, float]:
+    """Fold one iteration's (j, c, sum, count, sq-dist) rows, in the
+    order given, into the new codebooks and the iteration's inertia.
+    An emptied cluster keeps its centroid. ``normalize`` re-projects
+    the centroids onto the unit sphere after the mean update
+    (spherical k-means, faiss-style): on unit vectors L2-argmin ==
+    cosine-argmax, so the assignment metric and the cosine probe
+    ranking in _probe_and_search agree; a raw mean centroid would be
+    assigned by L2 but probed by cosine — an inconsistent pair that
+    costs recall at nprobe < k."""
     import numpy as np
 
-    m = len(C)
-    k, sub = C[0].shape
+    m = len(books)
+    k, sub = books[0].shape
+    sums = np.zeros((m, k, sub))
+    counts = np.zeros((m, k))
+    inertia = 0.0
+    for j, c, s, n, d in rows:
+        sums[j, c] += np.asarray(s, dtype="float64")
+        counts[j, c] += n
+        inertia += d
+    new = []
+    for j, C in enumerate(books):
+        newC = C.copy()
+        nz = counts[j] > 0
+        newC[nz] = sums[j][nz] / counts[j][nz, None]
+        new.append(_norm_rows(newC) if normalize else newC)
+    return new, inertia
+
+
+def _lloyd_local(chunks, books: list, n_iter: int,
+                 normalize: bool) -> tuple[list, list[float]]:
+    """Lloyd's loop over driver-resident chunks: each iteration is one
+    ``_lloyd_partials`` fold over all of them, so on a
+    single-partition input it is bit-identical to
+    ``_lloyd_distributed``. Returns (codebooks, inertia per
+    iteration)."""
+    inertia = []
     for _ in range(n_iter):
-        t_sums = np.zeros((m, k, sub))
-        t_counts = np.zeros((m, k), dtype=np.int64)
-        seen = np.zeros((m, k), dtype=bool)
-        for X in chunks:
-            for j, cents in enumerate(C):
-                Xj = X[:, j * sub:(j + 1) * sub]
-                d2 = ((Xj ** 2).sum(1)[:, None]
-                      - 2 * Xj @ cents.T + (cents ** 2).sum(1))
-                a = d2.argmin(axis=1)
-                for c in np.unique(a):
-                    msk = a == c
-                    t_sums[j, c] += Xj[msk].sum(0)
-                    t_counts[j, c] += int(msk.sum())
-                    seen[j, c] = True
-        sums = np.zeros((m, k, sub))
-        counts = np.zeros((m, k))
-        for j in range(m):
-            for c in range(k):
-                if seen[j, c]:
-                    sums[j, c] += t_sums[j, c]
-                    counts[j, c] += int(t_counts[j, c])
-        for j in range(m):
-            newC = C[j].copy()
-            nz = counts[j] > 0
-            newC[nz] = sums[j][nz] / counts[j][nz, None]
-            C[j] = newC
-    return [[[round(float(x), 9) for x in c] for c in C[j]]
-            for j in range(m)]
+        books, d = _lloyd_step(
+            books, _lloyd_partials(chunks, books, normalize), normalize)
+        inertia.append(d)
+    return books, inertia
+
+
+def _lloyd_distributed(emb: DataFrame, books: list, n_iter: int,
+                       normalize: bool) -> tuple[list, list[float]]:
+    """Lloyd's loop over the ``_v`` column of ``emb`` (the caller
+    persists it): per iteration one ``mapInPandas`` pass runs
+    ``_lloyd_partials`` once per TASK over its Arrow batches against
+    the broadcast codebooks, so at most npart x m x k rows leave the
+    executors. Up to ``_DIRECT_PARTIAL_ROWS`` they are collected
+    directly and folded driver-side in partition order — one stage per
+    iteration instead of map + posexplode/groupBy + reduce (measured
+    0.42 s -> 0.22 s per iteration at sf0.1). Past it (a 100 TB scan
+    is ~10^5-10^6 tasks, whose partials would be GBs) the grouped
+    reduction bounds what reaches the driver. On a single-partition
+    input the direct fold is bit-identical to ``_lloyd_local``; across
+    tasks, or through the groupBy, the summation grouping changes,
+    which is inside the contract float summation already has
+    (centroids are rounding-stabilized downstream). (A pure-expression
+    argmin was tried first: every iteration's new centroid LITERALS
+    force a fresh whole-stage-codegen compile of a k x dim expression
+    tree — ~2 s/iteration of compile for milliseconds of data work.
+    The GEMM path recompiles nothing.)"""
+    import numpy as np
+    import pandas as pd
+
+    sc = emb.sparkSession.sparkContext
+    m = len(books)
+    k, sub = books[0].shape
+    direct = emb.rdd.getNumPartitions() * m * k <= _DIRECT_PARTIAL_ROWS
+    inertia = []
+    for _ in range(n_iter):
+        bc = sc.broadcast(books)
+
+        def partials(batches):
+            rows = _lloyd_partials(
+                (np.vstack(pdf["_v"].to_numpy()).astype("float64")
+                 for pdf in batches if len(pdf)), bc.value, normalize)
+            if rows:
+                yield pd.DataFrame(
+                    [(j, c, s.tolist(), n, d) for j, c, s, n, d in rows],
+                    columns=["j", "c", "s", "n", "d"])
+
+        mp = emb.mapInPandas(
+            partials, "j int, c int, s array<double>, n long, d double")
+        rows = mp.collect() if direct else _grouped_partials(mp, sub)
+        books, d = _lloyd_step(books, rows, normalize)
+        inertia.append(d)
+        bc.destroy()
+    return books, inertia
+
+
+def _grouped_partials(mp: DataFrame, sub: int) -> list:
+    """The past-``_DIRECT_PARTIAL_ROWS`` reduction of one iteration's
+    per-task partial rows: a groupBy(j, c, dim) sum, reassembled into
+    one (j, c, sum, count, sq-dist) row per (subspace, cluster), in
+    (j, c) order. Every dim's group sums the same count and sq-dist
+    rows; dim 0's is the one read."""
+    import numpy as np
+
+    agg = (mp.select("j", "c", "n", "d", F.posexplode("s").alias("p", "x"))
+           .groupBy("j", "c", "p")
+           .agg(F.sum("x").alias("x"), F.sum("n").alias("n"),
+                F.sum("d").alias("d"))
+           .collect())
+    rows: dict = {}
+    for r in agg:
+        row = rows.setdefault((r.j, r.c), [r.j, r.c, np.zeros(sub), 0, 0.0])
+        row[2][r.p] = r.x
+        if r.p == 0:
+            row[3], row[4] = r.n, r.d
+    return [rows[key] for key in sorted(rows)]
+
+
+def _round9(books: list) -> list:
+    """Codebooks as nested lists rounded to 9dp — the cross-engine
+    contract of the PQ and IVFPQ codebooks (see ``pq_fit``)."""
+    return [[[round(x, 9) for x in c] for c in b.tolist()] for b in books]
+
+
+def _lloyd_fit(corpus: DataFrame, k: int, m: int, n_iter: int,
+               id_col: str, vec_col: str, normalize: bool,
+               init_vecs: list[list[float]] | None,
+               op: str) -> tuple[list, list[float]]:
+    """The one Lloyd fit behind ``kmeans_fit`` (m=1) and ``pq_fit``:
+    under ``LOCAL_FIT_ROWS_BUDGET`` rows the vectors collect ONCE and
+    the whole loop is ``_lloyd_local`` (one job); past it — or for an
+    id type the driver-side md5 init does not cover — the projection
+    is persisted, the init takes one job and ``_lloyd_distributed``
+    one per iteration. Init: ``init_vecs`` when given, else the k rows
+    with the smallest md5(id); fewer rows than k clamp k. Returns
+    (codebooks, inertia per iteration)."""
+    emb = _vectors(corpus, id_col, vec_col)
+    pdf = _collect_vectors_local(emb)
+    if pdf is not None:
+        init = (init_vecs[:k] if init_vecs is not None
+                else _md5_init_local(pdf, emb, k))
+        if init is not None:
+            return _lloyd_local(
+                _vec_chunks(pdf["_v"], _arrow_batch_rows(emb.sparkSession)),
+                _init_books(init, m, normalize, op), n_iter, normalize)
+    emb = emb.persist()
+    try:
+        if init_vecs is None:
+            init_vecs = _md5_init_vecs(emb, k, id_col="_id", vec_col="_v")
+        return _lloyd_distributed(
+            emb, _init_books(init_vecs[:k], m, normalize, op), n_iter,
+            normalize)
+    finally:
+        emb.unpersist()
 
 
 def _md5_init_vecs(corpus: DataFrame, n: int, id_col: str = "vec_id",
@@ -507,7 +661,6 @@ def kmeans_fit(corpus: DataFrame, k: int = 8, n_iter: int = 5,
                id_col: str = "vec_id", vec_col: str = "embedding",
                normalize: bool = False,
                init_vecs: list[list[float]] | None = None,
-               local_rows_budget: int = LOCAL_FIT_ROWS_BUDGET,
                ) -> tuple[list[list[float]], list[float]]:
     """Lloyd's k-means over the embedding column — trains the IVF
     coarse quantizer instead of trusting a precomputed ``label``
@@ -518,15 +671,12 @@ def kmeans_fit(corpus: DataFrame, k: int = 8, n_iter: int = 5,
     k x dim doubles — driver-side state by design, broadcast into
     each iteration; the DATA never leaves executors. Per iteration one
     ``mapInPandas`` pass scores each Arrow batch against the codebook
-    with a single (batch x dim) @ (dim x k) GEMM and emits only the
-    k x dim partial sums + counts + inertia of that batch; the
-    partials are collected directly and summed driver-side when
-    npart x k fits the budget (one stage per iteration), else a
-    groupBy(cluster, dim) reduction bounds what reaches the driver.
-    (A pure-expression argmin was tried first: every
-    iteration's new centroid LITERALS force a fresh whole-stage-codegen
-    compile of a k x dim expression tree — ~2s/iteration of compile
-    for milliseconds of data work. The GEMM path recompiles nothing.)
+    with a single (batch x dim) @ (dim x k) GEMM and emits only each
+    task's k x dim partial sums + counts + inertia (``_lloyd_partials``;
+    k-means is ``pq_fit``'s loop with one subspace). Under the module
+    constant ``LOCAL_FIT_ROWS_BUDGET`` rows the vectors collect once
+    and the same fold runs driver-side: one job instead of 1 + n_iter
+    (``_lloyd_fit``).
 
     Deterministic: init picks the k rows with the smallest
     md5(id) (content-independent, engine-reproducible), ties on id;
@@ -538,150 +688,9 @@ def kmeans_fit(corpus: DataFrame, k: int = 8, n_iter: int = 5,
     the discipline that keeps assignment (L2 on the sphere) and probe
     ranking (cosine) the same ordering.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    emb = corpus.select(F.col(id_col).alias("_id"),
-                        F.col(vec_col).cast("array<double>").alias("_v"))
-    # Local-fit route (guide §1.2 — one job instead of 1 + n_iter
-    # collect barriers): under the row budget the vectors collect ONCE
-    # and every iteration is driver-local numpy, chunk-for-chunk the
-    # same fold as the distributed generator (bit-identical on
-    # single-partition inputs — pinned by
-    # test_kmeans_local_fit_matches_distributed).
-    pdf = _collect_vectors_local(emb, local_rows_budget)
-    if pdf is not None:
-        local_init = (init_vecs[:k] if init_vecs is not None
-                      else _md5_init_local(pdf, emb, k))
-        if local_init is not None:
-            if not local_init:
-                raise ValueError(
-                    "kmeans_fit: empty corpus — nothing to train on")
-            C = np.vstack([np.asarray(v, dtype="float64")
-                           for v in local_init])
-            if normalize:
-                C = _norm_rows(C)
-            return _kmeans_iterations_local(
-                _vec_chunks(pdf["_v"], _arrow_batch_rows(spark)),
-                C, n_iter, normalize)
-    emb = emb.persist()
-    try:
-        if init_vecs is None:
-            init_vecs = _md5_init_vecs(emb, k, id_col="_id", vec_col="_v")
-        else:
-            init_vecs = init_vecs[:k]
-        if not init_vecs:
-            raise ValueError("kmeans_fit: empty corpus — nothing to train on")
-        # fewer rows than requested clusters: every row is its own
-        # centroid (k silently clamps — the counts/sums arrays below
-        # are sized by the ACTUAL codebook, not the request)
-        k = len(init_vecs)
-        C = np.vstack([np.asarray(v, dtype="float64") for v in init_vecs])
-        if normalize:
-            C = _norm_rows(C)
-        dim = C.shape[1]
-        # Partial-reduction route (guide §2.4 — remove shuffles
-        # outright): each task accumulates its batches' codebook-sized
-        # partials IN the generator and emits <= k rows per TASK (r11,
-        # round-10 advice — the per-BATCH emission made driver collect
-        # volume scale with batches-per-partition, so the 65,536-row
-        # budget below did not bound what it claimed to), so up to
-        # ``npart x k`` rows reach the driver. Under the budget they
-        # are collected DIRECTLY and summed driver-side — one stage
-        # per iteration instead of map + posexplode/groupBy + reduce
-        # (measured 0.42s -> 0.22s per iteration at sf0.1). Past the
-        # budget (a 100 TB scan is ~10^5-10^6 tasks, whose partials
-        # would be GBs) the grouped reduction stays: the shuffle is
-        # codebook-sized per task either way. Summation ORDER: each
-        # task folds its batches' partials left to right and the driver
-        # folds tasks in partition order — on a single-partition input
-        # (every driver fixture) the addition chain is bit-identical to
-        # the per-batch collect's; across tasks the grouping changes,
-        # which is inside the contract float summation already has
-        # (shuffle- and engine-order-nondeterministic; centroids are
-        # rounding-stabilized downstream, oracle re-verified).
-        npart = emb.rdd.getNumPartitions()
-        direct = npart * k <= 65536
-        inertia: list[float] = []
-        for _ in range(n_iter):
-            bc = spark.sparkContext.broadcast(C)
-
-            def partials(batches):
-                cents = bc.value
-                c_sq = (cents ** 2).sum(axis=1)
-                kk, dd = cents.shape
-                t_sums = np.zeros((kk, dd))
-                t_counts = np.zeros(kk, dtype=np.int64)
-                t_d = np.zeros(kk)
-                seen = np.zeros(kk, dtype=bool)
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.vstack(pdf["_v"].to_numpy()).astype("float64")
-                    if normalize:
-                        X = _norm_rows(X)
-                    d2 = (X ** 2).sum(1)[:, None] - 2 * X @ cents.T + c_sq
-                    a = d2.argmin(axis=1)
-                    mind = d2[np.arange(len(X)), a]
-                    for c in np.unique(a):
-                        m = a == c
-                        t_sums[c] += X[m].sum(0)
-                        t_counts[c] += int(m.sum())
-                        t_d[c] += float(mind[m].sum())
-                        seen[c] = True
-                out = [{"c": int(c), "s": t_sums[c].tolist(),
-                        "n": int(t_counts[c]), "d": float(t_d[c])}
-                       for c in range(kk) if seen[c]]
-                if out:
-                    yield pd.DataFrame(out)
-
-            mp = emb.mapInPandas(
-                partials, "c int, s array<double>, n long, d double")
-            sums = np.zeros((k, dim))
-            counts = np.zeros(k)
-            sq_sum = 0.0
-            if direct:
-                for row in mp.collect():
-                    sums[row.c] += np.asarray(row.s, dtype="float64")
-                    counts[row.c] += row.n
-                    sq_sum += row.d
-            else:
-                agg = (mp.select("c", "n", "d",
-                                 F.posexplode("s").alias("p", "x"))
-                       .groupBy("c", "p")
-                       .agg(F.sum("x").alias("sx"),
-                            F.sum(F.when(F.col("p") == 0, F.col("n"))
-                                  .otherwise(0)).alias("np"),
-                            F.sum(F.when(F.col("p") == 0, F.col("d"))
-                                  .otherwise(0.0)).alias("dp"))
-                       .collect())
-                # per (cluster, dim): sum of partial sums; counts/
-                # inertia ride dim 0 only so they are not multiplied
-                # by dim
-                for row in agg:
-                    sums[row.c, row.p] = row.sx
-                    if row.p == 0:
-                        counts[row.c] = row.np
-                        sq_sum += row.dp
-            newC = C.copy()  # an emptied cluster keeps its centroid
-            nz = counts > 0
-            newC[nz] = sums[nz] / counts[nz, None]
-            if normalize:
-                # spherical k-means re-projects centroids onto the
-                # unit sphere after EVERY mean update (faiss-style):
-                # on unit vectors L2-argmin == cosine-argmax, so the
-                # assignment metric and the cosine probe ranking in
-                # _probe_and_search agree; a raw mean centroid would
-                # be assigned by L2 but probed by cosine — an
-                # inconsistent pair that costs recall at nprobe < k
-                newC = _norm_rows(newC)
-            C = newC
-            inertia.append(sq_sum)
-            bc.destroy()
-        return [row.tolist() for row in C], inertia
-    finally:
-        emb.unpersist()
+    books, inertia = _lloyd_fit(corpus, k, 1, n_iter, id_col, vec_col,
+                                normalize, init_vecs, "kmeans_fit")
+    return books[0].tolist(), inertia
 
 
 def kmeans_assign(corpus: DataFrame, centroids: list[list[float]],
@@ -709,16 +718,14 @@ def kmeans_assign(corpus: DataFrame, centroids: list[list[float]],
 
     def assign(batches):
         cents = bc.value
-        c_sq = (cents ** 2).sum(axis=1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             X = np.vstack(pdf["_v"].to_numpy()).astype("float64")
             if normalize:
                 X = _norm_rows(X)
-            d2 = (X ** 2).sum(1)[:, None] - 2 * X @ cents.T + c_sq
             out = {id_col: pdf["_id"],
-                   "cluster_id": d2.argmin(axis=1)}
+                   "cluster_id": _sq_dists(X, cents).argmin(axis=1)}
             if carry_vec:
                 out["_v"] = pdf["_v"]
             yield pd.DataFrame(out)
@@ -726,9 +733,7 @@ def kmeans_assign(corpus: DataFrame, centroids: list[list[float]],
     schema = f"{id_col} {id_t}, cluster_id int"
     if carry_vec:
         schema += ", _v array<double>"
-    return (corpus.select(F.col(id_col).alias("_id"),
-                          F.col(vec_col).cast("array<double>").alias("_v"))
-            .mapInPandas(assign, schema))
+    return _vectors(corpus, id_col, vec_col).mapInPandas(assign, schema)
 
 
 def _probe_and_search(queries: DataFrame, labeled_corpus: DataFrame,
@@ -905,8 +910,6 @@ def hard_negatives(queries: DataFrame, corpus: DataFrame, k: int = 5,
 def pq_fit(corpus: DataFrame, m: int = 4, ks: int = 8, n_iter: int = 3,
            id_col: str = "vec_id", vec_col: str = "embedding",
            init_vecs: list[list[float]] | None = None,
-           pre_persisted: bool = False,
-           local_rows_budget: int = LOCAL_FIT_ROWS_BUDGET,
            ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): split the vector into
@@ -925,7 +928,9 @@ def pq_fit(corpus: DataFrame, m: int = 4, ks: int = 8, n_iter: int = 3,
     per-subspace chains would (measured r7: the fit dominated every
     PQ-family query; at 100 TB an m-fold reduction in corpus passes is
     the difference between one index build and five). Only
-    m x ks x (dim/m) partials shuffle per iteration. The returned
+    m x ks x (dim/m) partials shuffle per iteration. Under the module
+    constant ``LOCAL_FIT_ROWS_BUDGET`` rows the same per-task fold runs
+    driver-side over one collect — one job (``_lloyd_fit``). The returned
     centroids are rounded to 9dp — the cross-engine contract that
     keeps downstream ADC distance tables reproducible to their own
     6dp rounding (mean-update arithmetic agrees to ~1e-13 across
@@ -935,127 +940,9 @@ def pq_fit(corpus: DataFrame, m: int = 4, ks: int = 8, n_iter: int = 3,
     chains and stay green — the combined pass changes job count, not
     arithmetic.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    emb = corpus.select(F.col(id_col).alias("_id"),
-                        F.col(vec_col).cast("array<double>").alias("_v"))
-    # Local-fit route — same budget/equivalence contract as
-    # kmeans_fit's (one collect job, per-chunk generator twin,
-    # (j asc, c asc) fold order; pinned by
-    # test_pq_local_fit_matches_distributed).
-    pdf = _collect_vectors_local(emb, local_rows_budget)
-    if pdf is not None:
-        local_init = (init_vecs[:ks] if init_vecs is not None
-                      else _md5_init_local(pdf, emb, ks))
-        if local_init is not None:
-            if not local_init:
-                raise ValueError(
-                    "pq_fit: empty corpus — nothing to train on")
-            import numpy as np
-            dim = len(local_init[0])
-            if dim % m:
-                raise ValueError(
-                    f"pq_fit: dim {dim} not divisible by m={m}")
-            sub = dim // m
-            X0 = np.vstack([np.asarray(v, dtype="float64")
-                            for v in local_init])
-            C = [X0[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
-            return _pq_iterations_local(
-                _vec_chunks(pdf["_v"], _arrow_batch_rows(spark)),
-                C, n_iter)
-    # ``pre_persisted``: the caller's input is already persisted for
-    # the query (the IVFADC residual frame) — a second .persist() of the
-    # renamed projection would cache the same bytes twice (r11)
-    if not pre_persisted:
-        emb = emb.persist()
-    try:
-        if init_vecs is None:
-            init_vecs = _md5_init_vecs(emb, ks, id_col="_id",
-                                       vec_col="_v")
-        else:
-            init_vecs = init_vecs[:ks]
-        if not init_vecs:
-            raise ValueError("pq_fit: empty corpus — nothing to train on")
-        # dim rides the init rows (full vectors) — no separate head job
-        dim = len(init_vecs[0])
-        if dim % m:
-            raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-        sub = dim // m
-        k = len(init_vecs)       # fewer rows than ks: k clamps
-        X0 = np.vstack([np.asarray(v, dtype="float64")
-                        for v in init_vecs])
-        C = [X0[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
-        # same partial-reduction route as kmeans_fit: each task
-        # accumulates its batches IN the generator and emits
-        # <= m x k rows per TASK (r11, round-10 advice — the budget
-        # must bound what actually reaches the driver) — collect
-        # directly under the budget, grouped reduction past it
-        npart = emb.rdd.getNumPartitions()
-        direct = npart * m * k <= 65536
-        for _ in range(n_iter):
-            bc = spark.sparkContext.broadcast(C)
-
-            def partials(batches):
-                books = bc.value
-                t_sums = np.zeros((m, k, sub))
-                t_counts = np.zeros((m, k), dtype=np.int64)
-                seen = np.zeros((m, k), dtype=bool)
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.vstack(pdf["_v"].to_numpy()).astype("float64")
-                    for j, cents in enumerate(books):
-                        Xj = X[:, j * sub:(j + 1) * sub]
-                        d2 = ((Xj ** 2).sum(1)[:, None]
-                              - 2 * Xj @ cents.T + (cents ** 2).sum(1))
-                        a = d2.argmin(axis=1)
-                        for c in np.unique(a):
-                            msk = a == c
-                            t_sums[j, c] += Xj[msk].sum(0)
-                            t_counts[j, c] += int(msk.sum())
-                            seen[j, c] = True
-                out = [{"j": int(j), "c": int(c),
-                        "s": t_sums[j, c].tolist(),
-                        "n": int(t_counts[j, c])}
-                       for j in range(m) for c in range(k)
-                       if seen[j, c]]
-                if out:
-                    yield pd.DataFrame(out)
-
-            mp = emb.mapInPandas(
-                partials, "j int, c int, s array<double>, n long")
-            sums = np.zeros((m, k, sub))
-            counts = np.zeros((m, k))
-            if direct:
-                for row in mp.collect():
-                    sums[row.j, row.c] += np.asarray(row.s,
-                                                     dtype="float64")
-                    counts[row.j, row.c] += row.n
-            else:
-                agg = (mp.select("j", "c", "n",
-                                 F.posexplode("s").alias("p", "x"))
-                       .groupBy("j", "c", "p")
-                       .agg(F.sum("x").alias("sx"),
-                            F.sum(F.when(F.col("p") == 0, F.col("n"))
-                                  .otherwise(0)).alias("np"))
-                       .collect())
-                for row in agg:
-                    sums[row.j, row.c, row.p] = row.sx
-                    if row.p == 0:
-                        counts[row.j, row.c] = row.np
-            for j in range(m):
-                newC = C[j].copy()   # emptied cluster keeps centroid
-                nz = counts[j] > 0
-                newC[nz] = sums[j][nz] / counts[j][nz, None]
-                C[j] = newC
-            bc.destroy()
-        return [[[round(float(x), 9) for x in c] for c in C[j]]
-                for j in range(m)]
-    finally:
-        if not pre_persisted:
-            emb.unpersist()
+    books, _ = _lloyd_fit(corpus, ks, m, n_iter, id_col, vec_col, False,
+                          init_vecs, "pq_fit")
+    return _round9(books)
 
 
 def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]],
@@ -1090,10 +977,8 @@ def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]],
             X = np.vstack(pdf["_v"].to_numpy()).astype("float64")
             codes = np.empty((len(X), m), dtype="int32")
             for j, cents in enumerate(books):
-                Xj = X[:, j * sub:(j + 1) * sub]
-                d2 = ((Xj ** 2).sum(1)[:, None] - 2 * Xj @ cents.T
-                      + (cents ** 2).sum(1))
-                codes[:, j] = d2.argmin(axis=1)
+                codes[:, j] = _sq_dists(X[:, j * sub:(j + 1) * sub],
+                                        cents).argmin(axis=1)
             out = {id_col: pdf["_id"], "codes": list(codes)}
             for c in carry_cols:
                 out[c] = pdf[c]
@@ -1244,8 +1129,8 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     pruning); the per-(query, probed cell) distance tables are
     expressions over codebook literals computed on n_queries x nprobe
     rows; scoring is the fixed-order lookup fold. Training = one
-    coarse Lloyd's + m residual sub-Lloyd's, all the distributed
-    kmeans_fit loop.
+    coarse Lloyd's + m residual sub-Lloyd's, the one Lloyd loop of
+    ``kmeans_fit`` and ``pq_fit``.
 
     Cross-engine contract: the coarse codebook and the residuals are
     rounded to 9dp (so the residual sub-quantizers train on identical
@@ -1274,10 +1159,10 @@ def ann_ivfpq_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 def _residual_init_vecs(init_vecs: list[list[float]],
                         coarse: list) -> list[list[float]]:
     """Driver-side twin of ``_ivfpq_residuals`` for the (tiny) init
-    rows: assign each vector to its nearest coarse centroid with the
-    SAME expanded-form float64 arithmetic as the ``kmeans_assign``
-    kernel, then 9dp-round the residual with ``_spark_round_py`` (the
-    bit-exact HALF_UP twin of Spark's round). Lets ``ivfpq_fit_encode``
+    rows: assign each vector to its nearest coarse centroid with
+    ``_sq_dists``, as the ``kmeans_assign`` kernel does, then 9dp-round
+    the residual with ``_spark_round_py`` (the bit-exact HALF_UP twin
+    of Spark's round). Lets ``ivfpq_fit_encode``
     derive the PQ sub-fit's init rows from the ONE shared init collect
     instead of a second takeOrdered job over the full residual frame
     (r11 — one init barrier in the IVFADC build, not two); equality
@@ -1287,8 +1172,7 @@ def _residual_init_vecs(init_vecs: list[list[float]],
 
     X = np.asarray(init_vecs, dtype="float64")
     C = np.asarray(coarse, dtype="float64")
-    d2 = (X ** 2).sum(1)[:, None] - 2 * X @ C.T + (C ** 2).sum(1)
-    cells = d2.argmin(axis=1)
+    cells = _sq_dists(X, C).argmin(axis=1)
     return [[_spark_round_py(float(a) - float(b), 9)
              for a, b in zip(vec, C[cell])]
             for vec, cell in zip(X, cells)]
@@ -1296,7 +1180,6 @@ def _residual_init_vecs(init_vecs: list[list[float]],
 
 def ivfpq_fit_encode(corpus: DataFrame, n_cells: int = 8, m: int = 4,
                      ks: int = 8, n_iter: int = 3,
-                     local_rows_budget: int = LOCAL_FIT_ROWS_BUDGET,
                      ) -> tuple[list, list, DataFrame]:
     """Train the IVFADC index and encode the corpus: returns
     (coarse codebook, residual PQ codebooks, codes DataFrame with
@@ -1304,74 +1187,60 @@ def ivfpq_fit_encode(corpus: DataFrame, n_cells: int = 8, m: int = 4,
     lands partitioned by cell (``land_ivfpq_index``).
 
     Job chain (r11 — guide §1.2, fewer sequential barriers): under
-    ``local_rows_budget`` the vectors collect ONCE and the whole
-    train — coarse Lloyd iterations, per-row residuals (the exact
-    kmeans_assign arithmetic + HALF_UP 9dp round twin), PQ
-    iterations — runs driver-local, so the build is ONE job plus the
-    lazy encode; the residual FRAME stays a distributed persist (for
-    the query) that materializes inside the first consumer's job (the encode
-    scans the corpus — that never collects). Past the budget: one
-    md5-init collect feeds both fits (init ordering is
-    content-independent; the PQ init residuals are derived driver-side
-    via ``_residual_init_vecs``), 1 + 2 x n_iter sequential jobs."""
+    the module constant ``LOCAL_FIT_ROWS_BUDGET`` rows the vectors
+    collect ONCE and the whole train — coarse Lloyd iterations,
+    per-row residuals (the exact kmeans_assign arithmetic + HALF_UP
+    9dp round twin), PQ iterations — runs as ``_lloyd_local``, so the
+    build is ONE job plus the lazy encode; the residual FRAME stays a
+    distributed persist (for the query) that materializes inside the
+    first consumer's job (the encode scans the corpus — that never
+    collects). Past the budget: one md5-init collect feeds both
+    ``_lloyd_distributed`` fits (init ordering is content-independent;
+    the PQ init residuals are derived driver-side via
+    ``_residual_init_vecs``), 1 + 2 x n_iter sequential jobs."""
     import numpy as np
 
-    spark = corpus.sparkSession
-    emb = corpus.select(F.col("vec_id").alias("_id"),
-                        F.col("embedding").cast("array<double>")
-                        .alias("_v"))
-    pdf = _collect_vectors_local(emb, local_rows_budget)
-    local_init = (_md5_init_local(pdf, emb, max(n_cells, ks))
-                  if pdf is not None else None)
-    if local_init:
-        batch = _arrow_batch_rows(spark)
-        chunks = _vec_chunks(pdf["_v"], batch)
-        C0 = np.vstack([np.asarray(v, dtype="float64")
-                        for v in local_init[:n_cells]])
-        coarse, _ = _kmeans_iterations_local(chunks, C0, n_iter,
-                                             normalize=False)
-        coarse = [[round(x, 9) for x in c] for c in coarse]
-        # per-chunk residuals: same GEMM shapes + argmin as the
-        # kmeans_assign kernel, same 9dp HALF_UP round as the
-        # zip_with expression (vectorized twin — _spark_round_np)
+    op = "ivfpq_fit_encode"
+    emb = _vectors(corpus)
+    pdf = _collect_vectors_local(emb)
+    init = (_md5_init_local(pdf, emb, max(n_cells, ks))
+            if pdf is not None else None)
+    if init:
+        chunks = _vec_chunks(pdf["_v"], _arrow_batch_rows(emb.sparkSession))
+        coarse = _round9(_lloyd_local(
+            chunks, _init_books(init[:n_cells], 1, False, op), n_iter,
+            False)[0])[0]
+        # per-chunk residuals: the kmeans_assign argmin and the 9dp
+        # HALF_UP round of the zip_with expression (vectorized twin —
+        # _spark_round_np)
         Cc = np.asarray(coarse, dtype="float64")
-        c_sq = (Cc ** 2).sum(axis=1)
-        res_chunks = []
-        for X in chunks:
-            d2 = (X ** 2).sum(1)[:, None] - 2 * X @ Cc.T + c_sq
-            res_chunks.append(_spark_round_np(X - Cc[d2.argmin(axis=1)]))
-        books = _pq_iterations_local(
+        res_chunks = [_spark_round_np(X - Cc[_sq_dists(X, Cc).argmin(axis=1)])
+                      for X in chunks]
+        books, _ = _lloyd_local(
             res_chunks,
-            _pq_init_books(_residual_init_vecs(local_init[:ks], coarse),
-                           m),
-            n_iter)
+            _init_books(_residual_init_vecs(init[:ks], coarse), m, False, op),
+            n_iter, False)
         res = _ivfpq_residuals(corpus, coarse)
     else:
         init = _md5_init_vecs(corpus, max(n_cells, ks))
-        coarse, _ = kmeans_fit(corpus, k=n_cells, n_iter=n_iter,
-                               init_vecs=init, local_rows_budget=0)
-        coarse = [[round(x, 9) for x in c] for c in coarse]
-        # the fit's persisted residuals feed the encode too
+        emb = emb.persist()
+        try:
+            coarse = _round9(_lloyd_distributed(
+                emb, _init_books(init[:n_cells], 1, False, op), n_iter,
+                False)[0])[0]
+        finally:
+            emb.unpersist()
+        # the residual frame is persisted for the query: the PQ fit
+        # trains on it and the encode reads it
         res = _ivfpq_residuals(corpus, coarse)
-        books = pq_fit(res, m=m, ks=ks, n_iter=n_iter,
-                       init_vecs=_residual_init_vecs(init[:ks], coarse),
-                       pre_persisted=True, local_rows_budget=0)
+        books, _ = _lloyd_distributed(
+            _vectors(res),
+            _init_books(_residual_init_vecs(init[:ks], coarse), m, False, op),
+            n_iter, False)
+    books = _round9(books)
     codes = (pq_encode(res, books, carry_cols=("cluster_id",))
              .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
     return coarse, books, codes
-
-
-def _pq_init_books(init_vecs: list[list[float]], m: int) -> list:
-    """Slice full init vectors into the m per-subspace init codebooks
-    (the same shapes pq_fit builds from its init rows)."""
-    import numpy as np
-
-    dim = len(init_vecs[0])
-    if dim % m:
-        raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    sub = dim // m
-    X0 = np.vstack([np.asarray(v, dtype="float64") for v in init_vecs])
-    return [X0[:, j * sub:(j + 1) * sub].copy() for j in range(m)]
 
 
 def _ivfpq_residuals(corpus: DataFrame, coarse: list) -> DataFrame:
@@ -1546,9 +1415,8 @@ def compact_ivfpq_index(spark, path: str) -> int:
     Returns the compacted row count."""
     import os
     import shutil
-    import tempfile
 
-    from ..sources.writers import _reconcile_asides, _swap_dir
+    from ..sources.writers import _reconcile_asides, _stage_dir, _swap_dir
 
     _require_local_index_path(path, "_codebooks.json")
     _reconcile_asides(path)
@@ -1557,8 +1425,7 @@ def compact_ivfpq_index(spark, path: str) -> int:
              .agg(F.max("codes").alias("codes"))
              .select("vec_id", "codes", "cell"))
     n = codes.count()
-    parent = os.path.dirname(path) or "."
-    staging = tempfile.mkdtemp(prefix="ivfpq_index_compact_", dir=parent)
+    staging = _stage_dir(path)
     codes.write.mode("overwrite").partitionBy("cell").parquet(staging)
     # rebuild the ingest-guard manifest from the compacted codes
     # (every indexed vector has a code row — no token-less analog here)

@@ -5588,7 +5588,8 @@ _add(
 #     dedup_incremental_pairs, corpus_train_val_split, corpus_deduped,
 #     corpus_curation_stats, training_corpus_pipeline,
 #     dedup_clusters_ngram, dedup_simhash, dedup_embedding_srp);
-#     dedup_family_agreement validates on_budget_exceeded up front.
+#     dedup_family_agreement validated its budget policy up front
+#     (that parameter has since been removed).
 _WINDOW_R9 = [
     # NEW in round 9: the ingest gate's LSH route (first oracle rows)
     "dedup_incremental_pairs_lsh",

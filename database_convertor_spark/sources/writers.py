@@ -40,8 +40,11 @@ the ``__aside`` name; ``_reconcile_asides`` (run at the start of every
 writer of such a directory: both table writers, both index
 compactions and both index streams) rolls an interrupted swap
 forward or back, so a crash never loses a table, an index or a
-partition of either. Readers do not reconcile: until the next writer
-runs, the data sits under the aside name, out of readers' sight.
+partition of either. Every staging dir is ``_stage_dir``'s
+``.<target>__stage_*`` beside the target, and ``_reconcile_asides``
+deletes one a crashed writer left. Readers do not reconcile: until
+the next writer runs, the data sits under the aside name, out of
+readers' sight.
 
 Per-table partition contracts live in ``schemas.MERGE_PARTITION_SPECS``
 next to the key contracts in ``schemas.MERGE_KEYS``. With a
@@ -61,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _ASIDE_SUFFIX = "__aside"
+_STAGE_INFIX = "__stage_"
 _SPEC_FILE = "_merge_spec.json"  # leading '_' → invisible to Spark reads
 
 
@@ -153,6 +157,16 @@ def _aside_path(dst: str) -> str:
     return os.path.join(d, "." + b + _ASIDE_SUFFIX)
 
 
+def _stage_dir(target_path: str) -> str:
+    """A fresh, empty staging dir ``.<basename>__stage_<random>`` beside
+    ``target_path``: dot-prefixed so Spark never lists it, named after
+    the target so ``_reconcile_asides(target_path)`` deletes one that a
+    crash left behind."""
+    d, b = os.path.split(target_path)
+    os.makedirs(d or ".", exist_ok=True)
+    return tempfile.mkdtemp(prefix="." + b + _STAGE_INFIX, dir=d or ".")
+
+
 def _swap_dir(src: str, dst: str) -> None:
     """Atomic-as-possible directory replacement: rename the old ``dst``
     aside, rename ``src`` into place, delete the aside LAST. At every
@@ -202,11 +216,20 @@ def _reconcile_asides(target_path: str) -> None:
     a crash self-heals.
     A partition-scoped merge interrupted BETWEEN partition swaps leaves
     some partitions new and some old — never missing — and replaying
-    the same batch (merge_upsert is idempotent) converges the rest."""
+    the same batch (merge_upsert is idempotent) converges the rest.
+    The target's own ``_stage_dir`` leftovers are deleted too: the swap
+    protocol assumes one writer per target at a time, so a staging dir
+    found at a writer's start belongs to a crashed writer."""
     def _primary_for(aside: str) -> str:
         d, b = os.path.split(aside)
         return os.path.join(d, b[1:-len(_ASIDE_SUFFIX)])
 
+    parent, base = os.path.split(target_path)
+    parent = parent or "."
+    if os.path.isdir(parent):
+        for entry in os.listdir(parent):
+            if entry.startswith("." + base + _STAGE_INFIX):
+                shutil.rmtree(os.path.join(parent, entry))
     top_aside = _aside_path(target_path)
     if os.path.exists(top_aside):
         _reconcile_one_aside(top_aside, target_path)
@@ -342,9 +365,7 @@ def _partition_scoped_write(spark: SparkSession, target_path: str,
                 f"existing table at {target_path}")
 
     writer = merge(existing, updates).write.mode("overwrite")
-    parent = os.path.dirname(target_path) or "."
-    os.makedirs(parent, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="merge_stage_", dir=parent)
+    staging = _stage_dir(target_path)
     if part_col:
         writer = writer.partitionBy(part_col)
     writer.parquet(staging)

@@ -471,11 +471,14 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
     import json
     import os
     import shutil
-    import tempfile
 
     from ..operators.search import _postings
     from ..operators.similarity_search import _require_local_index_path
-    from ..sources.writers import _reconcile_asides, _swap_partitions
+    from ..sources.writers import (
+        _reconcile_asides,
+        _stage_dir,
+        _swap_partitions,
+    )
 
     _require_local_index_path(index_path, "_stats.json")
     # roll back (or forward) a quarantine swap a crash interrupted
@@ -517,9 +520,7 @@ def run_text_index_ingest_stream(spark: SparkSession, landing_dir: str,
                       .filter(F.col("bucket").isin(touched)))
             cleaned = scoped.join(
                 suspects.select("doc_id").distinct(), "doc_id", "left_anti")
-            parent = os.path.dirname(index_path) or "."
-            staging = tempfile.mkdtemp(
-                prefix="text_index_reconcile_", dir=parent)
+            staging = _stage_dir(index_path)
             (cleaned.write.mode("overwrite").partitionBy("bucket")
              .parquet(staging))
             staged = set(os.listdir(staging))

@@ -500,6 +500,8 @@ def test_compact_text_index_crash_mid_swap_recovers(spark, tmp_path,
     want = search_text_index(spark, fresh, "dup join scan").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+    # no staging dir remains
+    assert sorted(os.listdir(tmp_path)) == ["ti", "ti_fresh"]
 
 
 def test_search_text_index_clamps_idf_nonnegative(spark, tmp_path):

@@ -3,6 +3,7 @@ HOF-expression baseline (same semantics, different execution)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from database_convertor_spark.operators.similarity_search import (
@@ -683,6 +684,8 @@ def test_compact_ivfpq_index_crash_mid_swap_recovers(spark, tmp_path,
             search_ivfpq_index(spark, fresh, q, k=5, nprobe=2).collect()]
     assert got == want
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+    # no staging dir remains
+    assert sorted(os.listdir(tmp_path)) == ["ai", "ai_fresh"]
 
 
 def test_hard_negatives_rebuild_skips_corpus_count(spark, monkeypatch):
@@ -1042,51 +1045,47 @@ def test_spark_round_np_matches_py(spark):
     assert got.tolist() == want.tolist()
 
 
-def test_kmeans_local_fit_matches_distributed(spark):
+def test_kmeans_local_fit_matches_distributed(spark, monkeypatch):
     """r11: the driver-local Lloyd loop (budget path) must be
     BIT-identical to the distributed loop on the single-partition
     fixture — centroids and inertia, normalize on and off."""
-    from database_convertor_spark.operators.similarity_search import (
-        kmeans_fit,
-    )
+    from database_convertor_spark.operators import similarity_search as ss
 
     emb = read_table(spark, SF_SMALL, "embeddings")
     for normalize in (False, True):
-        c_local, i_local = kmeans_fit(emb, k=8, n_iter=5,
-                                      normalize=normalize)
-        c_dist, i_dist = kmeans_fit(emb, k=8, n_iter=5,
-                                    normalize=normalize,
-                                    local_rows_budget=0)
+        c_local, i_local = ss.kmeans_fit(emb, k=8, n_iter=5,
+                                         normalize=normalize)
+        with monkeypatch.context() as mp:
+            mp.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
+            c_dist, i_dist = ss.kmeans_fit(emb, k=8, n_iter=5,
+                                           normalize=normalize)
         assert c_local == c_dist
         assert i_local == i_dist
 
 
-def test_pq_local_fit_matches_distributed(spark):
+def test_pq_local_fit_matches_distributed(spark, monkeypatch):
     """r11: local PQ loop == distributed loop, bit for bit."""
-    from database_convertor_spark.operators.similarity_search import (
-        pq_fit,
-    )
+    from database_convertor_spark.operators import similarity_search as ss
 
     emb = read_table(spark, SF_SMALL, "embeddings")
-    assert (pq_fit(emb, m=4, ks=8, n_iter=3)
-            == pq_fit(emb, m=4, ks=8, n_iter=3, local_rows_budget=0))
+    local = ss.pq_fit(emb, m=4, ks=8, n_iter=3)
+    monkeypatch.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
+    assert local == ss.pq_fit(emb, m=4, ks=8, n_iter=3)
 
 
-def test_ivfpq_local_fit_matches_distributed(spark):
+def test_ivfpq_local_fit_matches_distributed(spark, monkeypatch):
     """r11: the fully-local IVFADC train (coarse + residuals + PQ)
     must reproduce the distributed build's codebooks and codes."""
-    from database_convertor_spark.operators.similarity_search import (
-        ivfpq_fit_encode,
-    )
+    from database_convertor_spark.operators import similarity_search as ss
 
     emb = read_table(spark, SF_SMALL, "embeddings")
-    cl, bl, codl = ivfpq_fit_encode(emb, n_cells=8, m=4, ks=8, n_iter=3)
-    cd, bd, codd = ivfpq_fit_encode(emb, n_cells=8, m=4, ks=8, n_iter=3,
-                                    local_rows_budget=0)
-    assert cl == cd
-    assert bl == bd
+    cl, bl, codl = ss.ivfpq_fit_encode(emb, n_cells=8, m=4, ks=8, n_iter=3)
     rows_l = sorted((r.vec_id, r.cell, list(r.codes))
                     for r in codl.collect())
+    monkeypatch.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
+    cd, bd, codd = ss.ivfpq_fit_encode(emb, n_cells=8, m=4, ks=8, n_iter=3)
+    assert cl == cd
+    assert bl == bd
     rows_d = sorted((r.vec_id, r.cell, list(r.codes))
                     for r in codd.collect())
     assert rows_l == rows_d
@@ -1106,9 +1105,10 @@ def test_ivfpq_past_budget_builds_residuals_once(spark, monkeypatch):
         return orig(corpus, coarse)
 
     monkeypatch.setattr(ss, "_ivfpq_residuals", counting)
+    monkeypatch.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
     emb = read_table(spark, SF_SMALL, "embeddings")
     coarse, books, codes = ss.ivfpq_fit_encode(
-        emb, n_cells=8, m=4, ks=8, n_iter=3, local_rows_budget=0)
+        emb, n_cells=8, m=4, ks=8, n_iter=3)
     got = sorted((r.vec_id, r.cell, list(r.codes)) for r in codes.collect())
     assert built == [coarse]
 
@@ -1117,3 +1117,75 @@ def test_ivfpq_past_budget_builds_residuals_once(spark, monkeypatch):
             .select("vec_id", F.col("cluster_id").alias("cell"), "codes"))
     assert got == sorted((r.vec_id, r.cell, list(r.codes))
                          for r in want.collect())
+
+
+@pytest.mark.parametrize("n_parts", [1, 4])
+def test_grouped_reduction_matches_direct(spark, monkeypatch, n_parts):
+    """Past ``_DIRECT_PARTIAL_ROWS`` per-task partial rows a distributed
+    Lloyd iteration reduces through a groupBy instead of collecting the
+    rows directly. The k-means centroids (normalize off and on) and the
+    PQ codebooks equal the direct path's exactly; the inertia, whose
+    float summation order the groupBy changes, agrees to 1e-12."""
+    from database_convertor_spark.operators import similarity_search as ss
+
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    if n_parts > 1:
+        emb = emb.repartition(n_parts, "vec_id")
+    monkeypatch.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
+    grouped_iterations = []
+    reduce_grouped = ss._grouped_partials
+
+    def counting(mp, sub):
+        grouped_iterations.append(sub)
+        return reduce_grouped(mp, sub)
+
+    monkeypatch.setattr(ss, "_grouped_partials", counting)
+
+    def fits():
+        return ([ss.kmeans_fit(emb, k=8, n_iter=5, normalize=nz)
+                 for nz in (False, True)],
+                ss.pq_fit(emb, m=4, ks=8, n_iter=3))
+
+    direct_km, direct_pq = fits()
+    assert grouped_iterations == []
+    monkeypatch.setattr(ss, "_DIRECT_PARTIAL_ROWS", 0)
+    grouped_km, grouped_pq = fits()
+    assert len(grouped_iterations) == 2 * 5 + 3
+    for (c_d, i_d), (c_g, i_g) in zip(direct_km, grouped_km):
+        assert c_g == c_d
+        assert i_g == pytest.approx(i_d, rel=1e-12)
+    assert grouped_pq == direct_pq
+
+
+def test_fit_job_counts(spark, monkeypatch):
+    """Under ``LOCAL_FIT_ROWS_BUDGET`` rows each fit is one Spark job,
+    the budget collect. Past it ``kmeans_fit`` and ``pq_fit`` run
+    1 + n_iter jobs (the init collect, then one per iteration) and
+    ``ivfpq_fit_encode`` 1 + 2 x n_iter (one init collect feeds both
+    fits)."""
+    from database_convertor_spark.operators import similarity_search as ss
+
+    emb = read_table(spark, SF_SMALL, "embeddings")
+    sc = spark.sparkContext
+    n_iter = 3
+    fits = {"kmeans": lambda: ss.kmeans_fit(emb, k=8, n_iter=n_iter),
+            "pq": lambda: ss.pq_fit(emb, m=4, ks=8, n_iter=n_iter),
+            "ivfpq": lambda: ss.ivfpq_fit_encode(emb, 8, 4, 8, n_iter)}
+
+    def jobs(regime):
+        counts = {}
+        for name, fit in fits.items():
+            group = f"test-fit-jobs-{name}-{regime}"
+            sc.setJobGroup(group, f"{name} fit, {regime}")
+            try:
+                fit()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            counts[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return counts
+
+    assert jobs("local") == {"kmeans": 1, "pq": 1, "ivfpq": 1}
+    monkeypatch.setattr(ss, "LOCAL_FIT_ROWS_BUDGET", 0)
+    assert jobs("distributed") == {"kmeans": 1 + n_iter, "pq": 1 + n_iter,
+                                   "ivfpq": 1 + 2 * n_iter}

@@ -548,6 +548,8 @@ def test_text_index_quarantine_crash_mid_swap_recovers(spark, tmp_path,
     assert got == want
     assert not any(e.startswith(".bucket=") and e.endswith("__aside")
                    for e in os.listdir(path))
+    # no staging dir remains
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "landing", "tindex"]
 
 
 def test_ann_index_manifest_guard_and_compaction(spark, tmp_path):

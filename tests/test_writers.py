@@ -306,6 +306,7 @@ def test_merge_upsert_crash_mid_swap_recovers(spark, tmp_path, monkeypatch,
     assert rows == {("a", "p1"): 10, ("b", "p1"): 2, ("c", "p2"): 3}
     assert not any(e.endswith("__aside") for e in os.listdir(target))
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+    assert os.listdir(tmp_path) == ["t"]       # no staging dir remains
 
 
 @WRITERS
@@ -343,6 +344,7 @@ def test_merge_upsert_crash_during_full_table_swap_recovers(
                    keys=["k"])
     assert {(r.k, r.v) for r in result.collect()} == {("a", 2)}
     assert not any(e.endswith("__aside") for e in os.listdir(tmp_path))
+    assert os.listdir(tmp_path) == ["t"]       # no staging dir remains
 
 
 def test_merge_upsert_null_partition_value(spark, tmp_path):
