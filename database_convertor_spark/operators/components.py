@@ -135,10 +135,8 @@ def _local_components(e0: DataFrame, pdf=None) -> DataFrame | None:
 
     ``pdf``: the already-collected edge frame (the budget probe's
     collect doubles as this one — r11); None collects here."""
-    try:
-        import duckdb
-    except ImportError:  # pragma: no cover - env without duckdb
-        return None
+    import duckdb
+
     if e0.schema[0].dataType != e0.schema[1].dataType:
         return None
     if pdf is None:

@@ -17,12 +17,15 @@ Spark-first shape:
   (b) token-blocking join (explode distinct name tokens, equi-join on
       token, dedup pairs) — the general O(n) path at 100 TB; common
       tokens ("developments", "limited") are stopworded out before
-      blocking, which is also the skew fix.
-- scoring = pure column expressions (levenshtein is a built-in;
-  token-Jaccard is array algebra). The difflib ratio — order-sensitive,
-  NOT Levenshtein — is a pandas UDF applied only to survivors of the
-  cheap filters, mirroring the reference's ladder short-circuit.
-- ranking = row_number window per left key.
+      blocking, which is also the skew fix. Lefts with no token
+      candidate fall through to ``fuzzy_join``'s size-gated rescue.
+- scoring = pure column expressions: exact match -> 1.0, else the
+  greater of boosted token-Jaccard (array algebra) and levenshtein
+  similarity (a built-in), which stands in for the difflib rung
+  ('fuzzy_name'). The exact rescue's levenshtein rung runs natively
+  in DuckDB when the top-1 argmax is an aggregate.
+- ranking = max(struct) argmax per left key for top-1 with a numeric
+  right key (partial-aggregable), else a row_number window.
 """
 
 from __future__ import annotations
@@ -32,12 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import normalize_company_name
 from ..session import collect_within_budget, persist_for_query
-from ..functions.similarity import (
-    levenshtein_similarity,
-    sequence_ratio,
-    token_jaccard_with_subset_boost,
-    token_set,
-)
+from ..functions.similarity import levenshtein_similarity, token_set
 
 # Blocking stopwords: high-frequency name tokens that would create
 # mega-blocks (the skew hazard called out in SURVEY §7.4).
@@ -45,12 +43,17 @@ BLOCKING_STOPWORDS = ["limited", "ltd", "plc", "llp", "the", "and", "of",
                       "co", "company", "group", "holdings", "developments",
                       "properties", "construction", "uk"]
 
-THRESHOLD_EXACT = 0.95
-THRESHOLD_SUFFIX = 0.9
-THRESHOLD_TOKEN = 0.7
-THRESHOLD_FUZZY = 0.8
 MATCH_THRESHOLD = 0.7
 TOP_K = 3
+
+# fuzzy_join's rescue gates, read at each call: a dimension of at most
+# EXACT_RESCUE_LIMIT rows whose |left| x |dimension| stays within
+# MAX_RESCUE_PAIRS is rescued exactly; past either, each residual left
+# meets only the rights sharing one of its RESCUE_RARE_GRAMS rarest
+# 3-grams. EXACT_RESCUE_LIMIT = 0 forces the gram regime at any size.
+EXACT_RESCUE_LIMIT = 100_000
+MAX_RESCUE_PAIRS = 50_000_000
+RESCUE_RARE_GRAMS = 6
 
 
 def is_likely_individual(name: Column) -> Column:
@@ -66,13 +69,10 @@ def is_likely_individual(name: Column) -> Column:
     return title_prefix | (~has_suffix & n_words.between(2, 3))
 
 
-def _block_on_tokens(left: DataFrame, right: DataFrame,
-                     n_right: int | None = None,
+def _block_on_tokens(left: DataFrame, right: DataFrame, n_right: int,
                      df_frac: float = 0.05,
                      df_floor: int = 100,
-                     cap_mega_tokens: bool = True,
-                     max_token_pairs: float | None = 1_000_000
-                     ) -> DataFrame:
+                     max_token_pairs: float = 1_000_000) -> DataFrame:
     """Token-blocking candidate join: pair rows sharing any non-stopword,
     non-MEGA name token (expects precomputed _ltoks/_rtoks arrays).
     Returns the deduped (left x right) candidate pairs.
@@ -87,13 +87,13 @@ def _block_on_tokens(left: DataFrame, right: DataFrame,
     static stopword list cannot know corpus-specific megas). Such
     tokens are excluded from BLOCKING ONLY — scoring still sees the
     full arrays — and a left whose every token is capped simply has
-    zero candidates here, so it falls through to the caller's rescue
-    rung, which is EXACT under the pair budget (strictly better than
-    ranking only its mega-token pairs) and rarest-gram-blocked above
-    it. ``df_floor`` keeps small dimensions entirely uncapped, and
-    ``cap_mega_tokens=False`` disables the cap entirely — callers with
-    NO rescue rung downstream (fuzzy_join with lev_rescue=False) must
-    pass False, otherwise a left whose every token is capped would
+    zero candidates here, so it falls through to fuzzy_join's rescue
+    rung, which is EXACT within ``EXACT_RESCUE_LIMIT`` and
+    ``MAX_RESCUE_PAIRS`` (strictly better than ranking only its
+    mega-token pairs) and blocked on ``RESCUE_RARE_GRAMS`` rarest
+    grams past them. ``df_floor`` keeps small dimensions entirely
+    uncapped. The cap is safe only because fuzzy_join always has that
+    rescue rung: without it, a left whose every token is capped would
     silently lose all candidates instead of falling through.
 
     Per-token PAIR budget (the r7 sf10 probe finding): the df cap is
@@ -109,8 +109,7 @@ def _block_on_tokens(left: DataFrame, right: DataFrame,
     token — its lefts either pair through their rarer tokens or fall
     through to the rescue rung. Total candidate mass is then bounded
     by n_tokens x budget — linear in vocabulary, never quadratic in
-    rows. ``None`` disables (same contract as the other pair-budget
-    gates).
+    rows.
 
     Plan shape (also learned at the sf1 probe): Catalyst pushes the
     caller's ladder filter below the dedup into the join condition.
@@ -143,25 +142,20 @@ def _block_on_tokens(left: DataFrame, right: DataFrame,
         "_tok", F.explode_outer(F.array_except(F.col("_ltoks"), sw)))
     rt = right.withColumn(
         "_tok", F.explode_outer(F.array_except(F.col("_rtoks"), sw)))
-    if cap_mega_tokens:
-        if n_right is None:
-            n_right = right.count()
-        cap = max(int(n_right * df_frac), df_floor)
-        # dimension-side token DF table: <= |right| x avg_tokens rows,
-        # broadcast-joined as a semi-filter on BOTH exploded sides (a
-        # capped token can be dropped from the left too — it can never
-        # produce a candidate)
-        tok_ok = (rt.groupBy("_tok").agg(F.count(F.lit(1)).alias("_tdf"))
-                  .filter(F.col("_tdf") <= cap))
-        if max_token_pairs is not None:
-            ldf = lt.groupBy("_tok").agg(F.count(F.lit(1)).alias("_ldf"))
-            tok_ok = (tok_ok.join(ldf, "_tok", "left")
-                      .filter(F.coalesce(F.col("_ldf"), F.lit(0))
-                              .cast("double") * F.col("_tdf")
-                              <= max_token_pairs))
-        tok_ok = tok_ok.select("_tok")
-        lt = lt.join(F.broadcast(tok_ok), "_tok")
-        rt = rt.join(F.broadcast(tok_ok), "_tok")
+    cap = max(int(n_right * df_frac), df_floor)
+    # dimension-side token DF table: <= |right| x avg_tokens rows,
+    # broadcast-joined as a semi-filter on BOTH exploded sides (a
+    # capped token can be dropped from the left too — it can never
+    # produce a candidate)
+    ldf = lt.groupBy("_tok").agg(F.count(F.lit(1)).alias("_ldf"))
+    tok_ok = (rt.groupBy("_tok").agg(F.count(F.lit(1)).alias("_tdf"))
+              .filter(F.col("_tdf") <= cap)
+              .join(ldf, "_tok", "left")
+              .filter(F.coalesce(F.col("_ldf"), F.lit(0)).cast("double")
+                      * F.col("_tdf") <= max_token_pairs)
+              .select("_tok"))
+    lt = lt.join(F.broadcast(tok_ok), "_tok")
+    rt = rt.join(F.broadcast(tok_ok), "_tok")
     if few_splits:
         lt = lt.repartition(par)
     return lt.join(rt, "_tok").drop("_tok").dropDuplicates()
@@ -178,12 +172,11 @@ def _qgrams(colname: str, q: int = 3) -> Column:
 
 
 def _block_on_qgrams(left: DataFrame, right: DataFrame,
-                     left_key: str, right_key: str,
+                     left_key: str, right_key: str, n_right: int,
                      q: int = 3, rare_k: int = 6,
                      df_frac: float = 0.2, df_floor: int = 20,
                      dedup_pairs: bool = True,
                      broadcast_limit: int = 2_000_000,
-                     n_right: int | None = None,
                      max_df_cap: int | None = None,
                      right_fallback: bool = True,
                      max_rank1_pairs: int | None = None) -> DataFrame:
@@ -207,7 +200,7 @@ def _block_on_qgrams(left: DataFrame, right: DataFrame,
     exactly the round-3 driver failure, where uniform-length
     token-disjoint names sat at d = ceil(18/3) = 6 and 1,144/1,500
     lefts got a worse-than-argmax answer. ``fuzzy_join`` therefore uses
-    this rung ONLY above ``exact_rescue_limit``, where exhaustive
+    this rung ONLY above ``EXACT_RESCUE_LIMIT``, where exhaustive
     scoring is genuinely unaffordable, and documents that regime as
     recall-bounded — the same contract as the reference's search-API
     candidate pruning (applicant_processor.py:200-241).
@@ -244,15 +237,11 @@ def _block_on_qgrams(left: DataFrame, right: DataFrame,
     the documented recall trade of the budgeted regime).
     """
     # The right side of the rescue is a dimension by this operator's
-    # contract (the big side is always the left); its row count is an
-    # eager driver-side scalar, used twice: (a) the mega-gram frequency
-    # cap below, (b) the broadcast auto-degrade guard — above
+    # contract (the big side is always the left); its row count (the
+    # fuzzy_join gate's, paid once) is used twice: (a) the mega-gram
+    # frequency cap below, (b) the broadcast auto-degrade guard — above
     # ``broadcast_limit`` rows the gram table stops being broadcast and
     # the join degrades to a shuffle hash join instead of OOMing.
-    # The caller passes the count when it already paid for it (the
-    # fuzzy_join gate counts the persisted dimension once).
-    if n_right is None:
-        n_right = right.count()
     maybe_broadcast = F.broadcast if n_right <= broadcast_limit else (lambda d: d)
     # explode_OUTER for the same reason as _block_on_tokens: the
     # inferred size()>0 constraint would re-run the q-gram transform
@@ -298,7 +287,7 @@ def _block_on_qgrams(left: DataFrame, right: DataFrame,
                 f"budget (every gram is frequent on this corpus) — "
                 f"dropping the exemption; lefts whose every present "
                 f"gram is over-cap become rescue-unreachable at this "
-                f"scale (raise max_rescue_pairs to loosen)",
+                f"scale (raise MAX_RESCUE_PAIRS to loosen)",
                 stacklevel=3)
     wr = Window.partitionBy(left_key).orderBy(F.asc("_gdf"), F.asc("_g"))
     keep = (F.col("_grn") <= rare_k) & (F.col("_gdf") <= cap)
@@ -335,28 +324,15 @@ def _block_on_qgrams(left: DataFrame, right: DataFrame,
     return cand.dropDuplicates([left_key, right_key]) if dedup_pairs else cand
 
 
-def similarity_score(a_norm: Column, b_norm: Column) -> tuple[Column, Column]:
-    """The reference's scoring ladder as (confidence, method) columns.
-    difflib is intentionally NOT used here (column-only fast path);
-    ``resolve_entities`` adds it on the residual survivors."""
-    a_toks, b_toks = token_set(a_norm), token_set(b_norm)
-    jac = token_jaccard_with_subset_boost(a_toks, b_toks)
-    lev = levenshtein_similarity(a_norm, b_norm)
-    confidence = (F.when(a_norm == b_norm, F.lit(1.0))
-                  .otherwise(F.greatest(jac, lev)))
-    method = (F.when(a_norm == b_norm, F.lit("exact_name"))
-              .when(jac >= lev, F.lit("token_match"))
-              .otherwise(F.lit("fuzzy_name")))
-    return F.round(confidence, 4), method
-
-
 _NUMERIC_TYPES = {"tinyint", "smallint", "int", "bigint", "float",
                   "double", "long", "integer", "short", "byte"}
 
 
-def _ladder_score(pairs: DataFrame) -> tuple[Column, Column]:
+def _ladder_score(pairs: DataFrame, left_key: str,
+                  right_key: str) -> DataFrame:
     """Full scoring ladder over a candidate-pair frame carrying
-    _lnorm/_rnorm/_ltoks/_rtoks. One intersect per pair;
+    _lnorm/_rnorm/_ltoks/_rtoks, as (left_key, right_key, confidence,
+    match_method) rows. One intersect per pair;
     |A∪B| = |A|+|B|-|A∩B|, subset ⇔ |A∩B|=|A| (token arrays are
     distinct by construction)."""
     i = F.size(F.array_intersect(F.col("_ltoks"), F.col("_rtoks"))).cast("double")
@@ -373,21 +349,13 @@ def _ladder_score(pairs: DataFrame) -> tuple[Column, Column]:
     method = (F.when(exact, F.lit("exact_name"))
               .when(jac_boosted >= lev, F.lit("token_match"))
               .otherwise(F.lit("fuzzy_name")))
-    return confidence, method
+    return pairs.select(left_key, right_key, confidence.alias("confidence"),
+                        method.alias("match_method"))
 
 
-def _duckdb_available() -> bool:
-    try:
-        import duckdb  # noqa: F401
-        return True
-    except ImportError:  # pragma: no cover - env without duckdb
-        return False
-
-
-def _duckdb_lev_rescue(residual: DataFrame, rnorm: DataFrame,
-                       left_key: str, right_key: str,
-                       threshold: float, par: int,
-                       rights_pdf=None) -> DataFrame:
+def _duckdb_lev_rung(residual: DataFrame, rnorm: DataFrame, rights_pdf,
+                     left_key: str, right_key: str,
+                     threshold: float, par: int) -> DataFrame:
     """Exact nested-loop levenshtein rescue executed NATIVELY inside
     Arrow-batched tasks (guide §4.2: hand whole batches to vectorized
     native code): each task cross-joins its residual-left batch against
@@ -400,24 +368,22 @@ def _duckdb_lev_rescue(residual: DataFrame, rnorm: DataFrame,
     this rung a left never meets the same right twice, so the rung's
     struct-max equals its row_number()=1 row; unioning that single row
     with the other rungs before the final argmax is identical to
-    unioning every pair. The JVM expression twin computed the full
-    ladder on |residual| x |dim| rows through codegen (measured 4.8 s
-    on 14M pairs at sf0.1); the native cross join + early argmax
-    returns |residual| rows instead and never materializes the pair
-    frame outside the C++ engine (~0.5 s same data). The scoring SQL is
+    unioning every pair. The JVM expression form of this rung (the
+    tests keep it as the reference) computed the full ladder on
+    |residual| x |dim| rows through codegen (measured 4.8 s on 14M
+    pairs at sf0.1); the native cross join + early argmax returns
+    |residual| rows instead and never materializes the pair frame
+    outside the C++ engine (~0.5 s same data). The scoring SQL is
     copied verbatim from the catalog's DuckDB oracle ladder, so
     cross-engine rounding agreement is inherited, not re-derived.
 
-    Bounded by the caller's exact-rescue gate: the dimension
-    (<= exact_rescue_limit rows of (key, normalized name)) is collected
-    once and broadcast; each task holds it plus one Arrow batch."""
+    ``rights_pdf`` is the dimension's (right_key, _rnorm) rows as the
+    caller's size gate collected them (<= EXACT_RESCUE_LIMIT rows);
+    this rung never collects ``rnorm`` itself, which supplies only the
+    key type. It is broadcast once; each task holds it plus one Arrow
+    batch."""
     spark = residual.sparkSession
-    # ``rights_pdf``: the caller already collected the dimension (the
-    # size gate's limit probe doubles as this collect — r11, one job
-    # instead of count-then-toPandas); None = collect here
-    rights = (rights_pdf if rights_pdf is not None
-              else rnorm.select(right_key, "_rnorm").toPandas())
-    b_rights = spark.sparkContext.broadcast(rights)
+    b_rights = spark.sparkContext.broadcast(rights_pdf)
     lk_t = dict(residual.dtypes)[left_key]
     rk_t = dict(rnorm.dtypes)[right_key]
     sql = f'''
@@ -470,53 +436,49 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
                left_key: str, right_key: str,
                threshold: float = MATCH_THRESHOLD,
                top_k: int = TOP_K,
-               broadcast_right: bool = False,
-               lev_rescue: bool = True,
-               rescue_rare_grams: int = 6,
-               exact_rescue_limit: int = 100_000,
-               max_rescue_pairs: int = 50_000_000,
-               use_difflib: bool = False) -> DataFrame:
+               broadcast_right: bool = False) -> DataFrame:
     """General fuzzy similarity join with blocking + ladder scoring +
     per-left-key top-k (SURVEY J5 -> W4).
 
-    Output: (left_key, right_key, match_method, confidence, match_rank).
+    Output: (left_key, right_key, confidence, match_method, match_rank).
 
     Candidate semantics (the scale contract):
     - default path: candidates = token-sharing pairs (the O(n)
-      equi-join on exploded non-stopword tokens), PLUS — when
-      ``lev_rescue`` — a rescue rung for left rows with NO
-      token-sharing candidate at all. The rescue is SIZE-GATED on the
-      right side's row count:
-        * right <= ``exact_rescue_limit`` (a genuine dimension) AND
-          |left| x |right| <= ``max_rescue_pairs``: every residual
-          left is scored against the WHOLE broadcast right with the
-          full ladder — exact by construction, cost bounded by
-          |residual| x |dim| through a broadcast join whose probe
-          side is spread across the cluster. A ~100k-row dimension at
-          18-char names is a few MB broadcast; the levenshtein per
-          pair is whole-stage-codegen JVM work. The PAIR budget is the
+      equi-join on exploded non-stopword tokens), PLUS a rescue rung
+      for left rows with NO token-sharing candidate at all. The rescue
+      is SIZE-GATED on the right side's row count, by the module
+      constants ``EXACT_RESCUE_LIMIT``, ``MAX_RESCUE_PAIRS`` and
+      ``RESCUE_RARE_GRAMS`` (read at each call):
+        * right <= ``EXACT_RESCUE_LIMIT`` (a genuine dimension) AND
+          |left| x |right| <= ``MAX_RESCUE_PAIRS``: every residual
+          left is scored against the WHOLE broadcast right — exact by
+          construction, cost bounded by |residual| x |dim|, with the
+          probe side spread across the cluster. The PAIR budget is the
           second gate (added after the first >sf0.1 run measured it):
           dimension row count alone does not bound the nested loop —
           150k residual lefts x a 10k dim is 1.5B levenshtein pairs,
           quadratic in the scale factor. |left| is the worst-case
           residual count (one cheap pruned-scan count; no extra
           execution of the blocking join), so the budget is a hard
-          ceiling on rescue compute — raise it on a big cluster, where
-          50M pairs is a blink, or when blocking is known to leave few
-          residuals.
+          ceiling on rescue compute. Which exact rung runs follows
+          from what the gate observed: when its probe returned the
+          dimension (top-1 with a numeric right key, whose argmax is
+          the max-struct aggregate), the levenshtein rung runs natively
+          in DuckDB (``_duckdb_lev_rung``) and only token-sharing
+          residual pairs pay the full ladder; in every other case
+          (top_k > 1, string keys, a probe whose collect raised) each
+          residual pair is scored with the full ladder through a
+          broadcast cross join.
         * otherwise (right side too big, or the worst-case pair count
           beyond budget): residual lefts are paired
           via a rarest-q-gram equi-join (each left meets only rights
-          sharing one of its ``rescue_rare_grams`` rarest 3-grams)
+          sharing one of its ``RESCUE_RARE_GRAMS`` rarest 3-grams)
           and scored by edit distance. This regime is RECALL-BOUNDED
           (see ``_block_on_qgrams``): an argmax pair whose only
           shared grams are ubiquitous can be missed. At that scale an
           exact argmax would be a |left| x |right| nested loop — the
           same trade the reference's search-API pruning makes
           (applicant_processor.py:200-241).
-      ``exact_rescue_limit=0`` forces the gram-blocked regime at any
-      size (plan-shape testing); a very large value forces exact
-      semantics for callers who know their right side fits.
     - ``broadcast_right=True``: the exhaustive quadratic ladder over
       all pairs, blocked lefts included. Keep for genuinely tiny
       right sides only — this is NOT the 100-TB path.
@@ -537,7 +499,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     BELOW the join (once per input row, not once per candidate pair);
     the per-pair expression is one array_intersect + size algebra + one
     levenshtein. The right side is persisted for the query
-    before the gate's count so the count and the join read ONE scan of
+    before the gate's probe so the probe and the join read ONE scan of
     the dimension, not two.
     """
     lnorm = (left.select(F.col(left_key),
@@ -549,249 +511,162 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
     par = lnorm.sparkSession.sparkContext.defaultParallelism
     right_key_numeric = dict(rnorm.dtypes).get(right_key) in _NUMERIC_TYPES
     agg_top1 = top_k == 1 and right_key_numeric
-    # the native DuckDB lev rung runs in the exact-rescue regime; the
-    # size gate's probe collects the dimension for it only when it will
-    # run — one predicate for both, so the probe and the rung agree
-    native_rung = agg_top1 and not use_difflib and _duckdb_available()
     if broadcast_right:
         # the probe side usually arrives as a handful of file-splits;
         # spread it across the cluster so the nested-loop join
         # parallelizes (1 task x 15M pairs -> 32 tasks x 500k pairs)
-        pairs = lnorm.repartition(par).crossJoin(F.broadcast(rnorm))
-        confidence, method = _ladder_score(pairs)
-        scored = pairs.select(left_key, right_key,
-                              confidence.alias("confidence"),
-                              method.alias("match_method"),
-                              "_lnorm", "_rnorm")
+        scored = _ladder_score(
+            lnorm.repartition(par).crossJoin(F.broadcast(rnorm)),
+            left_key, right_key)
     else:
-        if lev_rescue:
-            # Size gate (the round-4 fix for the r3 driver regression):
-            # persist the normalized dimension BEFORE counting so the
-            # gate's count, the token join, and the rescue join all
-            # read ONE materialization of the right side (the verdict's
-            # double-scan note); the next query releases it, bounding
-            # footprint across catalog sweeps.
-            rnorm = persist_for_query(rnorm)
-            # The size gate's count doubles as the rescue dimension's
-            # collect when the native rung will run (r11, guide §1.2 —
-            # count-then-toPandas was two sequential jobs over the
-            # same persisted dimension): the budget probe either
-            # returns the WHOLE dimension (len IS the exact count,
-            # and the rows feed _duckdb_lev_rescue directly) or the
-            # gate falls back to the count. The probe also
-            # materializes the persist, exactly as the count does.
-            rights_pdf = None
-            if native_rung and exact_rescue_limit:
-                rights_pdf = collect_within_budget(
-                    rnorm.select(right_key, "_rnorm"), exact_rescue_limit)
-            n_right = (len(rights_pdf) if rights_pdf is not None
-                       else rnorm.count())
-            # worst-case residual count for the pair budget: a count
-            # over the bare left (column-pruned scan — the normalize/
-            # tokenize projections are dropped by the optimizer), so
-            # the gate never executes the blocking join early
-            n_left = left.count()
-        # the mega-token cap is only safe when a rescue rung exists to
-        # catch capped-out lefts; without lev_rescue the token join is
-        # the ONLY candidate source, so it must stay uncapped
-        pairs = _block_on_tokens(
-            lnorm, rnorm, n_right=n_right if lev_rescue else None,
-            cap_mega_tokens=lev_rescue)
-        if lev_rescue:
-            # the candidate set is consumed twice (the scored rung AND
-            # the residual anti-join's build side); it is pair-budget
-            # capped in this regime and its dropDuplicates already
-            # shuffles the full candidate set, so a disk-backed persist
-            # adds no asymptotic cost while halving the blocking work
-            pairs = persist_for_query(pairs)
-        confidence, method = _ladder_score(pairs)
-        scored = pairs.select(left_key, right_key,
-                              confidence.alias("confidence"),
-                              method.alias("match_method"),
-                              "_lnorm", "_rnorm")
-        if lev_rescue:
-            # rescue rung: only lefts with ZERO token candidates enter.
-            blocked_lefts = pairs.select(left_key).distinct()
-            residual = lnorm.join(blocked_lefts, left_key, "left_anti")
-            # The residual subtree embeds the whole blocking join (the
-            # anti-join's build side); every rescue rung consuming it
-            # re-executes that chain from the scan (measured: 3 token
-            # blocking passes per fuzzy_match_customers run). Persist
-            # once for the query, <= |left| rows of (key, name,
-            # tokens), same discipline as the dimension persist above.
-            residual = persist_for_query(residual)
-            if (exact_rescue_limit and n_right <= exact_rescue_limit
-                    and n_left * n_right <= max_rescue_pairs):
-                # exact regime: every residual left against the whole
-                # broadcast dimension. The probe side usually arrives
-                # as a handful of file-splits — spread it so the
-                # per-pair levenshtein parallelizes across the
-                # cluster. This nested loop is |residual| x |dim|
-                # BOUNDED BY THE GATE, the one place plan aesthetics
-                # yield to exactness: rarest-gram blocking provably
-                # drops argmax pairs whose only shared grams are
-                # ubiquitous (round 3: 1,144/1,500 wrong rows at
-                # sf0.01).
-                if native_rung:
-                    # native split-rung evaluation (guide §4.2): the
-                    # lev rung runs as a DuckDB cross join + per-left
-                    # argmax inside Arrow-batched tasks
-                    # (_duckdb_lev_rescue — exactness argument there);
-                    # the jaccard-correction rung is unchanged. All
-                    # legs shed _lnorm/_rnorm — the agg path never
-                    # reads them, and dropping them here keeps the
-                    # union legs aligned with the rung's
-                    # pre-aggregated 4-column rows.
-                    lev_rung = _duckdb_lev_rescue(
-                        residual, rnorm, left_key, right_key,
-                        threshold, par, rights_pdf=rights_pdf)
-                    ltok = residual.select(
-                        left_key, "_lnorm", "_ltoks",
-                        F.explode_outer("_ltoks").alias("_tok"))
-                    rtok = rnorm.select(
-                        right_key, "_rnorm", "_rtoks",
-                        F.explode_outer("_rtoks").alias("_tok"))
-                    corr = ltok.join(F.broadcast(rtok), "_tok").drop("_tok")
-                    c_conf, c_method = _ladder_score(corr)
-                    corr_rung = corr.select(
-                        left_key, right_key, c_conf.alias("confidence"),
-                        c_method.alias("match_method"))
-                    rescue_scored = lev_rung.unionByName(corr_rung)
-                    scored = scored.select(left_key, right_key,
-                                           "confidence", "match_method")
-                elif agg_top1:
-                    # split-rung evaluation, exact by algebra: a
-                    # residual pair sharing NO token (stopwords
-                    # included) has jaccard 0 and subset false, so its
-                    # full ladder collapses to levenshtein — the
-                    # nested loop therefore carries only (key, name)
-                    # rows and computes lev alone, while the jaccard
-                    # rung rides a separate equi-join on exploded FULL
-                    # tokens (tiny: only token-sharing pairs) scored
-                    # with the complete ladder. The downstream
-                    # max-struct argmax unions both rungs; for a pair
-                    # present in both, the correction row's confidence
-                    # is >= the lev row's (greatest includes lev), and
-                    # on an exact tie the method string 'token_match'
-                    # > 'fuzzy_name' — the oracle's jac >= lev rule.
-                    rpairs = (residual.select(left_key, "_lnorm")
-                              .repartition(par)
-                              .crossJoin(F.broadcast(
-                                  rnorm.select(right_key, "_rnorm"))))
-                    lev = levenshtein_similarity(F.col("_lnorm"),
-                                                 F.col("_rnorm"))
-                    r_exact = F.col("_lnorm") == F.col("_rnorm")
-                    r_conf = F.round(
-                        F.when(r_exact, F.lit(1.0)).otherwise(lev), 4)
-                    r_method = F.when(r_exact,
-                                      F.lit("exact_name")).otherwise(
-                        F.lit("fuzzy_name"))
-                    lev_rung = rpairs.select(
-                        left_key, right_key, r_conf.alias("confidence"),
-                        r_method.alias("match_method"),
-                        "_lnorm", "_rnorm")
-                    # outer explodes: the inferred size(_ltoks) > 0
-                    # constraint would re-tokenize at the scan; NULL
-                    # _tok rows die at the inner equi-join
-                    ltok = residual.select(
-                        left_key, "_lnorm", "_ltoks",
-                        F.explode_outer("_ltoks").alias("_tok"))
-                    rtok = rnorm.select(
-                        right_key, "_rnorm", "_rtoks",
-                        F.explode_outer("_rtoks").alias("_tok"))
-                    corr = ltok.join(F.broadcast(rtok), "_tok").drop("_tok")
-                    c_conf, c_method = _ladder_score(corr)
-                    corr_rung = corr.select(
-                        left_key, right_key, c_conf.alias("confidence"),
-                        c_method.alias("match_method"),
-                        "_lnorm", "_rnorm")
-                    rescue_scored = lev_rung.unionByName(corr_rung)
-                else:
-                    # window path (top_k > 1 / string keys): one
-                    # full-ladder pass so each pair appears exactly
-                    # once for row_number
-                    rpairs = (residual.repartition(par)
-                              .crossJoin(F.broadcast(rnorm)))
-                    r_conf, r_method = _ladder_score(rpairs)
-                    rescue_scored = rpairs.select(
-                        left_key, right_key, r_conf.alias("confidence"),
-                        r_method.alias("match_method"),
-                        "_lnorm", "_rnorm")
+        # Size gate (the round-4 fix for the r3 driver regression):
+        # persist the normalized dimension BEFORE probing so the gate,
+        # the token join, and the rescue join all read ONE
+        # materialization of the right side (the verdict's double-scan
+        # note); the next query releases it, bounding footprint across
+        # catalog sweeps.
+        rnorm = persist_for_query(rnorm)
+        # Under the max-struct argmax the gate's probe doubles as the
+        # native rung's collect (r11, guide §1.2 — count-then-toPandas
+        # was two sequential jobs over the same persisted dimension):
+        # it returns the WHOLE dimension (len IS the exact count) or
+        # None (over the limit, or the collect raised), and then the
+        # gate counts. The probe also materializes the persist, exactly
+        # as the count does.
+        rights_pdf = None
+        if agg_top1 and EXACT_RESCUE_LIMIT:
+            rights_pdf = collect_within_budget(
+                rnorm.select(right_key, "_rnorm"), EXACT_RESCUE_LIMIT)
+        n_right = (len(rights_pdf) if rights_pdf is not None
+                   else rnorm.count())
+        # worst-case residual count for the pair budget: a count
+        # over the bare left (column-pruned scan — the normalize/
+        # tokenize projections are dropped by the optimizer), so
+        # the gate never executes the blocking join early
+        n_left = left.count()
+        # the candidate set is consumed twice (the scored rung AND the
+        # residual anti-join's build side); it is pair-budget capped and
+        # its dropDuplicates already shuffles the full candidate set, so
+        # a disk-backed persist adds no asymptotic cost while halving
+        # the blocking work
+        pairs = persist_for_query(_block_on_tokens(lnorm, rnorm, n_right))
+        scored = _ladder_score(pairs, left_key, right_key)
+        # rescue rung: only lefts with ZERO token candidates enter.
+        blocked_lefts = pairs.select(left_key).distinct()
+        residual = lnorm.join(blocked_lefts, left_key, "left_anti")
+        # The residual subtree embeds the whole blocking join (the
+        # anti-join's build side); every rescue rung consuming it
+        # re-executes that chain from the scan (measured: 3 token
+        # blocking passes per fuzzy_match_customers run). Persist
+        # once for the query, <= |left| rows of (key, name,
+        # tokens), same discipline as the dimension persist above.
+        residual = persist_for_query(residual)
+        if (EXACT_RESCUE_LIMIT and n_right <= EXACT_RESCUE_LIMIT
+                and n_left * n_right <= MAX_RESCUE_PAIRS):
+            # exact regime: every residual left against the whole
+            # broadcast dimension. The probe side usually arrives
+            # as a handful of file-splits — spread it so the
+            # per-pair levenshtein parallelizes across the
+            # cluster. This nested loop is |residual| x |dim|
+            # BOUNDED BY THE GATE, the one place plan aesthetics
+            # yield to exactness: rarest-gram blocking provably
+            # drops argmax pairs whose only shared grams are
+            # ubiquitous (round 3: 1,144/1,500 wrong rows at
+            # sf0.01).
+            if rights_pdf is not None:
+                # native split-rung evaluation (guide §4.2), exact by
+                # algebra: a residual pair sharing NO token (stopwords
+                # included) has jaccard 0 and subset false, so its full
+                # ladder collapses to levenshtein — that rung runs as a
+                # DuckDB cross join + per-left argmax inside
+                # Arrow-batched tasks (_duckdb_lev_rung), while the
+                # jaccard rung rides a separate equi-join on exploded
+                # FULL tokens (tiny: only token-sharing pairs) scored
+                # with the complete ladder. The downstream max-struct
+                # argmax unions both rungs; for a pair present in both,
+                # the correction row's confidence is >= the lev row's
+                # (greatest includes lev), and on an exact tie the
+                # method string 'token_match' > 'fuzzy_name' — the
+                # oracle's jac >= lev rule. Outer explodes: the
+                # inferred size(_ltoks) > 0 constraint would
+                # re-tokenize at the scan; NULL _tok rows die at the
+                # inner equi-join.
+                lev_rung = _duckdb_lev_rung(
+                    residual, rnorm, rights_pdf, left_key, right_key,
+                    threshold, par)
+                ltok = residual.select(
+                    left_key, "_lnorm", "_ltoks",
+                    F.explode_outer("_ltoks").alias("_tok"))
+                rtok = rnorm.select(
+                    right_key, "_rnorm", "_rtoks",
+                    F.explode_outer("_rtoks").alias("_tok"))
+                corr = ltok.join(F.broadcast(rtok), "_tok").drop("_tok")
+                rescue_scored = lev_rung.unionByName(
+                    _ladder_score(corr, left_key, right_key))
             else:
-                # scale regime (right side beyond any sane broadcast):
-                # rarest-q-gram equi-join, recall-bounded by contract —
-                # never a nested loop, never |left| x |right|. The lev
-                # rung never touches token arrays, so candidate rows
-                # carry two strings, not two strings + two arrays.
-                #
-                # Budget-adaptive gram cap (the r7 sf10 finding): the
-                # rung's upper-bound mass |residual| x rare_k x cap is
-                # quadratic when the gram cap rides n_right; bound
-                # |residual| by the already-counted n_left (no extra
-                # job) and when the bound exceeds max_rescue_pairs,
-                # shrink the cap to fit and drop the unreachable-right
-                # fallback (its mass is cap-inverse). The sf10 probe
-                # measured the unbudgeted rung spilling out of memory
-                # at 1.5M x 6 x 20k; certified scales sit far under
-                # the budget and are untouched.
-                natural_cap = max(int(n_right * 0.2), 20)
-                rung_ub = n_left * rescue_rare_grams * natural_cap
-                budget_cap = None
-                if rung_ub > max_rescue_pairs:
-                    budget_cap = max(1, int(
-                        max_rescue_pairs / (n_left * rescue_rare_grams)))
-                    import warnings
-                    warnings.warn(
-                        f"fuzzy_join: gram-rescue upper bound "
-                        f"{rung_ub:,.0f} pairs exceeds max_rescue_pairs="
-                        f"{max_rescue_pairs:,}; capping blocking-gram "
-                        f"document frequency at {budget_cap} (from "
-                        f"{natural_cap}) and dropping the unreachable-"
-                        f"right fallback — recall-bounded regime, "
-                        f"raise max_rescue_pairs to loosen",
-                        stacklevel=2)
-                rescue = _block_on_qgrams(
-                    residual.select(left_key, "_lnorm"),
-                    rnorm.select(right_key, "_rnorm"),
-                    left_key, right_key, rare_k=rescue_rare_grams,
-                    dedup_pairs=not agg_top1, n_right=n_right,
-                    max_df_cap=budget_cap,
-                    right_fallback=budget_cap is None,
-                    # the r8 sf100 finding: once the budget regime is
-                    # live, rank 1's cap exemption must answer to the
-                    # same budget — on an all-grams-frequent corpus its
-                    # mass (sum of per-left min DF) is the last
-                    # unbounded term, and it lands on few gram keys
-                    # (single-task straggler + disk fill, measured)
-                    max_rank1_pairs=(max_rescue_pairs
-                                     if budget_cap is not None else None))
-                lev = levenshtein_similarity(F.col("_lnorm"),
-                                             F.col("_rnorm"))
-                r_exact = F.col("_lnorm") == F.col("_rnorm")
-                r_conf = F.round(
-                    F.when(r_exact, F.lit(1.0)).otherwise(lev), 4)
-                r_method = F.when(r_exact, F.lit("exact_name")).otherwise(
-                    F.lit("fuzzy_name"))
-                rescue_scored = rescue.select(
-                    left_key, right_key, r_conf.alias("confidence"),
-                    r_method.alias("match_method"), "_lnorm", "_rnorm")
-            scored = scored.unionByName(rescue_scored)
-    if use_difflib:
-        # difflib rescue pass on near-misses only (cheap-filter residue),
-        # mirroring the reference's 0.8-threshold fuzzy_name rung.
-        # capture the near-miss mask against the ORIGINAL confidence —
-        # re-deriving it after the update would compare against the
-        # already-rescued value and never relabel.
-        near = (F.col("confidence") < threshold) & (F.col("confidence") >= 0.4)
-        ratio = F.round(sequence_ratio(F.col("_lnorm"), F.col("_rnorm")), 4)
-        rescued = near & (ratio >= THRESHOLD_FUZZY)
-        scored = scored.select(
-            left_key, right_key,
-            F.when(rescued, ratio).otherwise(F.col("confidence"))
-             .alias("confidence"),
-            F.when(rescued, F.lit("fuzzy_name"))
-             .otherwise(F.col("match_method")).alias("match_method"),
-            "_lnorm", "_rnorm")
+                # one full-ladder pass, so each pair appears exactly
+                # once for the row_number window (and for the
+                # max-struct argmax when the probe's collect raised)
+                rescue_scored = _ladder_score(
+                    residual.repartition(par).crossJoin(F.broadcast(rnorm)),
+                    left_key, right_key)
+        else:
+            # scale regime (right side beyond any sane broadcast):
+            # rarest-q-gram equi-join, recall-bounded by contract —
+            # never a nested loop, never |left| x |right|. The lev
+            # rung never touches token arrays, so candidate rows
+            # carry two strings, not two strings + two arrays.
+            #
+            # Budget-adaptive gram cap (the r7 sf10 finding): the
+            # rung's upper-bound mass |residual| x rare_k x cap is
+            # quadratic when the gram cap rides n_right; bound
+            # |residual| by the already-counted n_left (no extra
+            # job) and when the bound exceeds MAX_RESCUE_PAIRS,
+            # shrink the cap to fit and drop the unreachable-right
+            # fallback (its mass is cap-inverse). The sf10 probe
+            # measured the unbudgeted rung spilling out of memory
+            # at 1.5M x 6 x 20k; certified scales sit far under
+            # the budget and are untouched.
+            natural_cap = max(int(n_right * 0.2), 20)
+            rung_ub = n_left * RESCUE_RARE_GRAMS * natural_cap
+            budget_cap = None
+            if rung_ub > MAX_RESCUE_PAIRS:
+                budget_cap = max(1, int(
+                    MAX_RESCUE_PAIRS / (n_left * RESCUE_RARE_GRAMS)))
+                import warnings
+                warnings.warn(
+                    f"fuzzy_join: gram-rescue upper bound "
+                    f"{rung_ub:,.0f} pairs exceeds MAX_RESCUE_PAIRS="
+                    f"{MAX_RESCUE_PAIRS:,}; capping blocking-gram "
+                    f"document frequency at {budget_cap} (from "
+                    f"{natural_cap}) and dropping the unreachable-"
+                    f"right fallback — recall-bounded regime, "
+                    f"raise MAX_RESCUE_PAIRS to loosen",
+                    stacklevel=2)
+            rescue = _block_on_qgrams(
+                residual.select(left_key, "_lnorm"),
+                rnorm.select(right_key, "_rnorm"),
+                left_key, right_key, n_right, rare_k=RESCUE_RARE_GRAMS,
+                dedup_pairs=not agg_top1,
+                max_df_cap=budget_cap,
+                right_fallback=budget_cap is None,
+                # the r8 sf100 finding: once the budget regime is
+                # live, rank 1's cap exemption must answer to the
+                # same budget — on an all-grams-frequent corpus its
+                # mass (sum of per-left min DF) is the last
+                # unbounded term, and it lands on few gram keys
+                # (single-task straggler + disk fill, measured)
+                max_rank1_pairs=(MAX_RESCUE_PAIRS
+                                 if budget_cap is not None else None))
+            lev = levenshtein_similarity(F.col("_lnorm"), F.col("_rnorm"))
+            r_exact = F.col("_lnorm") == F.col("_rnorm")
+            r_conf = F.round(F.when(r_exact, F.lit(1.0)).otherwise(lev), 4)
+            r_method = F.when(r_exact, F.lit("exact_name")).otherwise(
+                F.lit("fuzzy_name"))
+            rescue_scored = rescue.select(
+                left_key, right_key, r_conf.alias("confidence"),
+                r_method.alias("match_method"))
+        scored = scored.unionByName(rescue_scored)
     survivors = scored.filter(F.col("confidence") >= threshold)
     if agg_top1:
         # argmax per left key as an aggregate, not a window: max(struct)
@@ -818,8 +693,7 @@ def fuzzy_join(left: DataFrame, right: DataFrame,
         F.desc("confidence"), F.asc(right_key))
     return (survivors
             .withColumn("match_rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("match_rank") <= top_k)
-            .drop("_lnorm", "_rnorm"))
+            .filter(F.col("match_rank") <= top_k))
 
 
 def name_match_email_join(officers: DataFrame, emails: DataFrame,
@@ -957,13 +831,13 @@ def match_customers_to_suppliers(customer: DataFrame, supplier: DataFrame,
     size-gated rescue for unblocked lefts. The supplier table is a
     dimension at every scale factor (sf1 ≈ 10k rows << the 100k gate),
     so up to the 50M pair budget (sf0.1: 15k x 1k = 15M) the rescue
-    runs in its EXACT regime: residual x broadcast(dim) with the full
-    ladder. Beyond the budget (sf1: 150k x 10k = 1.5B pairs — measured
-    quadratic, not argued) it degrades to the documented recall-bounded
-    rarest-q-gram regime. The fully-quadratic broadcast_right path
+    runs in its EXACT regime: every residual left against the whole
+    dimension (top-1 with a numeric key: the native DuckDB levenshtein
+    rung plus the token-sharing correction rung). Beyond the budget
+    (sf1: 150k x 10k = 1.5B pairs — measured quadratic, not argued) it
+    degrades to the documented recall-bounded rarest-q-gram regime. The fully-quadratic broadcast_right path
     (which would nested-loop the blocked lefts too) stays off: at 100x
     data the token block is what keeps the big side linear."""
     return fuzzy_join(customer, supplier, "c_name", "s_name",
                       "c_custkey", "s_suppkey",
-                      threshold=threshold, top_k=top_k,
-                      broadcast_right=False, lev_rescue=True)
+                      threshold=threshold, top_k=top_k)

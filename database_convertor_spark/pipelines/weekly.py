@@ -13,8 +13,9 @@ weekly_scheduler.py:253-425) as one declarative Spark pipeline:
   5. dedup      — composite business key (D2: upper(reference) +
                   normalized name, applicant_processor.py:317-336)
   6. classify   — skip likely individuals (F6)
-  7. resolve    — fuzzy similarity join to the companies dimension with
-                  the reference thresholds (J5: >= 0.7, top 3)
+  7. resolve    — fuzzy similarity join to the broadcast companies
+                  dimension, every pair scored, with the reference
+                  thresholds (J5: >= 0.7, top 3)
   8. edges      — full refresh of the shared-officer-style graph (J3)
   9. stats      — one metrics row per run (A12) computed from the
                   DataFrames themselves, not driver-side counters
@@ -82,8 +83,7 @@ def dedup_applicants(applicants: DataFrame) -> DataFrame:
 
 def run_weekly_pipeline(discovered: DataFrame, existing_applications: DataFrame,
                         companies: DataFrame,
-                        threshold: float = 0.7, top_k: int = 3,
-                        broadcast_companies: bool = True) -> WeeklyPipelineResult:
+                        threshold: float = 0.7, top_k: int = 3) -> WeeklyPipelineResult:
     new_apps = filter_new_applications(discovered, existing_applications)
     applicants = extract_applicants(new_apps)
     valid, invalid = validate_applicants(applicants)
@@ -98,8 +98,7 @@ def run_weekly_pipeline(discovered: DataFrame, existing_applications: DataFrame,
     matches = fuzzy_join(
         candidates, companies, "name", "company_name",
         "applicant_key", "company_id",
-        threshold=threshold, top_k=top_k,
-        broadcast_right=broadcast_companies)
+        threshold=threshold, top_k=top_k, broadcast_right=True)
     # Persisted before the stats action, which fills the cache: a caller
     # materializing res.matches reads that one evaluation instead of
     # re-running normalize, cross join, ladder and argmax. The matches

@@ -5,12 +5,19 @@ company applicants match, individuals are skipped, dedup applies)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from database_convertor_spark.functions.cleaning import normalize_company_name
+from database_convertor_spark.functions.similarity import levenshtein_similarity
+from database_convertor_spark.operators import entity_resolution as er
 from database_convertor_spark.operators.entity_resolution import (
     fuzzy_join,
     is_likely_individual,
 )
+
+from .conftest import SF_MEDIUM, SF_SMALL
 
 
 def _applicants(spark):
@@ -122,30 +129,23 @@ def test_name_match_email_join_empty_names_no_false_positives(spark):
     assert got == {"john.smith@acme.com": 0.9}
 
 
-def test_fuzzy_gram_rescue_budget_engages(spark):
+def test_fuzzy_gram_rescue_budget_engages(spark, monkeypatch):
     """The r7 sf10 regime: when the gram-rescue upper bound exceeds
-    max_rescue_pairs, the blocking-gram DF cap shrinks to fit (warning
+    MAX_RESCUE_PAIRS, the blocking-gram DF cap shrinks to fit (warning
     fired), the plan stays nested-loop-free, and the rung still
     produces scored matches for token-less lefts."""
     import warnings
 
-    from pyspark.sql import functions as F
-
-    from database_convertor_spark.operators.entity_resolution import (
-        fuzzy_join,
-    )
     from database_convertor_spark.sources.readers import read_table
-
-    from .conftest import SF_SMALL
 
     customer = read_table(spark, SF_SMALL, "customer")
     supplier = read_table(spark, SF_SMALL, "supplier")
+    monkeypatch.setattr(er, "EXACT_RESCUE_LIMIT", 0)
+    monkeypatch.setattr(er, "MAX_RESCUE_PAIRS", 1_000)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         df = fuzzy_join(customer, supplier, "c_name", "s_name",
-                        "c_custkey", "s_suppkey", threshold=0.3,
-                        top_k=1, exact_rescue_limit=0,
-                        max_rescue_pairs=1_000)
+                        "c_custkey", "s_suppkey", threshold=0.3, top_k=1)
         plan = df._jdf.queryExecution().executedPlan().toString()
         rows = df.collect()
     msgs = " ".join(str(x.message) for x in w)
@@ -155,7 +155,7 @@ def test_fuzzy_gram_rescue_budget_engages(spark):
     assert rows                                  # still matches
 
 
-def test_fuzzy_rank1_exemption_answers_to_budget(spark):
+def test_fuzzy_rank1_exemption_answers_to_budget(spark, monkeypatch):
     """r8 sf100 finding: once the budget regime is live, rank 1's gram
     cap exemption is the last unbounded mass (sum of per-left min gram
     DF — on an all-grams-frequent corpus it concentrated ~15M x 10^3+
@@ -165,56 +165,92 @@ def test_fuzzy_rank1_exemption_answers_to_budget(spark):
     complete; the default budget keeps the exemption (no warning)."""
     import warnings
 
-    from database_convertor_spark.operators.entity_resolution import (
-        fuzzy_join,
-    )
     from database_convertor_spark.sources.readers import read_table
-
-    from .conftest import SF_SMALL
 
     customer = read_table(spark, SF_SMALL, "customer")
     supplier = read_table(spark, SF_SMALL, "supplier")
+    monkeypatch.setattr(er, "EXACT_RESCUE_LIMIT", 0)
+    monkeypatch.setattr(er, "MAX_RESCUE_PAIRS", 10)  # below even rank-1 mass
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         df = fuzzy_join(customer, supplier, "c_name", "s_name",
-                        "c_custkey", "s_suppkey", threshold=0.3,
-                        top_k=1, exact_rescue_limit=0,
-                        max_rescue_pairs=10)   # below even rank-1 mass
+                        "c_custkey", "s_suppkey", threshold=0.3, top_k=1)
         rows = df.collect()
     msgs = " ".join(str(x.message) for x in w)
     assert "rank-1 cap-exemption mass" in msgs
     assert "rescue-unreachable" in msgs
     assert rows is not None                    # completes (maybe fewer)
 
+    monkeypatch.setattr(er, "MAX_RESCUE_PAIRS", 50_000_000)
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
         fuzzy_join(customer, supplier, "c_name", "s_name",
                    "c_custkey", "s_suppkey", threshold=0.3,
-                   top_k=1, exact_rescue_limit=0,
-                   max_rescue_pairs=50_000_000).collect()
+                   top_k=1).collect()
     assert "rank-1" not in " ".join(str(x.message) for x in w2)
 
 
-def test_duckdb_rescue_rung_matches_expression_rung(spark, monkeypatch):
-    """r10 optimization pin: the native DuckDB lev-rescue rung
-    (_duckdb_lev_rescue, pre-aggregated per-left argmax) must produce
-    byte-identical fuzzy_join output to the historical JVM
-    expression nested loop it replaced."""
-    import database_convertor_spark.operators.entity_resolution as er
-    from database_convertor_spark.sources.readers import read_table
+def _normalized(df, key: str, name: str, norm: str):
+    return df.select(key, normalize_company_name(F.col(name)).alias(norm))
 
-    from .conftest import SF_SMALL
+
+def _expression_lev_rung(residual, rnorm, left_key: str, right_key: str,
+                         threshold: float):
+    """The JVM expression form of ``_duckdb_lev_rung``: every
+    (residual, dimension) pair scored by levenshtein alone (exact match
+    -> 1.0), then the per-left argmax (confidence desc, right key asc)
+    kept when it reaches ``threshold``."""
+    pairs = (residual.select(left_key, "_lnorm")
+             .crossJoin(rnorm.select(right_key, "_rnorm")))
+    exact = F.col("_lnorm") == F.col("_rnorm")
+    lev = levenshtein_similarity(F.col("_lnorm"), F.col("_rnorm"))
+    w = Window.partitionBy(left_key).orderBy(F.desc("confidence"),
+                                             F.asc(right_key))
+    return (pairs.select(
+                left_key, right_key,
+                F.round(F.when(exact, F.lit(1.0)).otherwise(lev), 4)
+                .alias("confidence"),
+                F.when(exact, F.lit("exact_name"))
+                .otherwise(F.lit("fuzzy_name")).alias("match_method"))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1)
+                    & (F.col("confidence") >= threshold))
+            .drop("_rn"))
+
+
+def _rungs_agree(spark, left, right, left_key, right_key, threshold):
+    """Both forms of the levenshtein rescue rung over the whole left
+    side; returns the native rung's sorted rows after asserting the
+    expression rung's are identical."""
+    residual = _normalized(left, left_key, left.columns[1], "_lnorm")
+    rnorm = _normalized(right, right_key, right.columns[1], "_rnorm")
+    native = er._duckdb_lev_rung(
+        residual, rnorm, rnorm.toPandas(), left_key, right_key, threshold,
+        spark.sparkContext.defaultParallelism)
+    expression = _expression_lev_rung(residual, rnorm, left_key, right_key,
+                                      threshold)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    got = rows(native)
+    assert got == rows(expression)
+    return got
+
+
+def test_duckdb_rescue_rung_matches_expression_rung(spark):
+    """r10 optimization pin: the native DuckDB lev-rescue rung
+    (_duckdb_lev_rung, pre-aggregated per-left argmax) must produce
+    exactly the rows of the JVM expression rung it replaced plus the
+    per-left argmax."""
+    from database_convertor_spark.sources.readers import read_table
 
     customer = read_table(spark, SF_SMALL, "customer")
     supplier = read_table(spark, SF_SMALL, "supplier")
-
-    fast = er.fuzzy_join(customer, supplier, "c_name", "s_name",
-                         "c_custkey", "s_suppkey", top_k=1).collect()
-    monkeypatch.setattr(er, "_duckdb_available", lambda: False)
-    slow = er.fuzzy_join(customer, supplier, "c_name", "s_name",
-                         "c_custkey", "s_suppkey", top_k=1).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
-    assert len(fast) > 0
+    got = _rungs_agree(spark, customer.select("c_custkey", "c_name"),
+                       supplier.select("s_suppkey", "s_name"),
+                       "c_custkey", "s_suppkey", 0.5)
+    assert len(got) > 0
 
 
 def test_duckdb_lev_rung_matches_expression_rung_adversarial(spark):
@@ -224,13 +260,11 @@ def test_duckdb_lev_rung_matches_expression_rung_adversarial(spark):
     norms, and 32-char names engineered so confidence lands on exact
     .xxxx5 midpoints of the 4dp rounding (1 - k/32 is binary-exact) —
     not just on fixture names."""
-    from database_convertor_spark.operators import entity_resolution as er
-
     left = spark.createDataFrame(
         [(1, "café münchen gmbh"), (2, "smith & jönes 株式会社"),
          (3, ""), (4, None),
          (5, "aaaaaaaaaaaaaaaabbbbbbbbbbbbbbbb"), (6, "ab"),
-         (7, "ZWISCHENRAUM AG"), (8, "emoji 🚀 logistics"),
+         (7, "ZWISCHENRAUM AG"), (8, "emoji 🚀 logistics"),
          (9, "x" * 31 + "q")],
         "lid long, lname string")
     right = spark.createDataFrame(
@@ -241,18 +275,53 @@ def test_duckdb_lev_rung_matches_expression_rung_adversarial(spark):
          (109, "x" * 32), (110, "q" * 17 + "x" * 15)],
         "rid long, rname string")
 
-    def run():
-        df = er.fuzzy_join(left, right, "lname", "rname", "lid", "rid",
-                           threshold=0.1, top_k=1)
-        return sorted(map(tuple, df.collect()))
-
-    native = run()
-    orig = er._duckdb_available
-    er._duckdb_available = lambda: False
-    try:
-        expression = run()
-    finally:
-        er._duckdb_available = orig
-    assert native == expression
+    _rungs_agree(spark, left, right, "lid", "rid", 0.1)
+    joined = fuzzy_join(left, right, "lname", "rname", "lid", "rid",
+                        threshold=0.1, top_k=1).collect()
     # the midpoint-bait pair must be present and 4dp-stable: 1 - 1/32
-    assert any(r[0] == 5 and r[2] == 0.9688 for r in native)
+    assert any(r[0] == 5 and r[2] == 0.9688 for r in joined)
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_MEDIUM])
+def test_failed_probe_rescues_by_full_ladder(spark, monkeypatch, sf):
+    """A size-gate probe whose collect raised comes back as None. The
+    exact rescue must then take the full-ladder broadcast cross join —
+    not re-run the failed collect, unbounded, for the native rung — and
+    stay oracle-exact."""
+    from database_convertor_spark.plans.catalog import CATALOG
+
+    from .oracle_harness import compare, duck_connection
+
+    monkeypatch.setattr(er, "collect_within_budget", lambda df, n: None)
+    spec = CATALOG["fuzzy_match_customers"]
+    df = spec.builder(spark, sf)
+    assert "MapInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+    con = duck_connection(sf)
+    try:
+        ok, diag = compare(df, con, spec.oracle)
+    finally:
+        con.close()
+    assert ok, diag
+
+
+@pytest.mark.parametrize("sf", [SF_SMALL, SF_MEDIUM])
+def test_window_path_exact_rescue_matches_native(spark, sf):
+    """The exact rescue's full-ladder cross join (the window path a
+    string right key takes) answers like the native DuckDB rung (the
+    aggregate path a numeric key takes). Zero-padding the key keeps
+    string order equal to numeric order, so ties break alike."""
+    from database_convertor_spark.sources.readers import read_table
+
+    customer = read_table(spark, sf, "customer")
+    supplier = read_table(spark, sf, "supplier")
+    padded = supplier.withColumn("s_suppkey",
+                                 F.format_string("%09d", "s_suppkey"))
+
+    def run(right):
+        df = fuzzy_join(customer, right, "c_name", "s_name", "c_custkey",
+                        "s_suppkey", threshold=0.5, top_k=1)
+        return sorted((r.c_custkey, int(r.s_suppkey), r.confidence,
+                       r.match_method) for r in df.collect())
+
+    numeric = run(supplier)
+    assert numeric and run(padded) == numeric

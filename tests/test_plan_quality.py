@@ -58,44 +58,34 @@ def test_fuzzy_is_blocking_first(spark):
     wrong argmaxes at loose thresholds; correctness outranks plan
     aesthetics). The gate itself is exercised in
     test_fuzzy_scale_regime_has_no_nested_loop below."""
-    from database_convertor_spark.operators import entity_resolution as er
-
     plan = _plan(spark, "fuzzy_match_customers")
     # candidate generation is a hash/merge equi-join on the token key
     assert any(j in plan for j in
                ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"))
-    if er._duckdb_available():
-        # the gated exact rescue runs NATIVELY inside Arrow-batched
-        # tasks (r10: _duckdb_lev_rescue — the JVM nested loop emitted
-        # 14M pair rows through codegen; the native rung returns one
-        # argmax row per residual left), so the plan carries a
-        # MapInPandas node and ZERO JVM nested loops
-        assert "MapInPandas" in plan
-        assert plan.count("BroadcastNestedLoopJoin") == 0
-    else:  # pragma: no cover - env without duckdb
-        # the expression fallback is the pre-r10 shape: exactly ONE
-        # gated nested loop for the rescue rung (round-10 advice —
-        # this path is correct and intended where duckdb is absent)
-        assert plan.count("BroadcastNestedLoopJoin") == 1
+    # the gated exact rescue runs NATIVELY inside Arrow-batched
+    # tasks (r10: _duckdb_lev_rung — the JVM nested loop emitted
+    # 14M pair rows through codegen; the native rung returns one
+    # argmax row per residual left), so the plan carries a
+    # MapInPandas node and ZERO JVM nested loops
+    assert "MapInPandas" in plan
+    assert plan.count("BroadcastNestedLoopJoin") == 0
     assert "LeftAnti" in plan                    # residual restriction
     assert "RoundRobinPartitioning" in plan      # rescue probe spread out
     assert "CartesianProduct" not in plan
 
 
-def test_fuzzy_scale_regime_has_no_nested_loop(spark):
-    """Above the size gate (forced here with exact_rescue_limit=0) the
+def test_fuzzy_scale_regime_has_no_nested_loop(spark, monkeypatch):
+    """Above the size gate (forced here with EXACT_RESCUE_LIMIT=0) the
     rescue must degrade to the rarest-q-gram equi-join: zero nested
     loops, zero cartesians — the 100-TB plan shape."""
-    from pyspark.sql import functions as F
-
-    from database_convertor_spark.operators.entity_resolution import fuzzy_join
+    from database_convertor_spark.operators import entity_resolution as er
     from database_convertor_spark.sources.readers import read_table
 
     customer = read_table(spark, SF_SMALL, "customer")
     supplier = read_table(spark, SF_SMALL, "supplier")
-    df = fuzzy_join(customer, supplier, "c_name", "s_name",
-                    "c_custkey", "s_suppkey", threshold=0.5, top_k=1,
-                    exact_rescue_limit=0)
+    monkeypatch.setattr(er, "EXACT_RESCUE_LIMIT", 0)
+    df = er.fuzzy_join(customer, supplier, "c_name", "s_name",
+                       "c_custkey", "s_suppkey", threshold=0.5, top_k=1)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastNestedLoopJoin") == 0
     assert "CartesianProduct" not in plan

@@ -103,7 +103,7 @@ def test_kmeans_gate_parity(spark, monkeypatch):
 def test_fuzzy_exact_rescue_gate_parity(spark, monkeypatch):
     """fuzzy_join's exact-rescue regime answers the same when the
     dimension probe yields nothing (the gate falls back to a count and
-    the rung collects the dimension itself)."""
+    the rescue takes the full-ladder broadcast cross join)."""
     from database_convertor_spark.operators import entity_resolution as er
     from database_convertor_spark.sources.readers import read_table
 

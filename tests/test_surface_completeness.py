@@ -18,18 +18,11 @@ from database_convertor_spark.functions.cleaning import (
     normalize_borough_name,
     valid_linkedin_url,
 )
-from database_convertor_spark.functions.similarity import (
-    confidence_ladder,
-    token_set,
-)
+from database_convertor_spark.functions.similarity import confidence_ladder
 from database_convertor_spark.operators.dedup import (
     drop_exact_duplicates,
     hamming64,
     simhash64,
-)
-from database_convertor_spark.operators.entity_resolution import (
-    _ladder_score,
-    similarity_score,
 )
 from database_convertor_spark.operators.graph import (
     materialize_edges,
@@ -165,25 +158,6 @@ def test_materialize_edges_round_trip(spark, tmp_path):
     want = sorted(tuple(r)
                   for r in shared_supplier_pairs(li, 3).collect())
     assert got == want and got
-
-
-def test_similarity_score_agrees_with_internal_ladder(spark):
-    pairs = spark.createDataFrame(
-        [("acme widgets", "acme widgets"),
-         ("acme widgets", "acme widgets international"),
-         ("initech", "initrode"),
-         ("alpha beta gamma", "delta epsilon zeta")],
-        "_lnorm string, _rnorm string")
-    bound = pairs.select(
-        "_lnorm", "_rnorm",
-        token_set(F.col("_lnorm")).alias("_ltoks"),
-        token_set(F.col("_rnorm")).alias("_rtoks"))
-    pc, pm = similarity_score(F.col("_lnorm"), F.col("_rnorm"))
-    ic, im = _ladder_score(bound)
-    rows = bound.select(pc.alias("pc"), pm.alias("pm"),
-                        ic.alias("ic"), im.alias("im")).collect()
-    for r in rows:
-        assert abs(r.pc - r.ic) < 1e-9 and r.pm == r.im, r
 
 
 def test_read_json_lines(spark, tmp_path):

@@ -66,12 +66,15 @@ def main() -> None:
         "single monolithic query. The unpersisted-loop alternative "
         "planned the same work REPLAYED per iteration (159 Exchange "
         "nodes in one plan; 6,918 tokens in the inlined string).",
-        "- `fuzzy_match_customers` plans NL = 1 BY DESIGN since round 4: "
-        "the rescue rung is size-gated (entity_resolution.fuzzy_join), and "
-        "at every checkable scale the supplier side is dimension-sized, so "
-        "the EXACT broadcast rescue (|residual| x |dim|, bounded) runs "
-        "instead of the recall-bounded rarest-q-gram blocking that "
-        "returned wrong argmaxes in round 3. Above the 100k-row gate the "
+        "- `fuzzy_match_customers`: the rescue rung is size-gated "
+        "(entity_resolution.fuzzy_join), and at every checkable scale the "
+        "supplier side is dimension-sized, so the EXACT rescue "
+        "(|residual| x |dim|, bounded) runs instead of the recall-bounded "
+        "rarest-q-gram blocking that returned wrong argmaxes in round 3. "
+        "Since round 10 its levenshtein rung is a DuckDB cross join inside "
+        "Arrow-batched tasks (MapInPandas, NL = 0); it is one broadcast "
+        "nested loop (NL = 1) only when the gate's probe collect fails. "
+        "Above the 100k-row gate the "
         "plan degrades to the gram equi-join with NL = 0 "
         "(tests/test_plan_quality.py::test_fuzzy_scale_regime_has_no_nested_loop).",
         "- Round-5 update to the fuzzy gate: the exact-rescue regime is "
